@@ -115,6 +115,10 @@ def main(out_dir, reps):
 
 
 if __name__ == "__main__":
-    out = sys.argv[1] if len(sys.argv) > 1 else "target/sfprobe/sf100rg"
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
+    # An unknown flag (e.g. --help) must not become the output directory.
+    args = sys.argv[1:]
+    if len(args) > 2 or any(a.startswith("-") for a in args):
+        sys.exit(__doc__[__doc__.index("Usage:"):].rstrip())
+    out = args[0] if len(args) > 0 else "target/sfprobe/sf100rg"
+    reps = int(args[1]) if len(args) > 1 else 1000
     main(out, reps)

@@ -23,6 +23,9 @@ Bench the result with scan splits sized to probe-scale files:
 Each <table>.parquet becomes a DIRECTORY of part files (Spark reads it
 transparently); tables under 1000 rows (the fixed catalog dims) stay
 single-file.
+
+Usage: python3 scripts/make_layout_probe.py <src_dir> <out_dir> [parts]
+       (default parts: 32)
 """
 import os
 import sys
@@ -51,5 +54,8 @@ def main(src, dst, parts=32):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2],
-         int(sys.argv[3]) if len(sys.argv) > 3 else 32)
+    # An unknown flag (e.g. --help) must not become a directory.
+    args = sys.argv[1:]
+    if not 2 <= len(args) <= 3 or any(a.startswith("-") for a in args):
+        sys.exit(__doc__[__doc__.index("Usage:"):].rstrip())
+    main(args[0], args[1], int(args[2]) if len(args) > 2 else 32)

@@ -130,7 +130,10 @@ def main(out_dir, reps, tpch=False):
 
 
 if __name__ == "__main__":
+    # An unknown flag (e.g. --help) must not become the output directory.
     args = [a for a in sys.argv[1:] if a != "--tpch"]
+    if len(args) > 2 or any(a.startswith("-") for a in args):
+        sys.exit(__doc__[__doc__.index("Usage:"):].rstrip())
     out = args[0] if len(args) > 0 else "target/sfprobe/sf1"
     reps = int(args[1]) if len(args) > 1 else 10
     main(out, reps, tpch="--tpch" in sys.argv)

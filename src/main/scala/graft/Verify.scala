@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1 when any
+  * query failed (after listing them), 2 on bad arguments. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg: comma-separated query-name prefixes — dev-loop
@@ -11,6 +13,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Seq.empty[String])
       case Array(s, o, f) => (s, o, f.split(',').toSeq)
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [queryPrefix,...]")
+        sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -21,6 +26,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }
       .foreach { case (name, fn) =>
@@ -35,7 +41,8 @@ object Verify {
         // tools.HashCheck instead of replaying blind.
         Files.writeString(Paths.get(s"$outDir/$name.hash"),
           tools.Canon.sidecar(spark.read.parquet(s"$outDir/$name")))
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // Operator-internal caches (shingle sets, vector norms) are
@@ -71,5 +78,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(prologue + v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -161,6 +161,11 @@ object LookupTransform {
     a == b || upcast(a, b) || upcast(b, a)
   }
 
+  /** A byte count, so negative or malformed values are configuration errors. */
+  private def parseThreshold(v: String): Long =
+    v.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+      s"$BroadcastThresholdKey must be a non-negative byte count, got '$v'"))
+
   /** The join itself — pure DataFrame composition; Catalyst owns planning. */
   private def join(input: DataFrame, lookup: DataFrame, cfg: LookupConfig): DataFrame = {
     val spark = input.sparkSession
@@ -171,7 +176,7 @@ object LookupTransform {
       col(cfg.lookupValueField).as(ValCol))
 
     val threshold = spark.conf.getOption(BroadcastThresholdKey)
-      .map(_.toLong).getOrElse(DefaultBroadcastThreshold)
+      .map(parseThreshold).getOrElse(DefaultBroadcastThreshold)
     val estimatedBytes = projected.queryExecution.optimizedPlan.stats.sizeInBytes
     val rhs =
       if (estimatedBytes <= threshold) broadcast(projected)

@@ -189,4 +189,15 @@ class LookupTransformSpec extends SparkSpec {
       assert(out(1) == Row(2, "Jane", "Doe", null))
     } finally spark.conf.unset(LookupTransform.BroadcastThresholdKey)
   }
+
+  test("a malformed or negative broadcast threshold fails naming the key and value") {
+    Seq("256MB", "-1", "").foreach { bad =>
+      spark.conf.set(LookupTransform.BroadcastThresholdKey, bad)
+      try {
+        val ex = intercept[IllegalArgumentException](golden())
+        assert(ex.getMessage.contains(LookupTransform.BroadcastThresholdKey))
+        assert(ex.getMessage.contains(s"'$bad'"))
+      } finally spark.conf.unset(LookupTransform.BroadcastThresholdKey)
+    }
+  }
 }

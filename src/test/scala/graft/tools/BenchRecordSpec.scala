@@ -138,4 +138,15 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(!Bench.sustainedLoadSuspect(median = 100.0, quiet = -1.0))
     assert(!Bench.sustainedLoadSuspect(median = 100.0, quiet = 0.0))
   }
+
+  test("ledgerFields prices each artifact and the up-front table resolution " +
+      "outside the query total; a failed (-1) artifact stays out of its total") {
+    val json = "{" + Bench.ledgerFields(Seq("knn5" -> 3.5, "pairs" -> -1.0), 0.75) + "}"
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(node.path("artifacts").path("knn5").asDouble == 3.5)
+    assert(node.path("artifacts").path("pairs").asDouble == -1.0)
+    assert(node.path("artifacts_total").asDouble == 3.5)
+    assert(node.path("tables_resolve_s").isNumber)
+    assert(node.path("tables_resolve_s").asDouble == 0.75)
+  }
 }
