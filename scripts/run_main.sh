@@ -4,7 +4,7 @@
 # Mirrors build.sbt's forked-JVM flags (JDK17 add-opens, UTC, no UI).
 #
 #   scripts/run_main.sh graft.Bench            # env knobs as usual
-#   SPARK_DRIVER_MEM=64g scripts/run_main.sh graft.tools.KnnProbe <args>
+#   SPARK_DRIVER_MEM=64g scripts/run_main.sh graft.tools.RecallProbe <sfDir> [nQueries]
 #
 # Rebuild the jar first when sources changed: sbt -batch package
 set -euo pipefail

@@ -136,10 +136,21 @@ object Bench {
     s""""artifacts":$each,"artifacts_total":${fmt(total)},"tables_resolve_s":${fmt(tablesResolveS)}"""
   }
 
+  /** A numeric bench knob's value: `raw` parsed by `parse`. A value that
+    * does not parse, or parses below `min`, throws naming the variable. */
+  private[graft] def knob[T](name: String, raw: String, parse: String => Option[T],
+      min: T)(implicit num: Numeric[T]): T =
+    parse(raw).filter(num.gteq(_, min)).getOrElse(throw new IllegalArgumentException(
+      s"$name must be a number >= $min, got '$raw'"))
+
+  private def envKnob[T: Numeric](name: String, parse: String => Option[T],
+      min: T): Option[T] =
+    sys.env.get(name).map(knob(name, _, parse, min))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val runs = envKnob("SPARK_GRAFT_BENCH_RUNS", _.toIntOption, 1).getOrElse(3)
     // Scale-sweep knobs. WARMUP=0 skips the untimed warmup pass — at a
     // 100x probe scale every query is multi-second (JIT/codegen overhead
     // is relatively negligible) and the warmup would double a
@@ -147,8 +158,8 @@ object Bench {
     // cancels the query's job group: a straggler (e.g. an
     // output-quadratic query on a replicated corpus) is recorded as a
     // failure instead of stalling the whole sweep.
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt > 0
-    val timeoutSec = sys.env.get("SPARK_GRAFT_BENCH_TIMEOUT_SEC").map(_.toLong)
+    val warmup = envKnob("SPARK_GRAFT_BENCH_WARMUP", _.toIntOption, 0).getOrElse(1) > 0
+    val timeoutSec = envKnob("SPARK_GRAFT_BENCH_TIMEOUT_SEC", _.toLongOption, 1L)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -362,7 +373,7 @@ object Bench {
     // and JIT now hot, data caches still reset per sample) and BOTH
     // columns ship in the JSON, so sweep adjudication needs no manual
     // re-measure pass.
-    val warmRerunSec = sys.env.get("SPARK_GRAFT_BENCH_WARM_RERUN_SEC").map(_.toDouble)
+    val warmRerunSec = envKnob("SPARK_GRAFT_BENCH_WARM_RERUN_SEC", _.toDoubleOption, 0.0)
     val warm: Seq[(String, Seq[Double])] = warmRerunSec match {
       case None => Seq.empty
       case Some(thr) => results.collect {

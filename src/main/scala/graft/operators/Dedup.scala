@@ -169,6 +169,30 @@ object Dedup {
   }
 
   /**
+   * Size (length) filter of the AllPairs/PPJoin set-similarity joins: a
+   * conjunct for the inverted-index self-joins over rows aliased `x` and
+   * `y`, so a pair whose set sizes alone rule it out is dropped inside the
+   * join, before the pair aggregate and its Exchange. Jaccard bounds
+   * `least(x.sz, y.sz) / greatest(x.sz, y.sz)`; directional containment
+   * (`x` inner, `y` outer) bounds `y.sz / x.sz`.
+   *
+   * Exact, so the output rows are unchanged: `sz` is the FULL set size and
+   * the intersection counts only shingles under the df cap, so
+   * `inter <= min(sz_a, sz_b)`. Hence `J = inter / (sz_a + sz_b - inter)
+   * <= min / max` and `inter / sz_in <= sz_out / sz_in` in exact
+   * arithmetic. Correctly rounded IEEE division is monotone, so a computed
+   * score `fl(J) >= t` implies `fl(min / max) >= t`. That argument covers
+   * this division form only; `min >= t * max` rounds the product instead
+   * and is not the same predicate.
+   */
+  private def sizeFilter(threshold: Double, containment: Boolean = false): Column = {
+    val (num, den) =
+      if (containment) (col("y.sz"), col("x.sz"))
+      else (least(col("x.sz"), col("y.sz")), greatest(col("x.sz"), col("y.sz")))
+    num.cast("double") / den.cast("double") >= threshold
+  }
+
+  /**
    * Exact n-gram Jaccard near-dup pairs: all (a, b), a < b, with
    * `|shingles(a) ∩ shingles(b)| / |shingles(a) ∪ shingles(b)| >= threshold`.
    *
@@ -222,8 +246,8 @@ object Dedup {
     * is the right shape at every measured scale. */
   private def plainPairsFromIndex(inv: DataFrame,
       threshold: Double): DataFrame =
-    inv.as("x").join(inv.as("y"),
-        col("x.h") === col("y.h") && col("x.id") < col("y.id"))
+    inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
+        col("x.id") < col("y.id") && sizeFilter(threshold))
       .groupBy(col("x.id").as("id_a"), col("x.sz").as("sz_a"),
         col("y.id").as("id_b"), col("y.sz").as("sz_b"))
       .agg(count(lit(1)).as("inter"))
@@ -506,7 +530,8 @@ object Dedup {
       .filter(col("df") <= maxDocFreq).select("h")
     def index(sets: DataFrame) =
       sets.select(col("id"), col("sz"), explode(col("hs")).as("h")).join(df, "h")
-    index(newSets).as("x").join(index(oldSets).as("y"), col("x.h") === col("y.h"))
+    index(newSets).as("x").join(index(oldSets).as("y"),
+        col("x.h") === col("y.h") && sizeFilter(threshold))
       .groupBy(col("x.id").as("new_id"), col("x.sz").as("sz_a"),
         col("y.id").as("old_id"), col("y.sz").as("sz_b"))
       .agg(count(lit(1)).as("inter"))
@@ -554,9 +579,9 @@ object Dedup {
     val prefix = inv.join(dfreq, "h")
       .withColumn("__rank", row_number().over(w))
       .filter(col("__rank") <= col("sz") - ceil(lit(threshold) * col("sz")).cast("int") + 1)
-      .select("id", "h")
-    val candidates = prefix.as("x").join(prefix.as("y"),
-        col("x.h") === col("y.h") && col("x.id") < col("y.id"))
+      .select("id", "h", "sz")
+    val candidates = prefix.as("x").join(prefix.as("y"), col("x.h") === col("y.h") &&
+        col("x.id") < col("y.id") && sizeFilter(threshold))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
     // Verify against the CAPPED per-doc sets, not the full shingle sets:
@@ -768,8 +793,8 @@ object Dedup {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
     // cached for the same two-consumer reason as [[ngramJaccardPairs]]
     val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
-    inv.as("x").join(inv.as("y"),
-        col("x.h") === col("y.h") && col("x.id") =!= col("y.id"))
+    inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
+        col("x.id") =!= col("y.id") && sizeFilter(threshold, containment = true))
       .groupBy(col("x.id").as("inner_id"), col("x.sz").as("sz_in"),
         col("y.id").as("outer_id"))
       .agg(count(lit(1)).as("inter"))
@@ -1095,7 +1120,7 @@ object Dedup {
     *
     * Placement (round-10 full-inventory 10× sweep): the crossover was
     * MEASURED at the endpoints — 5 K docs: pair 2.1 s vs edge 8.2 s;
-    * 50 K docs: pair 21-24 s vs edge ~9 s (Q99Probe, quiet re-runs).
+    * 50 K docs: pair 21-24 s vs edge ~9 s (q99 probe, quiet re-runs).
     * The pair branch's edge volume is data-quadratic (Σ cluster² —
     * n²/1500 pHash pairs alone), so its cost curve crosses the edge
     * form's ~linear one between those points; 20 K sits on the safe

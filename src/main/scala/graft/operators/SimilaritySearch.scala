@@ -1336,7 +1336,7 @@ object SimilaritySearch {
     // top-k (each distinct pair appears ≤ nTables times: a candidate
     // occupies ONE bucket per table, so even a multiprobe query — whose
     // per-table probe buckets are distinct — matches it at most once
-    // per table); see the [[knnJoinLsh]] KnnProbe note: the
+    // per table); see the [[knnJoinLsh]] round-11 probe note: the
     // undeduped-candidate hash agg is otherwise the dominant stage at
     // scale.
     def scoreCut(q: DataFrame, cands: DataFrame) =
@@ -1486,8 +1486,8 @@ object SimilaritySearch {
         "allowFixedWidth=true to knowingly keep the fixed-width reference semantics.")
   }
 
-  /** Dev hook (tools.ScaleDebug): the exploded (id, table-key) rows of
-    * the q58/q264 index, for occupancy diagnostics. */
+  /** The exploded (id, table-key) rows of the q58/q264 index, for
+    * bucket-occupancy diagnostics (`SimilaritySearchSpec` reads them). */
   private[graft] def lshKeyedForDebug(df: DataFrame, nPlanes: Int,
       nTables: Int, idCol: String = "vec_id",
       vecCol: String = "embedding", dim: Int = 64): DataFrame =
@@ -1597,7 +1597,7 @@ object SimilaritySearch {
     // codegen'd, never shuffled with the pair), then dedup the
     // per-table occurrences by hash agg on narrow rows.
     //
-    // PRE-CUT before the dedup agg (round-11, from the KnnProbe stage
+    // PRE-CUT before the dedup agg (round-11, from the kNN probe's stage
     // table at 200 K vectors): the agg's input is EVERY candidate row
     // (~199 M) with nearly-unique (query_id, cand_id) keys, so map-side
     // partials reduce nothing and the global hash agg dominated the

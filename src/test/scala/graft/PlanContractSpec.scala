@@ -564,6 +564,37 @@ class PlanContractSpec extends SparkSpec {
     graft.SparkUtil.unpersistTrackedCaches()
   }
 
+  test("q14 and q86 pair joins carry the exact size filter and keep 3 Exchanges") {
+    import org.apache.spark.sql.catalyst.expressions.{Divide, GreaterThanOrEqual, Literal}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the size filter is a `>= threshold` over a division of the two
+    // sides' `sz` columns inside the shingle join's condition; dropping it
+    // leaves the output unchanged and only the candidate volume shows it
+    def sizeFiltered(q: String, threshold: Double): Boolean =
+      SparkEntry.queries(q)(spark, sf()).queryExecution.sparkPlan.collect {
+        case j: BaseJoinExec => j
+      }.exists { j =>
+        def side(d: Divide, out: org.apache.spark.sql.catalyst.expressions.AttributeSet) =
+          d.references.exists(a => a.name == "sz" && out.contains(a))
+        j.condition.exists(_.exists {
+          case GreaterThanOrEqual(d: Divide, Literal(t, _)) =>
+            t == threshold && side(d, j.left.outputSet) && side(d, j.right.outputSet)
+          case _ => false
+        })
+      }
+    assert(sizeFiltered("q14_dedup_ngram_jaccard", 0.6))
+    assert(sizeFiltered("q86_containment_pairs", 0.8))
+    // shuffle Exchanges, each once: a cached index prints under every
+    // scan of it, but runs one plan (same plan_id)
+    for (q <- Seq("q14_dedup_ngram_jaccard", "q86_containment_pairs")) {
+      val p = plan(SparkEntry.queries(q)(spark, sf()))
+      val shuffles = """(?<!Broadcast)Exchange .*\[plan_id=(\d+)\]""".r
+        .findAllMatchIn(p).map(_.group(1)).toSet
+      assert(shuffles.size == 3, s"$q:\n$p")
+    }
+    graft.SparkUtil.unpersistTrackedCaches()
+  }
+
   test("BM25 top-k: TakeOrderedAndProject cut, corpus filtered before any agg") {
     val p = plan(SparkEntry.queries("q258_bm25_topk")(spark, sf()))
     assert(p.contains("TakeOrderedAndProject"), p)
@@ -624,7 +655,7 @@ class PlanContractSpec extends SparkSpec {
 
   test("LSH kNN pre-cut contract: WindowGroupLimit BEFORE the dedup agg, " +
       "and the agg reuses the window's hash(query_id) Exchange") {
-    // The round-11 KnnProbe finding: without the k*nTables pre-cut the
+    // The round-11 kNN probe finding: without the k*nTables pre-cut the
     // (query_id, cand_id) dedup agg shuffles EVERY candidate row
     // (~199 M at the 100x probe, 71-96 s); with it, the cut runs
     // map-side (WindowGroupLimit) and the agg is co-partitioned under

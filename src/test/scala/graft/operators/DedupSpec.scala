@@ -844,6 +844,109 @@ class DedupSpec extends SparkSpec {
     graft.SparkUtil.unpersistTrackedCaches()
   }
 
+  test("size filter keeps a pair whose Jaccard is exactly the threshold") {
+    // 3 and 5 shingles, all 3 of the short doc's in the long one:
+    // J = 3/5 = 0.6 = least/greatest of the sizes, on the boundary
+    val short = 1L -> "w1 w2 w3 w4 w5"
+    val long = 2L -> "w1 w2 w3 w4 w5 w6 w7"
+    val d = docs(short, long)
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val want = Set((1L, 2L, 0.6))
+    assert(scores(Dedup.ngramJaccardPairs(d, threshold = 0.6)) == want)
+    assert(scores(Dedup.ngramJaccardPairsPrefix(d, threshold = 0.6)) == want)
+    assert(scores(Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.6)) == want)
+    assert(scores(Dedup.crossCorpusPairs(docs(short), docs(long), threshold = 0.6)) == want)
+    graft.SparkUtil.unpersistTrackedCaches()
+  }
+
+  test("size filter keeps a containment pair exactly at the threshold") {
+    // inner has 5 shingles, outer 4, all 4 of them shared:
+    // containment(inner -> outer) = 4/5 = 0.8 = sz_out / sz_in
+    val d = docs(1L -> "w1 w2 w3 w4 w5 w6 w7", 2L -> "w1 w2 w3 w4 w5 w6")
+    val out = Dedup.containmentPairs(d, threshold = 0.8).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(out == Map((1L, 2L) -> 0.8, (2L, 1L) -> 1.0))
+    graft.SparkUtil.unpersistTrackedCaches()
+  }
+
+  /** Seeded corpus with widely spread set sizes: base docs of 3-90 tokens
+    * over a 12-word vocabulary, each with a truncated copy and an edited,
+    * extended copy, so pairs sit at every size ratio. Half the base docs
+    * open with a shared 6-token header, whose shingles (df up to 60) are
+    * the ones a cap of 10 removes. */
+  private def spreadCorpus(seed: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    def words(k: Int) = Seq.fill(k)(s"v${rnd.nextInt(12)}")
+    val header = (0 until 6).map(k => s"hdr$k")
+    (0 until 40).flatMap { i =>
+      val base = (if (rnd.nextBoolean()) header else Nil) ++ words(3 + rnd.nextInt(88))
+      val cut = base.take(3 + rnd.nextInt(base.length - 2))
+      val edited = base.map(w => if (rnd.nextInt(10) == 0) s"v${rnd.nextInt(12)}" else w) ++
+        words(rnd.nextInt(40))
+      Seq(base, cut, edited).zipWithIndex.map { case (ws, j) =>
+        (3L * i + j) -> ws.mkString(" ")
+      }
+    }
+  }
+
+  /** Each side's shingle sets with the shingles over the df cap (counted
+    * over all `sides`) removed, and every doc's full set size. */
+  private def cappedSets(sides: Seq[Seq[(Long, String)]],
+      maxDocFreq: Int): (Seq[Map[Long, Set[Long]]], Map[Long, Int]) = {
+    val sets = sides.map { side =>
+      docs(side: _*).select(col("doc_id"),
+          graft.functions.TextFunctions.shingleHashes(col("text"), 3))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet)
+        .filter(_._2.nonEmpty).toMap
+    }
+    val df = sets.flatMap(_.values).flatten.groupBy(identity).map { case (h, hs) => h -> hs.size }
+    (sets.map(_.map { case (id, hs) => id -> hs.filter(df(_) <= maxDocFreq) }),
+      sets.flatMap(_.map { case (id, hs) => id -> hs.size }).toMap)
+  }
+
+  test("size filter is exact: all four pair operators equal an unfiltered " +
+      "reference on a spread-size corpus, with and without the df cap binding") {
+    for ((seed, t) <- Seq(7 -> 0.5, 19 -> 0.8); maxDocFreq <- Seq(10000, 10)) {
+      val corpus = spreadCorpus(seed)
+      val (newSide, oldSide) = corpus.partition(_._1 % 2 == 0)
+      // reference: every pair sharing a capped shingle, scored the way the
+      // operators score it, with no size filter
+      val (Seq(sets), sz) = cappedSets(Seq(corpus), maxDocFreq)
+      def inter(a: Long, b: Long) = (sets(a) & sets(b)).size
+      def jac(i: Int, a: Long, b: Long) = i.toDouble / (sz(a) + sz(b) - i).toDouble
+      val ids = sets.keys.toSeq.sorted
+      val jaccard = (for (a <- ids; b <- ids if a < b; i = inter(a, b)
+          if i > 0 && jac(i, a, b) >= t) yield (a, b, jac(i, a, b))).toSet
+      val containment = (for (a <- ids; b <- ids if a != b; i = inter(a, b)
+          if i > 0 && i.toDouble / sz(a).toDouble >= t)
+        yield (a, b, i.toDouble / sz(a).toDouble)).toSet
+      val (Seq(n, o), _) = cappedSets(Seq(newSide, oldSide), maxDocFreq)
+      val cross = (for (a <- n.keys; b <- o.keys; i = (n(a) & o(b)).size
+          if i > 0 && jac(i, a, b) >= t) yield (a, b, jac(i, a, b))).toSet
+      assert(jaccard.nonEmpty && containment.nonEmpty && cross.nonEmpty)
+      // the size filter has candidates to drop ...
+      assert(ids.exists(a => ids.exists(b => inter(a, b) > 0 &&
+        math.min(sz(a), sz(b)).toDouble / math.max(sz(a), sz(b)) < t)))
+      // ... and the binding cap shrinks some candidate's intersection
+      if (maxDocFreq == 10) {
+        val (Seq(full), _) = cappedSets(Seq(corpus), 10000)
+        assert(ids.exists(a => ids.exists(b =>
+          inter(a, b) > 0 && inter(a, b) < (full(a) & full(b)).size)))
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val d = docs(corpus: _*)
+      val ctx = s"seed $seed, t $t, cap $maxDocFreq"
+      assert(rows(Dedup.ngramJaccardPairs(d, threshold = t, maxDocFreq = maxDocFreq)) == jaccard, ctx)
+      assert(rows(Dedup.ngramJaccardPairsPrefix(d, threshold = t, maxDocFreq = maxDocFreq)) == jaccard, ctx)
+      assert(rows(Dedup.containmentPairs(d, threshold = t, maxDocFreq = maxDocFreq)) == containment, ctx)
+      assert(rows(Dedup.crossCorpusPairs(docs(newSide: _*), docs(oldSide: _*),
+        threshold = t, maxDocFreq = maxDocFreq)) == cross, ctx)
+      graft.SparkUtil.unpersistTrackedCaches()
+    }
+  }
+
   test("clusterPurity: per-cluster label distincts and mixed flags, hand graph") {
     val spark0 = spark
     import spark0.implicits._

@@ -149,4 +149,30 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(node.path("tables_resolve_s").isNumber)
     assert(node.path("tables_resolve_s").asDouble == 0.75)
   }
+
+  test("bench knobs reject malformed or out-of-range values, naming the variable") {
+    assert(Bench.knob("SPARK_GRAFT_BENCH_RUNS", "5", _.toIntOption, 1) == 5)
+    assert(Bench.knob("SPARK_GRAFT_BENCH_WARMUP", "0", _.toIntOption, 0) == 0)
+    assert(Bench.knob("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "600", _.toLongOption, 1L) == 600L)
+    assert(Bench.knob("SPARK_GRAFT_BENCH_WARM_RERUN_SEC", "2.5", _.toDoubleOption, 0.0) == 2.5)
+    val bad = Seq(
+      ("SPARK_GRAFT_BENCH_RUNS", "three", (_: String).toIntOption, 1),
+      ("SPARK_GRAFT_BENCH_RUNS", "0", (_: String).toIntOption, 1),
+      ("SPARK_GRAFT_BENCH_WARMUP", "-1", (_: String).toIntOption, 0),
+      ("SPARK_GRAFT_BENCH_WARMUP", "", (_: String).toIntOption, 0))
+    for ((name, raw, parse, min) <- bad) {
+      val e = intercept[IllegalArgumentException](Bench.knob(name, raw, parse, min))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$raw'"), e.getMessage)
+    }
+    for (raw <- Seq("10s", "-5", "9999999999999999999")) {
+      val e = intercept[IllegalArgumentException](
+        Bench.knob("SPARK_GRAFT_BENCH_TIMEOUT_SEC", raw, _.toLongOption, 1L))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_TIMEOUT_SEC") && e.getMessage.contains(raw))
+    }
+    for (raw <- Seq("-0.5", "NaN", "1,5")) {
+      val e = intercept[IllegalArgumentException](
+        Bench.knob("SPARK_GRAFT_BENCH_WARM_RERUN_SEC", raw, _.toDoubleOption, 0.0))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_WARM_RERUN_SEC") && e.getMessage.contains(raw))
+    }
+  }
 }
