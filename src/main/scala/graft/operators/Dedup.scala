@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 import graft.functions.TextFunctions._
 
@@ -192,6 +193,232 @@ object Dedup {
     num.cast("double") / den.cast("double") >= threshold
   }
 
+  /** [[sizeFilter]] over one candidate's two set sizes, `x` first: the
+    * same double division, for the [[scanCount]] kernel. */
+  private def sizeRatioOk(szX: Int, szY: Int, threshold: Double,
+      containment: Boolean): Boolean =
+    if (containment) szY.toDouble / szX.toDouble >= threshold
+    else math.min(szX, szY).toDouble / math.max(szX, szY).toDouble >= threshold
+
+  /** The pair predicate of an inverted-index join, `x` the streamed side:
+    * which id pairs it keeps and which [[sizeFilter]] applies. */
+  private sealed abstract class PairKind(val containment: Boolean) extends Serializable
+  /** Jaccard within one corpus: `x.id < y.id`. */
+  private case object SelfJaccard extends PairKind(false)
+  /** Directional containment, `x` inner and `y` outer: `x.id != y.id`. */
+  private case object Containment extends PairKind(true)
+  /** Jaccard between two corpora, `x` new and `y` old: every id pair. */
+  private case object CrossJaccard extends PairKind(false)
+
+  private[operators] case class ShingleSet(id: java.lang.Long, sz: Int, hs: Array[Long])
+  private[operators] case class PairCount(a: java.lang.Long, sz_a: Int,
+      b: java.lang.Long, sz_b: Int, inter: Long)
+
+  /**
+   * A capped inverted index as a CSR postings table of primitive arrays:
+   * `keys` holds the sorted distinct shingle hashes, and the postings of
+   * `keys(k)` are `docs(offsets(k) until offsets(k + 1))`, document
+   * ordinals in ascending id order (null ids first). Ordinal `o` is the
+   * distinct `(id, sz)` pair `(ids(o), szs(o))`, with `nullIds(o)` set for
+   * a null id.
+   */
+  private final class Postings(keys: Array[Long], offsets: Array[Int],
+      docs: Array[Int], ids: Array[Long], nullIds: Array[Boolean],
+      szs: Array[Int]) extends Serializable {
+
+    def docCount: Int = ids.length
+
+    /** ScanCount for one streamed document: count, per `y` ordinal that
+      * `kind` pairs with `x`, the postings of `x`'s shingles, then emit
+      * the counted pairs that pass the size filter. `counts` is all zero
+      * on entry and on return; `touched` is scratch of [[docCount]]. */
+    def pairs(x: ShingleSet, kind: PairKind, threshold: Double,
+        counts: Array[Int], touched: Array[Int]): Iterator[PairCount] = {
+      val xId = if (x.id == null) 0L else x.id.longValue
+      var n = 0
+      def hit(o: Int): Unit = {
+        if (counts(o) == 0) { touched(n) = o; n += 1 }
+        counts(o) += 1
+      }
+      var i = 0
+      while (i < x.hs.length) {
+        val k = java.util.Arrays.binarySearch(keys, x.hs(i))
+        if (k >= 0) {
+          val from = offsets(k)
+          var p = offsets(k + 1) - 1
+          kind match {
+            case SelfJaccard => // ids ascend within a run: stop at x.id
+              while (p >= from && ids(docs(p)) > xId) { hit(docs(p)); p -= 1 }
+            case Containment =>
+              while (p >= from) { if (ids(docs(p)) != xId) hit(docs(p)); p -= 1 }
+            case CrossJaccard =>
+              while (p >= from) { hit(docs(p)); p -= 1 }
+          }
+        }
+        i += 1
+      }
+      val out = new Array[PairCount](n)
+      var m = 0
+      i = 0
+      while (i < n) {
+        val o = touched(i)
+        if (sizeRatioOk(x.sz, szs(o), threshold, kind.containment)) {
+          out(m) = PairCount(x.id, x.sz,
+            if (nullIds(o)) null else java.lang.Long.valueOf(ids(o)), szs(o), counts(o))
+          m += 1
+        }
+        counts(o) = 0
+        i += 1
+      }
+      out.iterator.take(m)
+    }
+  }
+
+  private object Postings {
+    private def sortedDistinct(a: Array[Long]): Array[Long] = {
+      val s = a.clone()
+      java.util.Arrays.sort(s)
+      var k = 0
+      var i = 0
+      while (i < s.length) {
+        if (k == 0 || s(i) != s(k - 1)) { s(k) = s(i); k += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(s, k)
+    }
+
+    /** Builds the table from collected `(h, id: long, sz)` index rows,
+      * with primitive sorts only: rows with a null id are dropped unless
+      * `keepNullIds`. */
+    def apply(rows: Array[org.apache.spark.sql.Row], keepNullIds: Boolean): Postings = {
+      val kept = if (keepNullIds) rows else rows.filterNot(_.isNullAt(1))
+      val n = kept.length
+      val h = new Array[Long](n)
+      val id = new Array[Long](n)
+      val sz = new Array[Int](n)
+      var i = 0
+      while (i < n) {
+        val r = kept(i)
+        h(i) = r.getLong(0)
+        if (!r.isNullAt(1)) id(i) = r.getLong(1)
+        sz(i) = r.getInt(2)
+        i += 1
+      }
+      // document ordinals: distinct (id rank, sz) packed into one long,
+      // a null id ranking -1 so it sorts first
+      val distinctIds = sortedDistinct(id)
+      val docKey = new Array[Long](n)
+      i = 0
+      while (i < n) {
+        val rank = if (kept(i).isNullAt(1)) -1 else java.util.Arrays.binarySearch(distinctIds, id(i))
+        docKey(i) = (rank.toLong << 32) | (sz(i) & 0xffffffffL)
+        i += 1
+      }
+      val ordKeys = sortedDistinct(docKey)
+      val ids = new Array[Long](ordKeys.length)
+      val nullIds = new Array[Boolean](ordKeys.length)
+      val szs = new Array[Int](ordKeys.length)
+      var o = 0
+      while (o < ordKeys.length) {
+        val rank = (ordKeys(o) >> 32).toInt
+        nullIds(o) = rank < 0
+        if (rank >= 0) ids(o) = distinctIds(rank)
+        szs(o) = ordKeys(o).toInt
+        o += 1
+      }
+      // CSR by a counting sort on the hash rank, then ordinals sorted per run
+      val keys = sortedDistinct(h)
+      val hRank = new Array[Int](n)
+      val offsets = new Array[Int](keys.length + 1)
+      i = 0
+      while (i < n) {
+        hRank(i) = java.util.Arrays.binarySearch(keys, h(i))
+        offsets(hRank(i) + 1) += 1
+        i += 1
+      }
+      var k = 0
+      while (k < keys.length) { offsets(k + 1) += offsets(k); k += 1 }
+      val cursor = java.util.Arrays.copyOf(offsets, keys.length)
+      val docs = new Array[Int](n)
+      i = 0
+      while (i < n) {
+        docs(cursor(hRank(i))) = java.util.Arrays.binarySearch(ordKeys, docKey(i))
+        cursor(hRank(i)) += 1
+        i += 1
+      }
+      k = 0
+      while (k < keys.length) { java.util.Arrays.sort(docs, offsets(k), offsets(k + 1)); k += 1 }
+      new Postings(keys, offsets, docs, ids, nullIds, szs)
+    }
+  }
+
+  private val integralIds: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  /**
+   * ScanCount (Li, Lu and Lu, ICDE 2008) in place of an index join and its
+   * pair `count` aggregate: the capped index `yIndex` `(h, id, sz)` is
+   * collected to the driver, built into a [[Postings]] table and
+   * broadcast; each task streams `xSets` `(id, sz, hs)` and, per document,
+   * counts every `y` posting of its shingles in one dense array, resetting
+   * only the touched entries. It returns `(a, szA, b, szB, inter)`, one row
+   * per pair of `kind` that shares a posting and passes [[sizeFilter]]:
+   * the rows the join + aggregate would give, so the caller's score and
+   * threshold stay in Catalyst.
+   *
+   * Exact: only shingles under the df cap have postings, so `inter` is the
+   * capped count the join counts; `sz` is the full set size carried by the
+   * index; a null id still counts toward df (the cap ran before the
+   * collect) and pairs only where the join's predicate lets it, that is
+   * only for [[CrossJaccard]].
+   *
+   * Chosen only when the index's row count times its row width (the
+   * schema's default sizes) is at most
+   * `spark.sql.autoBroadcastJoinThreshold`, the setting under which the
+   * self-join would broadcast the index anyway (`-1` forces the join). The count is read by collecting at most one row past that
+   * bound, so an oversized index costs no second pass. Memory bound: the
+   * collect holds at most `bound + 1` rows; the table takes at most 29
+   * bytes a posting (a 4-byte ordinal, plus at most one 12-byte key entry
+   * and one 13-byte document entry), under 1.5× the threshold; each task
+   * adds two int arrays of one entry per indexed document. `None` (keep
+   * the join) above the bound or for ids that are not integral.
+   *
+   * EAGER at construction, like [[dfConcentration]]: the collect runs when
+   * the operator is CALLED, because its result chooses the plan.
+   */
+  private def scanCount(xSets: DataFrame, yIndex: DataFrame, kind: PairKind,
+      threshold: Double, a: String, szA: String, b: String,
+      szB: String): Option[DataFrame] = {
+    val xIdType = xSets.schema("id").dataType
+    val yIdType = yIndex.schema("id").dataType
+    val spark = xSets.sparkSession
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val rowBytes = yIndex.select("h", "id", "sz").schema.map(_.dataType.defaultSize).sum
+    val bound = math.min(limit / rowBytes, Int.MaxValue - 1L).toInt
+    if (limit <= 0 || !integralIds(xIdType) || !integralIds(yIdType)) None
+    else {
+      val rows = yIndex.select(col("h"), col("id").cast("long"), col("sz"))
+        .limit(bound + 1).collect()
+      if (rows.length > bound) None
+      else {
+        val table = spark.sparkContext.broadcast(Postings(rows, kind == CrossJaccard))
+        import spark.implicits._
+        val counted = xSets.select(col("id").cast("long").as("id"), col("sz"), col("hs"))
+          .as[ShingleSet]
+          .mapPartitions { docs =>
+            val p = table.value
+            val counts = new Array[Int](p.docCount)
+            val touched = new Array[Int](p.docCount)
+            docs.flatMap { x =>
+              if (x.id == null && kind != CrossJaccard) Iterator.empty
+              else p.pairs(x, kind, threshold, counts, touched)
+            }
+          }
+        Some(counted.select(col("a").cast(xIdType).as(a), col("sz_a").as(szA),
+          col("b").cast(yIdType).as(b), col("sz_b").as(szB), col("inter")))
+      }
+    }
+  }
+
   /**
    * Exact n-gram Jaccard near-dup pairs: all (a, b), a < b, with
    * `|shingles(a) ∩ shingles(b)| / |shingles(a) ∪ shingles(b)| >= threshold`.
@@ -201,10 +428,13 @@ object Dedup {
    * so no qualifying pair is missed (given threshold > 0 and shingles
    * under the document-frequency cap).
    *
-   * Skew posture (spec-pinned in DedupSpec "hot-shingle skew"): the
-   * candidate self-join reuses the df-cap join's partitioning on h (zero
-   * extra Exchange), which also means AQE's skew split can never apply to
-   * it — its children are not bare shuffle stages. A hot shingle is
+   * Candidates are counted by [[scanCount]] while the capped index fits
+   * the broadcast threshold, by the index self-join above it.
+   *
+   * Skew posture of the join (spec-pinned in DedupSpec "hot-shingle
+   * skew"): the candidate self-join reuses the df-cap join's partitioning
+   * on h (zero extra Exchange), which also means AQE's skew split can
+   * never apply to it — its children are not bare shuffle stages. A hot shingle is
    * bounded structurally by `maxDocFreq` (each surviving shingle
    * contributes at most maxDocFreq² candidate rows); past that, the
    * fallback is a salted index join ([[graft.SparkUtil.saltedJoin]],
@@ -214,19 +444,22 @@ object Dedup {
       textCol: String = "text", n: Int = 3, threshold: Double = 0.6,
       maxDocFreq: Int = 10000): DataFrame = {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    // Cache the inverted index: the candidate self-join consumes it TWICE,
-    // and when the build side is small enough to broadcast there is no
-    // shared Exchange for ReusedExchange to dedup — without the cache the
+    // Cache the inverted index: ScanCount's collect reads it once, and
+    // above the threshold the candidate self-join consumes it TWICE, and
+    // when the build side is small enough to broadcast there is no shared
+    // Exchange for ReusedExchange to dedup — without the cache the
     // explode + df-cap join runs once per side (r16 opt: measured 2× the
     // index-build work in the q14/jacc06 plans). In shuffle-join mode the
     // cache costs one materialization and the sides scan it, the same I/O
     // the reused Exchange would have paid.
-    plainPairsFromIndex(
+    plainPairsFromIndex(sets,
       graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq)), threshold)
   }
 
-  /** The plain inverted-index candidate join + count-based Jaccard,
-    * shared by [[ngramJaccardPairs]] and the adaptive dispatcher.
+  /** The plain inverted-index candidate count ([[scanCount]] below the
+    * broadcast threshold, the index self-join + count aggregate above it)
+    * + count-based Jaccard, shared by [[ngramJaccardPairs]] and the
+    * adaptive dispatcher.
     *
     * MEASURED REJECTIONS (r17, VERDICT item 3 — do not re-churn):
     * one-pass grouped-explode candidate generation (groupBy(h) →
@@ -244,13 +477,14 @@ object Dedup {
     * enumeration is, and SHJ adds per-partition hash-table builds over
     * the same volume. The two-sided equi-join with the shared Exchange
     * is the right shape at every measured scale. */
-  private def plainPairsFromIndex(inv: DataFrame,
+  private def plainPairsFromIndex(sets: DataFrame, inv: DataFrame,
       threshold: Double): DataFrame =
-    inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
-        col("x.id") < col("y.id") && sizeFilter(threshold))
-      .groupBy(col("x.id").as("id_a"), col("x.sz").as("sz_a"),
-        col("y.id").as("id_b"), col("y.sz").as("sz_b"))
-      .agg(count(lit(1)).as("inter"))
+    scanCount(sets, inv, SelfJaccard, threshold, "id_a", "sz_a", "id_b", "sz_b")
+      .getOrElse(inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
+          col("x.id") < col("y.id") && sizeFilter(threshold))
+        .groupBy(col("x.id").as("id_a"), col("x.sz").as("sz_a"),
+          col("y.id").as("id_b"), col("y.sz").as("sz_b"))
+        .agg(count(lit(1)).as("inter")))
       .select(col("id_a"), col("id_b"),
         (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
           .as("jaccard"))
@@ -313,7 +547,7 @@ object Dedup {
     val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
     if (dfConcentration(inv) >= minPrefixConcentration)
       prefixPairsFromIndex(inv, threshold)
-    else plainPairsFromIndex(inv, threshold)
+    else plainPairsFromIndex(sets, inv, threshold)
   }
 
   /**
@@ -512,7 +746,8 @@ object Dedup {
    * EXISTING side's; candidates are bounded by shared-shingle frequency
    * products and the doc-frequency cap (computed over the union, so a
    * shingle ubiquitous in the existing corpus is capped even if rare in
-   * the batch).
+   * the batch). Below the broadcast threshold the EXISTING side's index
+   * is the [[scanCount]] postings table and the new sets stream past it.
    */
   def crossCorpusPairs(newDocs: DataFrame, oldDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
@@ -530,11 +765,13 @@ object Dedup {
       .filter(col("df") <= maxDocFreq).select("h")
     def index(sets: DataFrame) =
       sets.select(col("id"), col("sz"), explode(col("hs")).as("h")).join(df, "h")
-    index(newSets).as("x").join(index(oldSets).as("y"),
-        col("x.h") === col("y.h") && sizeFilter(threshold))
-      .groupBy(col("x.id").as("new_id"), col("x.sz").as("sz_a"),
-        col("y.id").as("old_id"), col("y.sz").as("sz_b"))
-      .agg(count(lit(1)).as("inter"))
+    scanCount(newSets, index(oldSets), CrossJaccard, threshold,
+        "new_id", "sz_a", "old_id", "sz_b")
+      .getOrElse(index(newSets).as("x").join(index(oldSets).as("y"),
+          col("x.h") === col("y.h") && sizeFilter(threshold))
+        .groupBy(col("x.id").as("new_id"), col("x.sz").as("sz_a"),
+          col("y.id").as("old_id"), col("y.sz").as("sz_b"))
+        .agg(count(lit(1)).as("inter")))
       .select(col("new_id"), col("old_id"),
         (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
           .as("jaccard"))
@@ -791,13 +1028,14 @@ object Dedup {
       textCol: String = "text", n: Int = 3, threshold: Double = 0.8,
       maxDocFreq: Int = 10000): DataFrame = {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    // cached for the same two-consumer reason as [[ngramJaccardPairs]]
+    // cached for the same reasons as [[ngramJaccardPairs]]
     val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
-    inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
-        col("x.id") =!= col("y.id") && sizeFilter(threshold, containment = true))
-      .groupBy(col("x.id").as("inner_id"), col("x.sz").as("sz_in"),
-        col("y.id").as("outer_id"))
-      .agg(count(lit(1)).as("inter"))
+    scanCount(sets, inv, Containment, threshold, "inner_id", "sz_in", "outer_id", "sz_out")
+      .getOrElse(inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
+          col("x.id") =!= col("y.id") && sizeFilter(threshold, containment = true))
+        .groupBy(col("x.id").as("inner_id"), col("x.sz").as("sz_in"),
+          col("y.id").as("outer_id"))
+        .agg(count(lit(1)).as("inter")))
       .select(col("inner_id"), col("outer_id"),
         (col("inter").cast("double") / col("sz_in").cast("double"))
           .as("containment"))

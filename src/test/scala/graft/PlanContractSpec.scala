@@ -23,6 +23,14 @@ class PlanContractSpec extends SparkSpec {
     assert(out.columns.last == "nation_name") // enrichment column present, last (E5)
   }
 
+  test("registry parity: every query has an oracle and every oracle a query") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(queries == oracles,
+      s"no oracle: ${(queries -- oracles).toSeq.sorted}; no query: ${(oracles -- queries).toSeq.sorted}")
+    assert(queries.size == 276)
+  }
+
   test("lookup join plans as broadcast hash join, never sort-merge") {
     val p = plan(SparkEntry.queries("q1_lookup_basic")(spark, sf()))
     assert(p.contains("BroadcastHashJoin"))
@@ -564,33 +572,62 @@ class PlanContractSpec extends SparkSpec {
     graft.SparkUtil.unpersistTrackedCaches()
   }
 
-  test("q14 and q86 pair joins carry the exact size filter and keep 3 Exchanges") {
+  test("q14 and q86 join path carries the exact size filter and 6 Exchanges") {
     import org.apache.spark.sql.catalyst.expressions.{Divide, GreaterThanOrEqual, Literal}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    // the size filter is a `>= threshold` over a division of the two
-    // sides' `sz` columns inside the shingle join's condition; dropping it
-    // leaves the output unchanged and only the candidate volume shows it
-    def sizeFiltered(q: String, threshold: Double): Boolean =
-      SparkEntry.queries(q)(spark, sf()).queryExecution.sparkPlan.collect {
-        case j: BaseJoinExec => j
-      }.exists { j =>
-        def side(d: Divide, out: org.apache.spark.sql.catalyst.expressions.AttributeSet) =
-          d.references.exists(a => a.name == "sz" && out.contains(a))
-        j.condition.exists(_.exists {
-          case GreaterThanOrEqual(d: Divide, Literal(t, _)) =>
-            t == threshold && side(d, j.left.outputSet) && side(d, j.right.outputSet)
-          case _ => false
-        })
+    // the index join is the path above the broadcast threshold; -1 forces
+    // it at this scale (below the threshold ScanCount replaces it, next test)
+    val bcThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      // the size filter is a `>= threshold` over a division of the two
+      // sides' `sz` columns inside the shingle join's condition; dropping it
+      // leaves the output unchanged and only the candidate volume shows it
+      def sizeFiltered(q: String, threshold: Double): Boolean =
+        SparkEntry.queries(q)(spark, sf()).queryExecution.sparkPlan.collect {
+          case j: BaseJoinExec => j
+        }.exists { j =>
+          def side(d: Divide, out: org.apache.spark.sql.catalyst.expressions.AttributeSet) =
+            d.references.exists(a => a.name == "sz" && out.contains(a))
+          j.condition.exists(_.exists {
+            case GreaterThanOrEqual(d: Divide, Literal(t, _)) =>
+              t == threshold && side(d, j.left.outputSet) && side(d, j.right.outputSet)
+            case _ => false
+          })
+        }
+      assert(sizeFiltered("q14_dedup_ngram_jaccard", 0.6))
+      assert(sizeFiltered("q86_containment_pairs", 0.8))
+      // shuffle Exchanges, each once: a cached index prints under every
+      // scan of it, but runs one plan (same plan_id). With no broadcast
+      // the index build sort-merges too: round-robin, df aggregate and the
+      // df-cap join's probe side, then both candidate-join sides on `h`
+      // and the pair aggregate
+      for (q <- Seq("q14_dedup_ngram_jaccard", "q86_containment_pairs")) {
+        val p = plan(SparkEntry.queries(q)(spark, sf()))
+        val shuffles = """(?<!Broadcast)Exchange .*\[plan_id=(\d+)\]""".r
+          .findAllMatchIn(p).map(_.group(1)).toSet
+        assert(shuffles.size == 6, s"$q:\n$p")
       }
-    assert(sizeFiltered("q14_dedup_ngram_jaccard", 0.6))
-    assert(sizeFiltered("q86_containment_pairs", 0.8))
-    // shuffle Exchanges, each once: a cached index prints under every
-    // scan of it, but runs one plan (same plan_id)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcThreshold)
+    graft.SparkUtil.unpersistTrackedCaches()
+  }
+
+  test("q14 and q86 at sf0.01: ScanCount, no shingle self-join or pair agg") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     for (q <- Seq("q14_dedup_ngram_jaccard", "q86_containment_pairs")) {
-      val p = plan(SparkEntry.queries(q)(spark, sf()))
-      val shuffles = """(?<!Broadcast)Exchange .*\[plan_id=(\d+)\]""".r
-        .findAllMatchIn(p).map(_.group(1)).toSet
-      assert(shuffles.size == 3, s"$q:\n$p")
+      val df = SparkEntry.queries(q)(spark, sf("sf0.01"))
+      // the pair rows come from the kernel over the cached shingle sets;
+      // the index build (df-cap join) ran once, in the eager collect, and
+      // sits inside no part of this plan
+      val sp = df.queryExecution.sparkPlan
+      assert(sp.collect { case m: MapPartitionsExec => m }.size == 1, s"$q:\n$sp")
+      assert(sp.collect { case j: BaseJoinExec => j }.isEmpty, s"$q:\n$sp")
+      assert(sp.collect { case a: BaseAggregateExec => a }.isEmpty, s"$q:\n$sp")
+      val p = plan(df)
+      val outer = p.substring(0, p.indexOf("InMemoryRelation"))
+      assert(!outer.contains("Exchange"), s"$q:\n$p")
     }
     graft.SparkUtil.unpersistTrackedCaches()
   }

@@ -844,6 +844,39 @@ class DedupSpec extends SparkSpec {
     graft.SparkUtil.unpersistTrackedCaches()
   }
 
+  /** True when `df` counts its candidate pairs with the ScanCount kernel
+    * (a `mapPartitions` over the shingle sets) instead of the index join. */
+  private def scanCounted(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("MapPartitions")
+
+  /** The rows of the pair operator `q` built and run on each candidate
+    * path, ScanCount first (the default settings), then the index join
+    * (`autoBroadcastJoinThreshold = -1`), each checked by its plan: both
+    * sorted, so equal paths compare equal row for row, doubles included. */
+  private def onBothPaths(q: => org.apache.spark.sql.DataFrame): Seq[Seq[Row]] = {
+    val conf = spark.conf
+    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    def run(scan: Boolean) = {
+      val df = q
+      // an input the optimizer proves empty plans no candidate step at all
+      val empty = df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      assert(empty || scanCounted(df) == scan, df.queryExecution.executedPlan.toString)
+      val rows = df.collect().toSeq.sortBy(_.toString)
+      graft.SparkUtil.unpersistTrackedCaches()
+      rows
+    }
+    try {
+      conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      val scan = run(scan = true)
+      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      Seq(scan, run(scan = false))
+    } finally saved match {
+      case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+      case None => conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("size filter keeps a pair whose Jaccard is exactly the threshold") {
     // 3 and 5 shingles, all 3 of the short doc's in the long one:
     // J = 3/5 = 0.6 = least/greatest of the sizes, on the boundary
@@ -852,11 +885,12 @@ class DedupSpec extends SparkSpec {
     val d = docs(short, long)
     def scores(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val want = Set((1L, 2L, 0.6))
-    assert(scores(Dedup.ngramJaccardPairs(d, threshold = 0.6)) == want)
-    assert(scores(Dedup.ngramJaccardPairsPrefix(d, threshold = 0.6)) == want)
-    assert(scores(Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.6)) == want)
-    assert(scores(Dedup.crossCorpusPairs(docs(short), docs(long), threshold = 0.6)) == want)
+    val want = Seq(Row(1L, 2L, 0.6))
+    assert(onBothPaths(Dedup.ngramJaccardPairs(d, threshold = 0.6)) == Seq(want, want))
+    assert(scores(Dedup.ngramJaccardPairsPrefix(d, threshold = 0.6)) == Set((1L, 2L, 0.6)))
+    assert(onBothPaths(Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.6)) == Seq(want, want))
+    assert(onBothPaths(Dedup.crossCorpusPairs(docs(short), docs(long), threshold = 0.6)) ==
+      Seq(want, want))
     graft.SparkUtil.unpersistTrackedCaches()
   }
 
@@ -864,10 +898,8 @@ class DedupSpec extends SparkSpec {
     // inner has 5 shingles, outer 4, all 4 of them shared:
     // containment(inner -> outer) = 4/5 = 0.8 = sz_out / sz_in
     val d = docs(1L -> "w1 w2 w3 w4 w5 w6 w7", 2L -> "w1 w2 w3 w4 w5 w6")
-    val out = Dedup.containmentPairs(d, threshold = 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(out == Map((1L, 2L) -> 0.8, (2L, 1L) -> 1.0))
-    graft.SparkUtil.unpersistTrackedCaches()
+    val want = Seq(Row(1L, 2L, 0.8), Row(2L, 1L, 1.0))
+    assert(onBothPaths(Dedup.containmentPairs(d, threshold = 0.8)) == Seq(want, want))
   }
 
   /** Seeded corpus with widely spread set sizes: base docs of 3-90 tokens
@@ -907,7 +939,7 @@ class DedupSpec extends SparkSpec {
 
   test("size filter is exact: all four pair operators equal an unfiltered " +
       "reference on a spread-size corpus, with and without the df cap binding") {
-    for ((seed, t) <- Seq(7 -> 0.5, 19 -> 0.8); maxDocFreq <- Seq(10000, 10)) {
+    for ((seed, t) <- Seq(7 -> 0.5, 19 -> 0.8, 31 -> 0.0); maxDocFreq <- Seq(10000, 10)) {
       val corpus = spreadCorpus(seed)
       val (newSide, oldSide) = corpus.partition(_._1 % 2 == 0)
       // reference: every pair sharing a capped shingle, scored the way the
@@ -925,8 +957,8 @@ class DedupSpec extends SparkSpec {
       val cross = (for (a <- n.keys; b <- o.keys; i = (n(a) & o(b)).size
           if i > 0 && jac(i, a, b) >= t) yield (a, b, jac(i, a, b))).toSet
       assert(jaccard.nonEmpty && containment.nonEmpty && cross.nonEmpty)
-      // the size filter has candidates to drop ...
-      assert(ids.exists(a => ids.exists(b => inter(a, b) > 0 &&
+      // the size filter has candidates to drop (none at t = 0) ...
+      assert(t == 0.0 || ids.exists(a => ids.exists(b => inter(a, b) > 0 &&
         math.min(sz(a), sz(b)).toDouble / math.max(sz(a), sz(b)) < t)))
       // ... and the binding cap shrinks some candidate's intersection
       if (maxDocFreq == 10) {
@@ -944,6 +976,66 @@ class DedupSpec extends SparkSpec {
       assert(rows(Dedup.crossCorpusPairs(docs(newSide: _*), docs(oldSide: _*),
         threshold = t, maxDocFreq = maxDocFreq)) == cross, ctx)
       graft.SparkUtil.unpersistTrackedCaches()
+      // the ScanCount kernel and the index join it replaces give the same rows
+      for ((name, q) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "jaccard" -> (() => Dedup.ngramJaccardPairs(d, threshold = t, maxDocFreq = maxDocFreq)),
+          "adaptive" -> (() => Dedup.ngramJaccardPairsAdaptive(d, threshold = t,
+            maxDocFreq = maxDocFreq, minPrefixConcentration = Double.PositiveInfinity)),
+          "containment" -> (() => Dedup.containmentPairs(d, threshold = t, maxDocFreq = maxDocFreq)),
+          "cross" -> (() => Dedup.crossCorpusPairs(docs(newSide: _*), docs(oldSide: _*),
+            threshold = t, maxDocFreq = maxDocFreq)))) {
+        val Seq(scan, join) = onBothPaths(q())
+        assert(scan.nonEmpty && scan == join, s"$name, $ctx")
+      }
+    }
+  }
+
+  /** Docs with a nullable id column, for the null-id cases. */
+  private def nullableDocs(rows: (java.lang.Long, String)*) =
+    spark.createDataFrame(rows.map { case (i, t) => Row(i, t) }.asJava,
+      StructType(Seq(StructField("doc_id", LongType, nullable = true),
+        StructField("text", StringType, nullable = false))))
+
+  test("degenerate inputs: both candidate paths return the hand-computed pairs") {
+    val l = java.lang.Long.valueOf(_: Long)
+    type Cases = Seq[(String, Seq[(java.lang.Long, String)], Seq[(java.lang.Long, String)],
+      Int, Seq[Row], Seq[Row], Seq[Row])]
+    // (case, new side, old side, df cap, Jaccard pairs of new ++ old,
+    //  containment pairs of new ++ old, cross-corpus pairs new x old)
+    val cases: Cases = Seq(
+      ("empty documents", Nil, Nil, 10000, Nil, Nil, Nil),
+      ("single document", Seq(l(1) -> "a b c d"), Nil, 10000, Nil, Nil, Nil),
+      ("every doc shorter than n tokens",
+        Seq(l(1) -> "a b", l(2) -> "a b"), Seq(l(3) -> "a", l(4) -> ""), 10000, Nil, Nil, Nil),
+      // "a b c" and "b c d" sit in three docs counting the null one, so
+      // the cap of 2 drops them: 1 and 2 share nothing left, and only
+      // the identical 3 and 4 pair; without the null doc, 1 and 2 would
+      // score 2 / 3
+      ("null doc_id counts toward a binding df cap",
+        Seq(l(1) -> "a b c d", (null: java.lang.Long) -> "a b c d", l(3) -> "x y z w"),
+        Seq(l(2) -> "a b c d e", l(4) -> "x y z w"), 2,
+        Seq(Row(3L, 4L, 1.0)), Seq(Row(3L, 4L, 1.0), Row(4L, 3L, 1.0)), Seq(Row(3L, 4L, 1.0))),
+      ("all-identical corpus",
+        Seq(l(1) -> "p q r s t"), Seq(l(2) -> "p q r s t", l(3) -> "p q r s t"), 10000,
+        Seq(Row(1L, 2L, 1.0), Row(1L, 3L, 1.0), Row(2L, 3L, 1.0)),
+        Seq(1L -> 2L, 1L -> 3L, 2L -> 1L, 2L -> 3L, 3L -> 1L, 3L -> 2L)
+          .map { case (a, b) => Row(a, b, 1.0) },
+        Seq(Row(1L, 2L, 1.0), Row(1L, 3L, 1.0))),
+      // four-byte UTF-8 tokens: 2 shingles inside 3, J = 2/3
+      ("4-byte UTF-8 text",
+        Seq(l(1) -> "\ud83d\ude00 \ud835\udd18 \ud840\udc0b \ud83c\udf89"),
+        Seq(l(2) -> "\ud83d\ude00 \ud835\udd18 \ud840\udc0b \ud83c\udf89 \ud83d\ude80"), 10000,
+        Seq(Row(1L, 2L, 2.0 / 3)), Seq(Row(1L, 2L, 1.0), Row(2L, 1L, 2.0 / 3)),
+        Seq(Row(1L, 2L, 2.0 / 3))))
+    for ((name, newSide, oldSide, cap, jaccard, containment, cross) <- cases) {
+      val all = nullableDocs(newSide ++ oldSide: _*)
+      def check(op: String, want: Seq[Row])(q: => org.apache.spark.sql.DataFrame) =
+        assert(onBothPaths(q) == Seq.fill(2)(want.sortBy(_.toString)), s"$op on $name")
+      check("jaccard", jaccard)(Dedup.ngramJaccardPairs(all, threshold = 0.6, maxDocFreq = cap))
+      check("containment", containment)(
+        Dedup.containmentPairs(all, threshold = 0.6, maxDocFreq = cap))
+      check("cross", cross)(Dedup.crossCorpusPairs(nullableDocs(newSide: _*),
+        nullableDocs(oldSide: _*), threshold = 0.6, maxDocFreq = cap))
     }
   }
 
