@@ -76,6 +76,10 @@ object SparkUtil {
     df
   }
 
+  /** The caches registered by [[trackCache]] and not yet released. */
+  private[graft] def trackedCacheList: Seq[DataFrame] =
+    trackedCaches.toArray(Array.empty[DataFrame]).toSeq
+
   /** Unpersist every cache registered by [[trackCache]] since the last
     * call. Safe to call while other queries run — only graft-internal
     * caches are dropped (never `spark.catalog.clearCache()`, which would

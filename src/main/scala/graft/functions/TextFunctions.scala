@@ -54,80 +54,38 @@ object TextFunctions {
 
   /** Horner rolling hash: fold `(h*31 + byte) % p` left to right over the
     * UTF-8 bytes (== the SQL oracle's char-level `ascii()` fold on ASCII
-    * corpora). Native codegen'd expression — the HOF spelling
-    * (`rollingHashHof`) is kept for parity tests. */
+    * corpora). Native codegen'd expression; its HOF spelling is the
+    * test-scope parity twin `HofTwins.rollingHashHof`. */
   def rollingHash(s: Column): Column = native(catalyst.RollingHashBytes(expr(s)))
 
   /** All length-3 character substrings of `s`, one forward pass (codegen'd
     * [[catalyst.CharTrigrams]]; r16 opt) — replaces the O(len²)
     * `transform(sequence(1, length-2), i -> substring(s, i, 3))` spelling
-    * (kept as [[charTrigramsHof]] for parity tests). <3-char strings yield
-    * an empty array. */
+    * (test-scope parity twin `HofTwins.charTrigramsHof`). <3-char strings
+    * yield an empty array. */
   def charTrigrams(s: Column): Column = native(catalyst.CharTrigrams(expr(s)))
-
-  /** Reference HOF formulation of [[charTrigrams]] (interpreted and
-    * per-position quadratic; used to cross-check the native expression).
-    * Caller must guard length >= 3 (`sequence(1, 0)` descends). */
-  def charTrigramsHof(s: Column): Column =
-    transform(sequence(lit(1), length(s) - lit(2)),
-      i => org.apache.spark.sql.functions.substring(s, i, lit(3)))
-
-
-  /** Reference HOF formulation of [[rollingHash]] (interpreted; used to
-    * cross-check the native expression). Empty-string chars are filtered
-    * because Spark's `split(s,"")` keeps a trailing empty element
-    * (limit -1) while DuckDB's does not. */
-  def rollingHashHof(s: Column): Column =
-    aggregate(
-      filter(split(s, ""), c => length(c) > 0),
-      lit(0L),
-      (h, c) => (h * HashBase + ascii(c)) % HashPrime)
 
   /** 32-bit mixed token hash for SimHash bit sampling. */
   def mix32(h: Column): Column = (h * Mix) % TwoPow32
 
-  /** Word n-gram shingles as space-joined strings, e.g. n=3:
-    * ["a","b","c","d"] → ["a b c", "b c d"]. Documents shorter than n
-    * tokens yield an empty array (guarded: Spark's `sequence(0, -k)` counts
-    * *down*, which would otherwise fabricate negative indices). */
-  def shingles(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-
   /** Distinct shingle hashes for a document: the MinHash/Jaccard input set.
-    * Native one-pass expression; HOF spelling kept for parity tests. */
+    * Native one-pass expression; its HOF twin is test-scope `HofTwins`. */
   def shingleHashes(text: Column, n: Int): Column =
     native(catalyst.ShingleHashes(expr(text), n))
 
-  /** Reference HOF formulation of [[shingleHashes]]. */
-  def shingleHashesHof(text: Column, n: Int): Column =
-    array_distinct(transform(shingles(tokens(text), n), rollingHash(_)))
-
   /** ALL shingle hashes (duplicates kept, position order) — the multiset
     * twin of [[shingleHashes]] for term-frequency-weighted operators.
-    * Native one-pass expression; HOF spelling kept for parity tests. */
+    * Native one-pass expression; its HOF twin is test-scope `HofTwins`. */
   def shingleHashesAll(text: Column, n: Int): Column =
     native(catalyst.ShingleHashesAll(expr(text), n))
-
-  /** Reference HOF formulation of [[shingleHashesAll]]. */
-  def shingleHashesAllHof(text: Column, n: Int): Column =
-    transform(shingles(tokens(text), n), rollingHash(_))
 
   /** MinHash signature of a hash-set column: `k` signatures, where
     * `sig_i = min over h of ((2i+1)*h + 7919*i + 1) mod p`. The coefficient
     * family is fixed and public so the DuckDB oracle can replay it.
     * Empty input → null signatures (callers filter empty shingle sets).
-    * Native codegen'd expression; HOF spelling kept for parity tests. */
+    * Native codegen'd expression; its HOF twin is test-scope `HofTwins`. */
   def minhashSignature(hashes: Column, k: Int): Column =
     native(catalyst.MinHashSig(expr(hashes), k))
-
-  /** Reference HOF formulation of [[minhashSignature]]. */
-  def minhashSignatureHof(hashes: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(hashes,
-        h => ((i * 2 + 1) * h + i * lit(7919L) + 1) % HashPrime)))
 
   /** Fixed-width binary LSH band keys of a k-long signature: element b
     * packs the non-null values of `sig[b*r .. b*r+r-1]` as big-endian
@@ -142,22 +100,9 @@ object TextFunctions {
   /** 32-bit SimHash over the token multiset (term-frequency weighted).
     * Per token: 32 sign contributions (+1 if bit set, else -1) accumulated
     * into a 32-wide counter array; final bit i is set iff counter_i > 0.
-    * Entirely per-row (no shuffle). Native codegen'd expression; HOF
-    * spelling kept for parity tests. */
+    * Entirely per-row (no shuffle). Native codegen'd expression; its HOF
+    * twin is test-scope `HofTwins`. */
   def simhash(toks: Column): Column = native(catalyst.SimHash32(expr(toks)))
-
-  /** Reference HOF formulation of [[simhash]] (single `aggregate` fold). */
-  def simhashHof(toks: Column): Column = {
-    val signBits: Column => Column = h =>
-      array((0 until 32).map(i => (shiftright(h, i) % 2) * 2 - 1): _*)
-    val acc = aggregate(
-      transform(toks, t => mix32(rollingHashHof(t))),
-      array_repeat(lit(0L), 32),
-      (a, h) => zip_with(a, signBits(h), (x, y) => x + y))
-    (0 until 32)
-      .map(i => when(element_at(acc, i + 1) > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
-  }
 
   /** 64-bit term-frequency SimHash — the scale face of [[simhash]]: the
     * same per-token rolling hash drives two independent 32-bit mixes
@@ -169,24 +114,8 @@ object TextFunctions {
     * Low-half identity `sh64 & 0xFFFFFFFF == sh32` is spec-pinned. */
   def simhash64(toks: Column): Column = native(catalyst.SimHash64(expr(toks)))
 
-  /** Reference HOF formulation of [[simhash64]] (two 32-bit folds). */
-  def simhash64Hof(toks: Column): Column = {
-    def half(mixer: Long): Column = {
-      val signBits: Column => Column = h =>
-        array((0 until 32).map(i => (shiftright(h, i) % 2) * 2 - 1): _*)
-      val acc = aggregate(
-        transform(toks, t => (rollingHashHof(t) * mixer) % TwoPow32),
-        array_repeat(lit(0L), 32),
-        (a, h) => zip_with(a, signBits(h), (x, y) => x + y))
-      (0 until 32)
-        .map(i => when(element_at(acc, i + 1) > 0, lit(1L << i)).otherwise(lit(0L)))
-        .reduce(_ + _)
-    }
-    half(Mix).bitwiseOR(shiftleft(half(Mix2), 32))
-  }
-
   /** Maximum term frequency of the text's tokens (repetition signal).
-    * Native one-pass expression; HOF spelling kept for parity tests. */
+    * Native one-pass expression; its HOF twin is test-scope `HofTwins`. */
   def topTokenCount(text: Column): Column =
     native(catalyst.TokenModeCount(expr(text)))
 
@@ -196,11 +125,6 @@ object TextFunctions {
     * is spec-pinned identical). */
   def featureHashSummary(text: Column, d: Int): Column =
     native(catalyst.FeatureHashSummary(expr(text), d))
-
-  /** Reference HOF formulation of [[topTokenCount]] (interpreted). */
-  def topTokenCountHof(toks: Column): Column =
-    array_max(transform(array_distinct(toks),
-      t => size(filter(toks, x => x === t)))).cast("long")
 
   /** Pigeonhole blocks of a 32-bit SimHash: 4 bytes. Two hashes within
     * Hamming distance 3 must agree on at least one byte (4 blocks, ≤3
@@ -353,15 +277,11 @@ object TextFunctions {
     * the lookahead keeps the trailing delimiter unconsumed so adjacent
     * markers all count. Formulated this way because lambda HOFs are
     * CodegenFallback and knock the whole projection out of whole-stage
-    * codegen; [[markerCountHof]] is the parity twin. */
+    * codegen; the test-scope `HofTwins.markerCountHof` is the parity
+    * twin. */
   def markerCount(text: Column, markers: Seq[String]): Column =
     size(regexp_extract_all(text,
       lit("(?:^| )(?:" + markers.mkString("|") + ")(?= |$)"), lit(0)))
-
-  /** Lambda formulation of [[markerCount]] over a token array (parity
-    * twin; interpreted). */
-  def markerCountHof(toks: Column, markers: Seq[String]): Column =
-    size(filter(toks, t => t.isin(markers: _*)))
 
   /** Per-language marker lists for the n-gram/stopword language-ID
     * heuristic. Fixed and public so the SQL oracle can replay them. */

@@ -57,19 +57,10 @@ object VectorFunctions {
 
   /** Sign-random-projection LSH bucket id over `nPlanes` hyperplanes:
     * bit j is set iff dot(plane_j, v) > 0. Native codegen'd expression;
-    * the unrolled formulation ([[lshBucketHof]]) is kept for parity
-    * tests. */
+    * the unrolled formulation is the test-scope parity twin
+    * `HofTwins.lshBucketHof`. */
   def lshBucket(v: Column, dim: Int, nPlanes: Int): Column =
     native(catalyst.SrpBucketF32(expr(v), dim, nPlanes))
-
-  /** Unrolled-expression formulation of [[lshBucket]] (parity twin). */
-  def lshBucketHof(v: Column, dim: Int, nPlanes: Int): Column =
-    (0 until nPlanes).map { j =>
-      val proj = (1 to dim)
-        .map(i => element_at(v, i).cast("double") * lit(planeWeight(j, i, dim).toDouble))
-        .reduce(_ + _)
-      when(proj > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Argmin-L2 code against a literal codebook over the slice starting at
     * 0-based `base` (`codebook`: one `dsub`-wide slice per code, in code

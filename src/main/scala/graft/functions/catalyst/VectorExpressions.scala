@@ -54,9 +54,10 @@ case class DotProductF32(left: Expression, right: Expression)
  * of the result is set iff the dot product with deterministic public
  * hyperplane j is > 0 (planes from the Knuth-mix formula in
  * `VectorFunctions.planeWeight` — replayable by any engine). Semantically
- * identical to the unrolled `lshBucketHof` chain (same ascending-index
- * left-assoc accumulation), but one tight nested loop instead of a
- * dim×nPlanes expression tree — the 512-node tree was the q19 hot spot.
+ * identical to the unrolled test-scope `HofTwins.lshBucketHof` chain
+ * (same ascending-index left-assoc accumulation), but one tight nested
+ * loop instead of a dim×nPlanes expression tree — the 512-node tree was
+ * the q19 hot spot.
  */
 case class SrpBucketF32(child: Expression, dim: Int, nPlanes: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {

@@ -215,12 +215,55 @@ object Dedup {
       b: java.lang.Long, sz_b: Int, inter: Long)
 
   /**
+   * Document frequency per shingle hash over collected shingle sets:
+   * `keys` holds the sorted distinct hashes and `df(k)` the number of
+   * postings of `keys(k)`, one per set that holds it (a set's hashes are
+   * distinct). Every set counts, a null id's too, as in [[invertedIndex]].
+   */
+  private final class DocFreq(val keys: Array[Long], val df: Array[Int]) {
+
+    /** [[dfConcentration]] over the keys under the cap, from the same
+      * integers in the same double arithmetic: `N`, `Σdf` and `Σdf²` are
+      * exact in doubles, so the result is bit-identical to the aggregate. */
+    def concentration(maxDocFreq: Int): Double = {
+      var n = 0L
+      var s1 = 0.0
+      var s2 = 0.0
+      var k = 0
+      while (k < keys.length) {
+        val d = df(k)
+        if (d <= maxDocFreq) { n += 1; s1 += d.toDouble; s2 += (d.toLong * d).toDouble }
+        k += 1
+      }
+      if (s1 == 0.0) 1.0 else n.toDouble * s2 / (s1 * s1)
+    }
+  }
+
+  private object DocFreq {
+    def apply(sets: Array[ShingleSet]): DocFreq = {
+      val all = sets.flatMap(_.hs)
+      java.util.Arrays.sort(all)
+      def runStart(i: Int) = i == 0 || all(i) != all(i - 1)
+      val keys = new Array[Long](all.indices.count(runStart))
+      val df = new Array[Int](keys.length)
+      var k = -1
+      var i = 0
+      while (i < all.length) {
+        if (runStart(i)) { k += 1; keys(k) = all(i) }
+        df(k) += 1
+        i += 1
+      }
+      new DocFreq(keys, df)
+    }
+  }
+
+  /**
    * A capped inverted index as a CSR postings table of primitive arrays:
-   * `keys` holds the sorted distinct shingle hashes, and the postings of
-   * `keys(k)` are `docs(offsets(k) until offsets(k + 1))`, document
-   * ordinals in ascending id order (null ids first). Ordinal `o` is the
-   * distinct `(id, sz)` pair `(ids(o), szs(o))`, with `nullIds(o)` set for
-   * a null id.
+   * `keys` holds the sorted shingle hashes under the df cap, and the
+   * postings of `keys(k)` are `docs(offsets(k) until offsets(k + 1))`,
+   * document ordinals in ascending id order (null ids first). Ordinal `o`
+   * is the distinct `(id, sz)` pair `(ids(o), szs(o))`, with `nullIds(o)`
+   * set for a null id.
    */
   private final class Postings(keys: Array[Long], offsets: Array[Int],
       docs: Array[Int], ids: Array[Long], nullIds: Array[Boolean],
@@ -287,67 +330,48 @@ object Dedup {
       java.util.Arrays.copyOf(s, k)
     }
 
-    /** Builds the table from collected `(h, id: long, sz)` index rows,
-      * with primitive sorts only: rows with a null id are dropped unless
-      * `keepNullIds`. */
-    def apply(rows: Array[org.apache.spark.sql.Row], keepNullIds: Boolean): Postings = {
-      val kept = if (keepNullIds) rows else rows.filterNot(_.isNullAt(1))
-      val n = kept.length
-      val h = new Array[Long](n)
-      val id = new Array[Long](n)
-      val sz = new Array[Int](n)
-      var i = 0
-      while (i < n) {
-        val r = kept(i)
-        h(i) = r.getLong(0)
-        if (!r.isNullAt(1)) id(i) = r.getLong(1)
-        sz(i) = r.getInt(2)
-        i += 1
-      }
+    /** Builds the table from the collected sets `ys`, with primitive sorts
+      * only. `df` counts every posting that the cap is read over (`ys`'s
+      * and, across corpora, the other side's); a hash with df over
+      * `maxDocFreq` gets no run. Sets with a null id are indexed only if
+      * `keepNullIds`, after df was counted. */
+    def apply(ys: Array[ShingleSet], df: DocFreq, maxDocFreq: Int,
+        keepNullIds: Boolean): Postings = {
+      val sets = if (keepNullIds) ys else ys.filter(_.id != null)
       // document ordinals: distinct (id rank, sz) packed into one long,
       // a null id ranking -1 so it sorts first
-      val distinctIds = sortedDistinct(id)
-      val docKey = new Array[Long](n)
-      i = 0
-      while (i < n) {
-        val rank = if (kept(i).isNullAt(1)) -1 else java.util.Arrays.binarySearch(distinctIds, id(i))
-        docKey(i) = (rank.toLong << 32) | (sz(i) & 0xffffffffL)
-        i += 1
+      val distinctIds = sortedDistinct(sets.collect { case x if x.id != null => x.id.longValue })
+      val docKey = sets.map { x =>
+        val rank = if (x.id == null) -1 else java.util.Arrays.binarySearch(distinctIds, x.id.longValue)
+        (rank.toLong << 32) | (x.sz & 0xffffffffL)
       }
       val ordKeys = sortedDistinct(docKey)
-      val ids = new Array[Long](ordKeys.length)
-      val nullIds = new Array[Boolean](ordKeys.length)
-      val szs = new Array[Int](ordKeys.length)
-      var o = 0
-      while (o < ordKeys.length) {
-        val rank = (ordKeys(o) >> 32).toInt
-        nullIds(o) = rank < 0
-        if (rank >= 0) ids(o) = distinctIds(rank)
-        szs(o) = ordKeys(o).toInt
-        o += 1
+      val ranks = ordKeys.map(k => (k >> 32).toInt)
+      val ids = ranks.map(r => if (r < 0) 0L else distinctIds(r))
+      val nullIds = ranks.map(_ < 0)
+      val szs = ordKeys.map(_.toInt)
+      // the df cap: a run for each hash at or under it, -1 for the rest
+      val run = new Array[Int](df.keys.length)
+      var nKeys = 0
+      for (k <- df.keys.indices)
+        run(k) = if (df.df(k) <= maxDocFreq) { nKeys += 1; nKeys - 1 } else -1
+      val keys = new Array[Long](nKeys)
+      for (k <- df.keys.indices if run(k) >= 0) keys(run(k)) = df.keys(k)
+      def runOf(h: Long) = run(java.util.Arrays.binarySearch(df.keys, h))
+      // CSR by a counting sort on the run, the sets visited in ordinal
+      // order (ordinal << 32 | set index) so that every run's ordinals ascend
+      val offsets = new Array[Int](nKeys + 1)
+      for (x <- sets; h <- x.hs) { val r = runOf(h); if (r >= 0) offsets(r + 1) += 1 }
+      for (k <- 0 until nKeys) offsets(k + 1) += offsets(k)
+      val cursor = java.util.Arrays.copyOf(offsets, nKeys)
+      val docs = new Array[Int](offsets(nKeys))
+      val order = Array.tabulate(sets.length)(i =>
+        (java.util.Arrays.binarySearch(ordKeys, docKey(i)).toLong << 32) | i)
+      java.util.Arrays.sort(order)
+      for (o <- order; h <- sets(o.toInt).hs) {
+        val r = runOf(h)
+        if (r >= 0) { docs(cursor(r)) = (o >>> 32).toInt; cursor(r) += 1 }
       }
-      // CSR by a counting sort on the hash rank, then ordinals sorted per run
-      val keys = sortedDistinct(h)
-      val hRank = new Array[Int](n)
-      val offsets = new Array[Int](keys.length + 1)
-      i = 0
-      while (i < n) {
-        hRank(i) = java.util.Arrays.binarySearch(keys, h(i))
-        offsets(hRank(i) + 1) += 1
-        i += 1
-      }
-      var k = 0
-      while (k < keys.length) { offsets(k + 1) += offsets(k); k += 1 }
-      val cursor = java.util.Arrays.copyOf(offsets, keys.length)
-      val docs = new Array[Int](n)
-      i = 0
-      while (i < n) {
-        docs(cursor(hRank(i))) = java.util.Arrays.binarySearch(ordKeys, docKey(i))
-        cursor(hRank(i)) += 1
-        i += 1
-      }
-      k = 0
-      while (k < keys.length) { java.util.Arrays.sort(docs, offsets(k), offsets(k + 1)); k += 1 }
       new Postings(keys, offsets, docs, ids, nullIds, szs)
     }
   }
@@ -355,9 +379,44 @@ object Dedup {
   private val integralIds: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
 
   /**
+   * The shingle sets `(id, sz, hs)` of every side, collected to the
+   * driver with one typed collect each, ids as long: `Some` when
+   * [[scanCount]] applies, that is when every side's ids are integral and
+   * the sets' total `sz` times the index row width (`8 + id width + 4`,
+   * the schema's default sizes of `(h, id, sz)`, the widest side's id) is
+   * at most `spark.sql.autoBroadcastJoinThreshold`, the setting under
+   * which the index self-join would broadcast its index anyway (`-1`
+   * forces the join). `None` otherwise, before any collect.
+   *
+   * Σ`sz` is the UNCAPPED posting count, at least the capped index's row
+   * count. For one corpus the driver therefore never holds more postings
+   * than the capped index has rows, and the dispatch differs from a bound
+   * on the capped index only where the cap binds; both paths are exact.
+   * Across corpora both sides count, since both are collected for the df.
+   * The total is read in one job over the sets with no Exchange; cached
+   * sets are filled first, and the collect reads the cache.
+   */
+  private def collectedSets(sides: DataFrame*): Option[Seq[Array[ShingleSet]]] = {
+    val spark = sides.head.sparkSession
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit <= 0 || !sides.forall(s => integralIds(s.schema("id").dataType))) None
+    else {
+      import spark.implicits._
+      val rowBytes = 8 + sides.map(_.schema("id").dataType.defaultSize).max + 4
+      // per-partition sums: one job with no Exchange
+      val postings = sides.map(_.select(col("sz").cast("long"))).reduce(_ union _)
+        .as[Long].mapPartitions(sz => Iterator(sz.sum)).collect().sum
+      // the driver's flat arrays hold one entry a posting
+      if (postings * rowBytes > limit || postings >= Int.MaxValue) None
+      else Some(sides.map(_.select(col("id").cast("long").as("id"), col("sz"), col("hs"))
+        .as[ShingleSet].collect()))
+    }
+  }
+
+  /**
    * ScanCount (Li, Lu and Lu, ICDE 2008) in place of an index join and its
-   * pair `count` aggregate: the capped index `yIndex` `(h, id, sz)` is
-   * collected to the driver, built into a [[Postings]] table and
+   * pair `count` aggregate: `table`, the capped index of the `y` side built
+   * on the driver from its collected sets ([[collectedSets]]), is
    * broadcast; each task streams `xSets` `(id, sz, hs)` and, per document,
    * counts every `y` posting of its shingles in one dense array, resetting
    * only the touched entries. It returns `(a, szA, b, szB, inter)`, one row
@@ -365,59 +424,55 @@ object Dedup {
    * the rows the join + aggregate would give, so the caller's score and
    * threshold stay in Catalyst.
    *
-   * Exact: only shingles under the df cap have postings, so `inter` is the
-   * capped count the join counts; `sz` is the full set size carried by the
-   * index; a null id still counts toward df (the cap ran before the
-   * collect) and pairs only where the join's predicate lets it, that is
-   * only for [[CrossJaccard]].
+   * Exact: the table is an inverted index whose run length is a key's
+   * document frequency, so the cap is applied on the driver to the same
+   * counts the df-cap aggregate reads: df is counted over every posting,
+   * null ids included (and across corpora over both sides), before the
+   * runs over `maxDocFreq` are dropped and, unless [[CrossJaccard]], the
+   * null-id sets. Only shingles under the cap have postings, so `inter` is
+   * the capped count the join counts; `sz` is the full set size; the
+   * flattened sets are the same `(h, id, sz)` multiset the index explode
+   * gives.
    *
-   * Chosen only when the index's row count times its row width (the
-   * schema's default sizes) is at most
-   * `spark.sql.autoBroadcastJoinThreshold`, the setting under which the
-   * self-join would broadcast the index anyway (`-1` forces the join). The count is read by collecting at most one row past that
-   * bound, so an oversized index costs no second pass. Memory bound: the
-   * collect holds at most `bound + 1` rows; the table takes at most 29
-   * bytes a posting (a 4-byte ordinal, plus at most one 12-byte key entry
-   * and one 13-byte document entry), under 1.5× the threshold; each task
-   * adds two int arrays of one entry per indexed document. `None` (keep
-   * the join) above the bound or for ids that are not integral.
+   * Memory bound: the driver holds at most the Σ`sz` postings that
+   * [[collectedSets]] admitted, at 8 bytes each in the sets and in the
+   * sorted df copy and 4 in the table, plus at most 32 bytes a distinct
+   * hash and about 100 a document; each task adds two int arrays of one
+   * entry per indexed document.
    *
-   * EAGER at construction, like [[dfConcentration]]: the collect runs when
-   * the operator is CALLED, because its result chooses the plan.
+   * EAGER at construction, like [[dfConcentration]]: the collect and the
+   * build run when the operator is CALLED, because the collect chooses
+   * the plan.
    */
-  private def scanCount(xSets: DataFrame, yIndex: DataFrame, kind: PairKind,
-      threshold: Double, a: String, szA: String, b: String,
-      szB: String): Option[DataFrame] = {
+  private def scanCount(xSets: DataFrame, table: Postings, yIdType: DataType,
+      kind: PairKind, threshold: Double, a: String, szA: String, b: String,
+      szB: String): DataFrame = {
     val xIdType = xSets.schema("id").dataType
-    val yIdType = yIndex.schema("id").dataType
     val spark = xSets.sparkSession
-    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val rowBytes = yIndex.select("h", "id", "sz").schema.map(_.dataType.defaultSize).sum
-    val bound = math.min(limit / rowBytes, Int.MaxValue - 1L).toInt
-    if (limit <= 0 || !integralIds(xIdType) || !integralIds(yIdType)) None
-    else {
-      val rows = yIndex.select(col("h"), col("id").cast("long"), col("sz"))
-        .limit(bound + 1).collect()
-      if (rows.length > bound) None
-      else {
-        val table = spark.sparkContext.broadcast(Postings(rows, kind == CrossJaccard))
-        import spark.implicits._
-        val counted = xSets.select(col("id").cast("long").as("id"), col("sz"), col("hs"))
-          .as[ShingleSet]
-          .mapPartitions { docs =>
-            val p = table.value
-            val counts = new Array[Int](p.docCount)
-            val touched = new Array[Int](p.docCount)
-            docs.flatMap { x =>
-              if (x.id == null && kind != CrossJaccard) Iterator.empty
-              else p.pairs(x, kind, threshold, counts, touched)
-            }
-          }
-        Some(counted.select(col("a").cast(xIdType).as(a), col("sz_a").as(szA),
-          col("b").cast(yIdType).as(b), col("sz_b").as(szB), col("inter")))
+    val bc = spark.sparkContext.broadcast(table)
+    import spark.implicits._
+    xSets.select(col("id").cast("long").as("id"), col("sz"), col("hs"))
+      .as[ShingleSet]
+      .mapPartitions { docs =>
+        val p = bc.value
+        val counts = new Array[Int](p.docCount)
+        val touched = new Array[Int](p.docCount)
+        docs.flatMap { x =>
+          if (x.id == null && kind != CrossJaccard) Iterator.empty
+          else p.pairs(x, kind, threshold, counts, touched)
+        }
       }
-    }
+      .select(col("a").cast(xIdType).as(a), col("sz_a").as(szA),
+        col("b").cast(yIdType).as(b), col("sz_b").as(szB), col("inter"))
   }
+
+  /** [[scanCount]] of one corpus against itself: `ys` are its collected
+    * `sets` and `df` their document frequencies. */
+  private def selfScanCount(sets: DataFrame, ys: Array[ShingleSet], df: DocFreq,
+      kind: PairKind, threshold: Double, maxDocFreq: Int, a: String, szA: String,
+      b: String, szB: String): DataFrame =
+    scanCount(sets, Postings(ys, df, maxDocFreq, keepNullIds = false),
+      sets.schema("id").dataType, kind, threshold, a, szA, b, szB)
 
   /**
    * Exact n-gram Jaccard near-dup pairs: all (a, b), a < b, with
@@ -428,8 +483,8 @@ object Dedup {
    * so no qualifying pair is missed (given threshold > 0 and shingles
    * under the document-frequency cap).
    *
-   * Candidates are counted by [[scanCount]] while the capped index fits
-   * the broadcast threshold, by the index self-join above it.
+   * Candidates are counted by [[scanCount]] while the shingle sets fit
+   * its bound ([[collectedSets]]), by the index self-join above it.
    *
    * Skew posture of the join (spec-pinned in DedupSpec "hot-shingle
    * skew"): the candidate self-join reuses the df-cap join's partitioning
@@ -444,22 +499,33 @@ object Dedup {
       textCol: String = "text", n: Int = 3, threshold: Double = 0.6,
       maxDocFreq: Int = 10000): DataFrame = {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    // Cache the inverted index: ScanCount's collect reads it once, and
-    // above the threshold the candidate self-join consumes it TWICE, and
-    // when the build side is small enough to broadcast there is no shared
-    // Exchange for ReusedExchange to dedup — without the cache the
-    // explode + df-cap join runs once per side (r16 opt: measured 2× the
-    // index-build work in the q14/jacc06 plans). In shuffle-join mode the
-    // cache costs one materialization and the sides scan it, the same I/O
-    // the reused Exchange would have paid.
-    plainPairsFromIndex(sets,
-      graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq)), threshold)
+    // Above the bound the inverted index is cached: the candidate
+    // self-join consumes it TWICE, and when the build side is small
+    // enough to broadcast there is no shared Exchange for ReusedExchange
+    // to dedup — without the cache the explode + df-cap join runs once per
+    // side (r16 opt: measured 2× the index-build work in the q14/jacc06
+    // plans). In shuffle-join mode the cache costs one materialization and
+    // the sides scan it, the same I/O the reused Exchange would have paid.
+    jaccardScored(collectedSets(sets).map { case Seq(ys) =>
+        selfScanCount(sets, ys, DocFreq(ys), SelfJaccard, threshold, maxDocFreq,
+          "id_a", "sz_a", "id_b", "sz_b")
+      }.getOrElse(plainPairsFromIndex(
+        graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq)), threshold)),
+      "id_a", "id_b", threshold)
   }
 
-  /** The plain inverted-index candidate count ([[scanCount]] below the
-    * broadcast threshold, the index self-join + count aggregate above it)
-    * + count-based Jaccard, shared by [[ngramJaccardPairs]] and the
-    * adaptive dispatcher.
+  /** Count-based Jaccard over counted pairs `(a, sz_a, b, sz_b, inter)`,
+    * kept at `>= threshold`. */
+  private def jaccardScored(counted: DataFrame, a: String, b: String,
+      threshold: Double): DataFrame =
+    counted.select(col(a), col(b),
+        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+          .as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
+  /** The plain inverted-index self-join + pair count aggregate, the
+    * candidate count of [[ngramJaccardPairs]] and the adaptive dispatcher
+    * above the [[scanCount]] bound.
     *
     * MEASURED REJECTIONS (r17, VERDICT item 3 — do not re-churn):
     * one-pass grouped-explode candidate generation (groupBy(h) →
@@ -477,18 +543,12 @@ object Dedup {
     * enumeration is, and SHJ adds per-partition hash-table builds over
     * the same volume. The two-sided equi-join with the shared Exchange
     * is the right shape at every measured scale. */
-  private def plainPairsFromIndex(sets: DataFrame, inv: DataFrame,
-      threshold: Double): DataFrame =
-    scanCount(sets, inv, SelfJaccard, threshold, "id_a", "sz_a", "id_b", "sz_b")
-      .getOrElse(inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
-          col("x.id") < col("y.id") && sizeFilter(threshold))
-        .groupBy(col("x.id").as("id_a"), col("x.sz").as("sz_a"),
-          col("y.id").as("id_b"), col("y.sz").as("sz_b"))
-        .agg(count(lit(1)).as("inter")))
-      .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+  private def plainPairsFromIndex(inv: DataFrame, threshold: Double): DataFrame =
+    inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
+        col("x.id") < col("y.id") && sizeFilter(threshold))
+      .groupBy(col("x.id").as("id_a"), col("x.sz").as("sz_a"),
+        col("y.id").as("id_b"), col("y.sz").as("sz_b"))
+      .agg(count(lit(1)).as("inter"))
 
   /**
    * Document-frequency concentration of an inverted index:
@@ -526,29 +586,48 @@ object Dedup {
    * cost-based optimizer rule, decided from data statistics rather
    * than guessed.
    *
-   * EAGER at construction: the concentration probe executes a Spark
-   * aggregation when this method is CALLED, not when the returned
-   * DataFrame is acted on (the dimensionAudit/bm25 guard pattern).
-   * graft.Bench times construction + execution together, so the probe
-   * cost IS inside the benchmarked region.
+   * Below the [[scanCount]] bound the concentration is read off the
+   * collected sets' df on the driver ([[DocFreq.concentration]],
+   * bit-identical to the aggregate) and the plain branch is ScanCount;
+   * only the prefix branch builds the inverted index. Above it, both
+   * run over the cached index as before.
+   *
+   * EAGER at construction: the concentration probe executes a Spark job
+   * when this method is CALLED, not when the returned DataFrame is acted
+   * on (the dimensionAudit/bm25 guard pattern). graft.Bench times
+   * construction + execution together, so the probe cost IS inside the
+   * benchmarked region.
    */
+  def ngramJaccardPairsAdaptive(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text", n: Int = 3, threshold: Double = 0.6,
+      maxDocFreq: Int = 10000, minPrefixConcentration: Double = 4.0): DataFrame = {
+    val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
+    val onDriver = collectedSets(sets).map { case Seq(ys) => (ys, DocFreq(ys)) }
+    lazy val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
+    val concentration = onDriver.fold(dfConcentration(inv))(_._2.concentration(maxDocFreq))
+    if (concentration >= minPrefixConcentration) prefixPairsFromIndex(inv, threshold)
+    else jaccardScored(onDriver.fold(plainPairsFromIndex(inv, threshold)) { case (ys, df) =>
+        selfScanCount(sets, ys, df, SelfJaccard, threshold, maxDocFreq,
+          "id_a", "sz_a", "id_b", "sz_b")
+      }, "id_a", "id_b", threshold)
+  }
+
   /** Spec probe: the concentration the adaptive dispatcher would
-    * measure for this corpus (same shingling + df cap). */
+    * measure for this corpus above the [[scanCount]] bound (same
+    * shingling + df cap, the Spark aggregate). */
   private[graft] def dfConcentrationOf(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
       maxDocFreq: Int = 10000): Double =
     dfConcentration(invertedIndex(withShingleSets(docs, idCol, textCol, n),
       maxDocFreq))
 
-  def ngramJaccardPairsAdaptive(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3, threshold: Double = 0.6,
-      maxDocFreq: Int = 10000, minPrefixConcentration: Double = 4.0): DataFrame = {
-    val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
-    if (dfConcentration(inv) >= minPrefixConcentration)
-      prefixPairsFromIndex(inv, threshold)
-    else plainPairsFromIndex(sets, inv, threshold)
-  }
+  /** Spec probe: the concentration the adaptive dispatcher reads on the
+    * driver below the [[scanCount]] bound, `None` above it. */
+  private[graft] def driverDfConcentrationOf(docs: DataFrame,
+      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
+      maxDocFreq: Int = 10000): Option[Double] =
+    collectedSets(withShingleSets(docs, idCol, textCol, n))
+      .map { case Seq(ys) => DocFreq(ys).concentration(maxDocFreq) }
 
   /**
    * Dedup provenance — the audit trail a governance review asks for:
@@ -746,8 +825,9 @@ object Dedup {
    * EXISTING side's; candidates are bounded by shared-shingle frequency
    * products and the doc-frequency cap (computed over the union, so a
    * shingle ubiquitous in the existing corpus is capped even if rare in
-   * the batch). Below the broadcast threshold the EXISTING side's index
-   * is the [[scanCount]] postings table and the new sets stream past it.
+   * the batch). Below the [[scanCount]] bound both sides' sets are
+   * collected, the df is counted over both, the EXISTING side's sets
+   * become the postings table and the new sets stream past it.
    */
   def crossCorpusPairs(newDocs: DataFrame, oldDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
@@ -759,23 +839,24 @@ object Dedup {
     // consumers here want different projections of the sets.
     val newSets = withShingleSets(newDocs, idCol, textCol, n)
     val oldSets = withShingleSets(oldDocs, idCol, textCol, n)
-    val df = newSets.select(explode(col("hs")).as("h"))
-      .union(oldSets.select(explode(col("hs")).as("h")))
-      .groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDocFreq).select("h")
-    def index(sets: DataFrame) =
-      sets.select(col("id"), col("sz"), explode(col("hs")).as("h")).join(df, "h")
-    scanCount(newSets, index(oldSets), CrossJaccard, threshold,
+    val counted = collectedSets(newSets, oldSets).map { case Seq(news, olds) =>
+      scanCount(newSets, Postings(olds, DocFreq(olds ++ news), maxDocFreq, keepNullIds = true),
+        oldSets.schema("id").dataType, CrossJaccard, threshold,
         "new_id", "sz_a", "old_id", "sz_b")
-      .getOrElse(index(newSets).as("x").join(index(oldSets).as("y"),
+    }.getOrElse {
+      val df = newSets.select(explode(col("hs")).as("h"))
+        .union(oldSets.select(explode(col("hs")).as("h")))
+        .groupBy("h").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= maxDocFreq).select("h")
+      def index(sets: DataFrame) =
+        sets.select(col("id"), col("sz"), explode(col("hs")).as("h")).join(df, "h")
+      index(newSets).as("x").join(index(oldSets).as("y"),
           col("x.h") === col("y.h") && sizeFilter(threshold))
         .groupBy(col("x.id").as("new_id"), col("x.sz").as("sz_a"),
           col("y.id").as("old_id"), col("y.sz").as("sz_b"))
-        .agg(count(lit(1)).as("inter")))
-      .select(col("new_id"), col("old_id"),
-        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+        .agg(count(lit(1)).as("inter"))
+    }
+    jaccardScored(counted, "new_id", "old_id", threshold)
   }
 
   /**
@@ -830,16 +911,13 @@ object Dedup {
     // the index), matching q14's denominator exactly.
     val capped = graft.SparkUtil.trackCache(
       inv.groupBy(col("id"), col("sz")).agg(collect_list(col("h")).as("hs")))
-    candidates
+    jaccardScored(candidates
       .join(capped.select(col("id"), col("hs").as("hs_a"), col("sz").as("sz_a")),
         col("id_a") === col("id")).drop("id")
       .join(capped.select(col("id"), col("hs").as("hs_b"), col("sz").as("sz_b")),
         col("id_b") === col("id")).drop("id")
-      .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b")))),
+      "id_a", "id_b", threshold)
   }
 
   /**
@@ -1028,14 +1106,18 @@ object Dedup {
       textCol: String = "text", n: Int = 3, threshold: Double = 0.8,
       maxDocFreq: Int = 10000): DataFrame = {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    // cached for the same reasons as [[ngramJaccardPairs]]
-    val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
-    scanCount(sets, inv, Containment, threshold, "inner_id", "sz_in", "outer_id", "sz_out")
-      .getOrElse(inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
-          col("x.id") =!= col("y.id") && sizeFilter(threshold, containment = true))
-        .groupBy(col("x.id").as("inner_id"), col("x.sz").as("sz_in"),
-          col("y.id").as("outer_id"))
-        .agg(count(lit(1)).as("inter")))
+    collectedSets(sets).map { case Seq(ys) =>
+        selfScanCount(sets, ys, DocFreq(ys), Containment, threshold, maxDocFreq,
+          "inner_id", "sz_in", "outer_id", "sz_out")
+      }.getOrElse {
+        // cached above the bound for the same reasons as [[ngramJaccardPairs]]
+        val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
+        inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
+            col("x.id") =!= col("y.id") && sizeFilter(threshold, containment = true))
+          .groupBy(col("x.id").as("inner_id"), col("x.sz").as("sz_in"),
+            col("y.id").as("outer_id"))
+          .agg(count(lit(1)).as("inter"))
+      }
       .select(col("inner_id"), col("outer_id"),
         (col("inter").cast("double") / col("sz_in").cast("double"))
           .as("containment"))

@@ -16,7 +16,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("native rolling hash == HOF rolling hash on the corpus") {
     val d = docs.select(
       TextFunctions.rollingHash(col("text")).as("a"),
-      TextFunctions.rollingHashHof(col("text")).as("b"))
+      HofTwins.rollingHashHof(col("text")).as("b"))
     assert(d.filter(col("a") =!= col("b")).count() == 0)
   }
 
@@ -24,7 +24,7 @@ class HashExpressionsSpec extends SparkSpec {
       "and on multi-byte/short edge cases") {
     val d = docs.filter(length(col("text")) >= 3).select(
       TextFunctions.charTrigrams(col("text")).as("a"),
-      TextFunctions.charTrigramsHof(col("text")).as("b"))
+      HofTwins.charTrigramsHof(col("text")).as("b"))
     assert(d.filter(col("a") =!= col("b")).count() == 0)
     val spark0 = spark
     import spark0.implicits._
@@ -34,7 +34,7 @@ class HashExpressionsSpec extends SparkSpec {
       .toDF("text").filter(length(col("text")) >= 3)
     val e = edge.select(
       TextFunctions.charTrigrams(col("text")).as("a"),
-      TextFunctions.charTrigramsHof(col("text")).as("b"))
+      HofTwins.charTrigramsHof(col("text")).as("b"))
     assert(e.filter(col("a") =!= col("b")).count() == 0)
     // sub-3-char strings yield an empty array natively (callers filter
     // them out; the HOF spelling would descend through sequence(1, 0))
@@ -47,7 +47,7 @@ class HashExpressionsSpec extends SparkSpec {
     val toks = split(col("text"), " ")
     val d = docs.select(
       TextFunctions.simhash(toks).as("a"),
-      TextFunctions.simhashHof(toks).as("b"))
+      HofTwins.simhashHof(toks).as("b"))
     assert(d.filter(col("a") =!= col("b")).count() == 0)
   }
 
@@ -55,7 +55,7 @@ class HashExpressionsSpec extends SparkSpec {
     val toks = split(col("text"), " ")
     val d = docs.select(
       TextFunctions.simhash64(toks).as("a"),
-      TextFunctions.simhash64Hof(toks).as("b"),
+      HofTwins.simhash64Hof(toks).as("b"),
       TextFunctions.simhash(toks).as("sh32"))
     assert(d.filter(col("a") =!= col("b")).count() == 0)
     // same Mix drives bits 0..31, so the 64-bit hash's low half IS the
@@ -71,21 +71,21 @@ class HashExpressionsSpec extends SparkSpec {
     val hs = TextFunctions.shingleHashes(col("text"), 3)
     val d = docs.filter(size(split(col("text"), " ")) >= 3).select(
       TextFunctions.minhashSignature(hs, 32).as("a"),
-      TextFunctions.minhashSignatureHof(hs, 32).as("b"))
+      HofTwins.minhashSignatureHof(hs, 32).as("b"))
     assert(d.filter(not(col("a") <=> col("b"))).count() == 0)
   }
 
   test("native shingle hashes == HOF shingle hashes on the corpus (incl. order)") {
     val d = docs.select(
       TextFunctions.shingleHashes(col("text"), 3).as("a"),
-      TextFunctions.shingleHashesHof(col("text"), 3).as("b"))
+      HofTwins.shingleHashesHof(col("text"), 3).as("b"))
     assert(d.filter(not(col("a") <=> col("b"))).count() == 0)
     // short-doc edge: fewer tokens than n → empty array, not null/crash
     val spark0 = spark
     import spark0.implicits._
     val short = Seq("one two", "a").toDF("text")
       .select(TextFunctions.shingleHashes(col("text"), 3).as("a"),
-        TextFunctions.shingleHashesHof(col("text"), 3).as("b"))
+        HofTwins.shingleHashesHof(col("text"), 3).as("b"))
       .collect()
     short.foreach { r =>
       assert(r.getSeq[Long](0).isEmpty && r.getSeq[Long](1).isEmpty)
@@ -95,13 +95,13 @@ class HashExpressionsSpec extends SparkSpec {
   test("native multiset shingle hashes == HOF transform (duplicates, order)") {
     val d = docs.select(
       TextFunctions.shingleHashesAll(col("text"), 3).as("a"),
-      TextFunctions.shingleHashesAllHof(col("text"), 3).as("b"))
+      HofTwins.shingleHashesAllHof(col("text"), 3).as("b"))
     assert(d.filter(not(col("a") <=> col("b"))).count() == 0)
     val spark0 = spark
     import spark0.implicits._
     val edge = Seq("one two", "a", "x x x x").toDF("text")
       .select(TextFunctions.shingleHashesAll(col("text"), 3).as("a"),
-        TextFunctions.shingleHashesAllHof(col("text"), 3).as("b"))
+        HofTwins.shingleHashesAllHof(col("text"), 3).as("b"))
       .collect()
     edge.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
     // the repeated-token doc keeps BOTH identical shingles (multiset)
@@ -119,7 +119,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("native token mode count == HOF distinct-filter max on the corpus") {
     val d = docs.select(
       TextFunctions.topTokenCount(col("text")).as("a"),
-      TextFunctions.topTokenCountHof(split(col("text"), " ")).as("b"))
+      HofTwins.topTokenCountHof(split(col("text"), " ")).as("b"))
     assert(d.filter(col("a") =!= col("b")).count() == 0)
   }
 
@@ -137,7 +137,7 @@ class HashExpressionsSpec extends SparkSpec {
     TextFunctions.LangMarkers.foreach { case (_, markers) =>
       val d = docs.select(
         TextFunctions.markerCount(col("text"), markers).as("a"),
-        TextFunctions.markerCountHof(split(col("text"), " "), markers).as("b"))
+        HofTwins.markerCountHof(split(col("text"), " "), markers).as("b"))
       assert(d.filter(col("a") =!= col("b")).count() == 0)
     }
   }
@@ -146,7 +146,7 @@ class HashExpressionsSpec extends SparkSpec {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val d = emb.select(
       VectorFunctions.lshBucket(col("embedding"), 64, 8).as("a"),
-      VectorFunctions.lshBucketHof(col("embedding"), 64, 8).as("b"))
+      HofTwins.lshBucketHof(col("embedding"), 64, 8).as("b"))
     assert(d.filter(col("a") =!= col("b")).count() == 0)
   }
 

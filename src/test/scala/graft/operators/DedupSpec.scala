@@ -837,6 +837,41 @@ class DedupSpec extends SparkSpec {
     graft.SparkUtil.unpersistTrackedCaches()
   }
 
+  test("adaptive Jaccard: the driver-side concentration equals the aggregate " +
+      "exactly, and both paths take the same branch") {
+    val uniform = docs((0 until 60).map(i => (i.toLong,
+      s"u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f u${i}g")): _*)
+    val zipf = docs((0 until 40).map(i => (i.toLong,
+      s"common shared header words here t${i}a t${i}b t${i}c t${i}d t${i}e")): _*)
+    val conf = spark.conf
+    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    def branch(corpus: org.apache.spark.sql.DataFrame, cap: Int): String = {
+      val p = Dedup.ngramJaccardPairsAdaptive(corpus, threshold = 0.4, maxDocFreq = cap)
+        .queryExecution.executedPlan.toString
+      graft.SparkUtil.unpersistTrackedCaches()
+      if (p.contains("array_intersect")) "prefix" else "plain"
+    }
+    try {
+      // the zipfian header shingles (df 40) stay at a cap of 40, go at 10
+      for ((corpus, name) <- Seq(uniform -> "uniform", zipf -> "zipf"); cap <- Seq(10000, 40, 10)) {
+        conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        val onDriver = Dedup.driverDfConcentrationOf(corpus, maxDocFreq = cap)
+        val aggregate = Dedup.dfConcentrationOf(corpus, maxDocFreq = cap)
+        assert(onDriver.contains(aggregate), s"$name, cap $cap: $onDriver vs $aggregate")
+        val want = if (aggregate >= 4.0) "prefix" else "plain"
+        val driverBranch = branch(corpus, cap)
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert(Dedup.driverDfConcentrationOf(corpus, maxDocFreq = cap).isEmpty)
+        assert(Seq(driverBranch, branch(corpus, cap)) == Seq(want, want), s"$name, cap $cap")
+      }
+      // both branches are taken
+      assert(Dedup.dfConcentrationOf(uniform) < 4.0 && Dedup.dfConcentrationOf(zipf) >= 4.0)
+    } finally saved match {
+      case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+      case None => conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("adaptive Jaccard: the real documents fixture measures near-uniform (plain path)") {
     val real = spark.read.parquet(s"${sf()}/documents.parquet")
     val c = Dedup.dfConcentrationOf(real)
@@ -939,7 +974,7 @@ class DedupSpec extends SparkSpec {
 
   test("size filter is exact: all four pair operators equal an unfiltered " +
       "reference on a spread-size corpus, with and without the df cap binding") {
-    for ((seed, t) <- Seq(7 -> 0.5, 19 -> 0.8, 31 -> 0.0); maxDocFreq <- Seq(10000, 10)) {
+    for ((seed, t) <- Seq(7 -> 0.5, 19 -> 0.8, 31 -> 0.0); maxDocFreq <- Seq(10000, 10, 2, 1)) {
       val corpus = spreadCorpus(seed)
       val (newSide, oldSide) = corpus.partition(_._1 % 2 == 0)
       // reference: every pair sharing a capped shingle, scored the way the
@@ -956,12 +991,16 @@ class DedupSpec extends SparkSpec {
       val (Seq(n, o), _) = cappedSets(Seq(newSide, oldSide), maxDocFreq)
       val cross = (for (a <- n.keys; b <- o.keys; i = (n(a) & o(b)).size
           if i > 0 && jac(i, a, b) >= t) yield (a, b, jac(i, a, b))).toSet
-      assert(jaccard.nonEmpty && containment.nonEmpty && cross.nonEmpty)
+      // a cap of 1 leaves no shingle two docs share; a cap of 2 keeps
+      // pairs over the threshold only at t = 0
+      val pairsLeft = maxDocFreq > 2 || (maxDocFreq == 2 && t == 0.0)
+      if (maxDocFreq == 1) assert(jaccard.isEmpty && containment.isEmpty && cross.isEmpty)
+      if (pairsLeft) assert(jaccard.nonEmpty && containment.nonEmpty && cross.nonEmpty)
       // the size filter has candidates to drop (none at t = 0) ...
       assert(t == 0.0 || ids.exists(a => ids.exists(b => inter(a, b) > 0 &&
-        math.min(sz(a), sz(b)).toDouble / math.max(sz(a), sz(b)) < t)))
+        math.min(sz(a), sz(b)).toDouble / math.max(sz(a), sz(b)) < t)) || maxDocFreq == 1)
       // ... and the binding cap shrinks some candidate's intersection
-      if (maxDocFreq == 10) {
+      if (maxDocFreq == 10 || maxDocFreq == 2) {
         val (Seq(full), _) = cappedSets(Seq(corpus), 10000)
         assert(ids.exists(a => ids.exists(b =>
           inter(a, b) > 0 && inter(a, b) < (full(a) & full(b)).size)))
@@ -985,7 +1024,7 @@ class DedupSpec extends SparkSpec {
           "cross" -> (() => Dedup.crossCorpusPairs(docs(newSide: _*), docs(oldSide: _*),
             threshold = t, maxDocFreq = maxDocFreq)))) {
         val Seq(scan, join) = onBothPaths(q())
-        assert(scan.nonEmpty && scan == join, s"$name, $ctx")
+        assert((scan.nonEmpty || !pairsLeft) && scan == join, s"$name, $ctx")
       }
     }
   }
