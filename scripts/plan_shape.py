@@ -1,0 +1,147 @@
+#!/usr/bin/env python3
+"""Compare the plan shapes of two `graft.tools.Explain` dumps.
+
+Each dump is split at its `===== <query> =====` headers and every query's
+formatted physical plan is reduced to its operator tree plus each
+operator's detail lines, with what differs between two runs of one plan
+dropped: expression ids (`#123L`), `plan_id`s, operator numbers, runtime
+`Statistics(...)`, RDD ids, lambda class names, source line numbers and
+the checkout directory in the paths of artifacts under `target/`.
+The two reductions are diffed query by query; any difference (including a
+query present in one dump only) prints a unified diff and exits 1.
+
+Usage: plan_shape.py [--tree] [--only PREFIX,...] DUMP_A DUMP_B
+       plan_shape.py --self-check DUMP
+
+  --tree        compare the operator trees only, not the detail lines
+  --only        compare only the queries whose names start with a prefix
+  --self-check  check the script on DUMP: DUMP against itself must give no
+                difference, and DUMP with one Exchange removed must differ
+
+Make a dump with `runMain graft.tools.Explain` (one sf dir, one setting).
+"""
+import difflib
+import re
+import sys
+
+HEADER = re.compile(r"^===== (\S+) =====$")
+NORMALIZE = [
+    (re.compile(r"#\d+L?"), ""),                      # expression ids
+    (re.compile(r"\s*\[plan_id=\d+\]"), ""),
+    (re.compile(r",? ?Statistics\([^)]*\)"), ""),     # runtime sizes
+    (re.compile(r"\$\$Lambda\$?[^@\s,]*@[0-9a-f]+"), "$$Lambda"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"\.scala:\d+"), ".scala"),
+    (re.compile(r"file:\S*?/target/"), "file:<checkout>/target/"),  # artifacts
+    (re.compile(r"(operator id:?|operator id =) \d+"), r"\1"),
+    (re.compile(r"^\(\d+\) "), ""),                   # detail headers
+    (re.compile(r"(\S) \(\d+\)"), r"\1"),             # tree operator numbers
+]
+
+
+def split_queries(text):
+    queries, name, lines = {}, None, []
+    for line in text.splitlines():
+        m = HEADER.match(line)
+        if m:
+            if name is not None:
+                queries[name] = lines
+            name, lines = m.group(1), []
+        elif name is not None:
+            lines.append(line)
+    if name is not None:
+        queries[name] = lines
+    return queries
+
+
+def reduce_plan(lines, tree_only):
+    out = []
+    in_tree = True
+    for line in lines:
+        if in_tree and line.startswith("(") and re.match(r"^\(\d+\) ", line):
+            in_tree = False
+        if not in_tree and tree_only:
+            break
+        for pat, rep in NORMALIZE:
+            line = pat.sub(rep, line)
+        line = line.rstrip()
+        if line:
+            out.append(line)
+    return out
+
+
+def compare(text_a, text_b, tree_only=False, only=(), out=sys.stdout):
+    """Returns the names of the queries whose reduced plans differ."""
+    a, b = split_queries(text_a), split_queries(text_b)
+    names = sorted(set(a) | set(b))
+    if only:
+        names = [n for n in names if any(n.startswith(p) for p in only)]
+    differ = []
+    for n in names:
+        ra = reduce_plan(a[n], tree_only) if n in a else ["<missing>"]
+        rb = reduce_plan(b[n], tree_only) if n in b else ["<missing>"]
+        if ra != rb:
+            differ.append(n)
+            out.write("".join(difflib.unified_diff(
+                [x + "\n" for x in ra], [x + "\n" for x in rb],
+                fromfile=f"a/{n}", tofile=f"b/{n}")))
+    return differ, len(names)
+
+
+def self_check(text):
+    class Sink:
+        def write(self, _):
+            pass
+    same, n = compare(text, text, out=Sink())
+    lines = text.splitlines()
+    hit = next((i for i, l in enumerate(lines) if re.search(r"\+- Exchange \(\d+\)", l)), None)
+    if hit is None:
+        print("self-check: the dump holds no Exchange to remove")
+        return 1
+    cut = "\n".join(lines[:hit] + lines[hit + 1:])
+    cut_differ, _ = compare(text, cut, out=Sink())
+    ok = not same and len(cut_differ) == 1
+    print(f"self-check: {n} queries; against itself {len(same)} differ; "
+          f"with one Exchange removed {len(cut_differ)} differ ({', '.join(cut_differ)})"
+          f" -> {'ok' if ok else 'FAILED'}")
+    return 0 if ok else 1
+
+
+def usage():
+    return __doc__[__doc__.index("Usage:"):__doc__.index("Make a dump")].rstrip()
+
+
+def main(argv):
+    tree_only, only, check, paths = False, (), None, []
+    i = 0
+    while i < len(argv):
+        arg = argv[i]
+        if arg == "--tree":
+            tree_only = True
+        elif arg in ("--only", "--self-check") and i + 1 < len(argv):
+            if arg == "--only":
+                only = tuple(p for p in argv[i + 1].split(",") if p)
+            else:
+                check = argv[i + 1]
+            i += 1
+        elif arg.startswith("-"):
+            sys.exit(usage())
+        else:
+            paths.append(arg)
+        i += 1
+    if check is not None:
+        if paths or tree_only or only:
+            sys.exit(usage())
+        with open(check) as f:
+            return self_check(f.read())
+    if len(paths) != 2:
+        sys.exit(usage())
+    with open(paths[0]) as fa, open(paths[1]) as fb:
+        differ, n = compare(fa.read(), fb.read(), tree_only, only)
+    print(f"{n} queries compared, {len(differ)} differ" +
+          (": " + ", ".join(differ) if differ else ""))
+    return 1 if differ else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

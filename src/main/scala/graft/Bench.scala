@@ -160,23 +160,16 @@ object Bench {
     // failure instead of stalling the whole sweep.
     val warmup = envKnob("SPARK_GRAFT_BENCH_WARMUP", _.toIntOption, 0).getOrElse(1) > 0
     val timeoutSec = envKnob("SPARK_GRAFT_BENCH_TIMEOUT_SEC", _.toLongOption, 1L)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // Optional scan-split knobs for layout probes (BASELINE.md round-10
     // coda): the scale-probe replicas are tiny files, so demonstrating
     // "a 10×-bigger warehouse ships more splits and absorbs scan growth
     // with parallelism" needs maxPartitionBytes/openCost sized to the
     // probe files rather than to a real warehouse's GB-scale files.
     // Unset (the driver's per-round runs), Spark defaults apply.
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").foreach(v =>
-      builder.config("spark.sql.files.maxPartitionBytes", v))
-    sys.env.get("SPARK_GRAFT_OPEN_COST_BYTES").foreach(v =>
-      builder.config("spark.sql.files.openCostInBytes", v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus, settings = Seq(
+        "SPARK_GRAFT_MAX_PARTITION_BYTES" -> "spark.sql.files.maxPartitionBytes",
+        "SPARK_GRAFT_OPEN_COST_BYTES" -> "spark.sql.files.openCostInBytes")
+      .flatMap { case (env, key) => sys.env.get(env).map(key -> _) })
     // Sink into the `noop` format, not `count()`: count() lets Catalyst's
     // ColumnPruning delete every projected expression (a projection-only
     // query would be timed as a bare parquet scan). The noop sink fully

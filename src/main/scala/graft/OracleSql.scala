@@ -1350,8 +1350,8 @@ object OracleSql {
        |SELECT shard_id, size, CAST(before // $targetSize AS BIGINT) AS bin_id
        |FROM w""".stripMargin
 
-  /** Mirror of Dedup.crossSourceMatrix: the q14 pair CTE, source lookups
-    * on both sides, normalized-order rollup. */
+  /** Mirror of Dedup.crossSourceMatrixFromPairs over q14's pairs: the q14
+    * pair CTE, source lookups on both sides, normalized-order rollup. */
   def crossSourceMatrix(threshold: Double, maxDocFreq: Int,
       groupCol: String): String =
     s"""WITH p AS (${ngramJaccardPairs(threshold, maxDocFreq)})

@@ -34,8 +34,9 @@ import org.apache.spark.sql.graft.DatasetBridge
   */
 object Tables {
   /** Every table of a fixture dir, `events` first: [[loadEvents]] sets a
-    * parquet setting that is part of every table's cache key, so resolving
-    * it first resolves the others under the setting later loads see. */
+    * parquet setting that is part of every table's cache key, so in a
+    * session not built by [[Session]] (which sets it at start) resolving it
+    * first resolves the others under the setting later loads see. */
   val Fixture: Seq[String] = Seq("events", "region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "documents", "embeddings")
 
@@ -91,7 +92,8 @@ object Tables {
     * [PARQUET_TYPE_ILLEGAL] INT64 TIMESTAMP(NANOS) — unless read as long via
     * the legacy conf) and native microsecond TIMESTAMP without a timezone
     * (which Spark infers as TIMESTAMP_NTZ). Be schema-adaptive: enable the
-    * legacy nanos-as-long read (a no-op for non-nanos files), then normalize
+    * legacy nanos-as-long read (a no-op for non-nanos files; [[Session]]
+    * sessions have it on from the start, others get it here), then normalize
     * whatever `ts` arrives as to a plain TIMESTAMP — long nanos via integer
     * division (double math would lose precision above 2^53 ns), NTZ via a
     * cast (exact under the UTC session timezone all entry points set). */

@@ -19,7 +19,8 @@ import graft.functions.TextFunctions._
  *   - Near-dup operators never materialize the O(n²) pair space. Candidate
  *     generation is an inverted-index equi-join (shared shingle / LSH band
  *     bucket / SimHash pigeonhole block), i.e. a shuffle on the bucket key,
- *     and only bucket-colliding pairs are scored. A document-frequency cap
+ *     and only bucket-colliding pairs are scored. Every such join is one
+ *     `keyedPairs` call, its id predicate taken from a `PairKind`. A document-frequency cap
  *     on shingles (`maxDocFreq`) bounds the quadratic blowup of
  *     stop-shingles — the standard "drop ubiquitous features" guard.
  *   - All hashes are integer polynomial hashes (TextFunctions), so every
@@ -158,24 +159,26 @@ object Dedup {
       .filter(size(col("hs")) > 0)
       .withColumn("sz", size(col("hs")))
 
-  /** Inverted index (id, sz, shingle-hash) with ubiquitous shingles
-    * (document frequency > maxDocFreq) removed — mirrors the SQL oracle's
-    * HAVING cap. The set size rides along so downstream Jaccard math needs
-    * no join back to the sets (sz is functionally dependent on id). */
-  private def invertedIndex(sets: DataFrame, maxDocFreq: Int): DataFrame = {
-    val inv = sets.select(col("id"), col("sz"), explode(col("hs")).as("h"))
-    val rare = inv.groupBy("h").agg(count(lit(1)).as("df"))
+  /** Inverted index (id, sz, shingle-hash) of each of `sides`, with
+    * ubiquitous shingles (document frequency > maxDocFreq, counted over
+    * every side) removed — mirrors the SQL oracle's HAVING cap. The set
+    * size rides along so downstream Jaccard math needs no join back to the
+    * sets (sz is functionally dependent on id). */
+  private def invertedIndex(maxDocFreq: Int, sides: DataFrame*): Seq[DataFrame] = {
+    val invs = sides.map(_.select(col("id"), col("sz"), explode(col("hs")).as("h")))
+    val rare = invs.map(_.select("h")).reduce(_ union _)
+      .groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDocFreq).select("h")
-    inv.join(rare, "h")
+    invs.map(_.join(rare, "h"))
   }
 
   /**
    * Size (length) filter of the AllPairs/PPJoin set-similarity joins: a
-   * conjunct for the inverted-index self-joins over rows aliased `x` and
-   * `y`, so a pair whose set sizes alone rule it out is dropped inside the
-   * join, before the pair aggregate and its Exchange. Jaccard bounds
-   * `least(x.sz, y.sz) / greatest(x.sz, y.sz)`; directional containment
-   * (`x` inner, `y` outer) bounds `y.sz / x.sz`.
+   * conjunct for the inverted-index joins over the set sizes `x` and `y`
+   * of the two sides ([[keyedPairs]]), so a pair whose set sizes alone rule
+   * it out is dropped inside the join, before the pair aggregate and its
+   * Exchange. Jaccard bounds `least(x, y) / greatest(x, y)`; directional
+   * containment (`x` inner, `y` outer) bounds `y / x`.
    *
    * Exact, so the output rows are unchanged: `sz` is the FULL set size and
    * the intersection counts only shingles under the df cap, so
@@ -186,10 +189,9 @@ object Dedup {
    * this division form only; `min >= t * max` rounds the product instead
    * and is not the same predicate.
    */
-  private def sizeFilter(threshold: Double, containment: Boolean = false): Column = {
-    val (num, den) =
-      if (containment) (col("y.sz"), col("x.sz"))
-      else (least(col("x.sz"), col("y.sz")), greatest(col("x.sz"), col("y.sz")))
+  private def sizeFilter(x: Column, y: Column, threshold: Double,
+      containment: Boolean): Column = {
+    val (num, den) = if (containment) (y, x) else (least(x, y), greatest(x, y))
     num.cast("double") / den.cast("double") >= threshold
   }
 
@@ -200,15 +202,50 @@ object Dedup {
     if (containment) szY.toDouble / szX.toDouble >= threshold
     else math.min(szX, szY).toDouble / math.max(szX, szY).toDouble >= threshold
 
-  /** The pair predicate of an inverted-index join, `x` the streamed side:
-    * which id pairs it keeps and which [[sizeFilter]] applies. */
-  private sealed abstract class PairKind(val containment: Boolean) extends Serializable
-  /** Jaccard within one corpus: `x.id < y.id`. */
-  private case object SelfJaccard extends PairKind(false)
+  /** The pair predicate of a keyed pair join, `x` the streamed side: which
+    * id pairs it keeps, as [[ids]] for [[keyedPairs]] and as the matching
+    * loop of the [[Postings.pairs]] kernel, and which [[sizeFilter]]
+    * applies. */
+  private sealed abstract class PairKind(val containment: Boolean) extends Serializable {
+    /** The id predicate over the two sides' id columns. */
+    def ids(x: Column, y: Column): Column
+  }
+  /** Pairs within one corpus, each once: `x.id < y.id`. */
+  private case object Self extends PairKind(false) {
+    def ids(x: Column, y: Column): Column = x < y
+  }
   /** Directional containment, `x` inner and `y` outer: `x.id != y.id`. */
-  private case object Containment extends PairKind(true)
-  /** Jaccard between two corpora, `x` new and `y` old: every id pair. */
-  private case object CrossJaccard extends PairKind(false)
+  private case object Containment extends PairKind(true) {
+    def ids(x: Column, y: Column): Column = x =!= y
+  }
+  /** Pairs between two corpora, `x` new and `y` old: every id pair, null
+    * ids included. */
+  private case object Cross extends PairKind(false) {
+    def ids(x: Column, y: Column): Column = lit(true)
+  }
+
+  /** The key of the SimHash pigeonhole-block joins ([[blocksAt]]). */
+  private val BlockKey = Seq("block_id", "block_val")
+
+  /**
+   * The keyed pair enumeration of every candidate join here: `xs` (side
+   * `x`) equi-joined with `ys` (side `y`; the same frame for a self-join)
+   * on the `keys` columns, keeping the id pairs of `kind` over the `id`
+   * columns and, given `sizeRatio`, only pairs that pass the [[sizeFilter]]
+   * of `kind` over the `sz` columns. It returns `id_a, id_b` and each
+   * `carry` column `c` as `c_a` (from `x`) and `c_b` (from `y`).
+   */
+  private def keyedPairs(xs: DataFrame, ys: DataFrame, keys: Seq[String],
+      carry: Seq[String], kind: PairKind, id: String = "id",
+      sizeRatio: Option[Double] = None): DataFrame = {
+    def x(c: String) = col(s"x.$c")
+    def y(c: String) = col(s"y.$c")
+    val on = keys.map(k => x(k) === y(k)).reduce(_ && _) && kind.ids(x(id), y(id))
+    xs.as("x").join(ys.as("y"), sizeRatio.fold(on)(t =>
+        on && sizeFilter(x("sz"), y("sz"), t, kind.containment)))
+      .select((x(id).as("id_a") +: carry.map(c => x(c).as(s"${c}_a"))) ++
+        (y(id).as("id_b") +: carry.map(c => y(c).as(s"${c}_b"))): _*)
+  }
 
   private[operators] case class ShingleSet(id: java.lang.Long, sz: Int, hs: Array[Long])
   private[operators] case class PairCount(a: java.lang.Long, sz_a: Int,
@@ -290,11 +327,11 @@ object Dedup {
           val from = offsets(k)
           var p = offsets(k + 1) - 1
           kind match {
-            case SelfJaccard => // ids ascend within a run: stop at x.id
+            case Self => // ids ascend within a run: stop at x.id
               while (p >= from && ids(docs(p)) > xId) { hit(docs(p)); p -= 1 }
             case Containment =>
               while (p >= from) { if (ids(docs(p)) != xId) hit(docs(p)); p -= 1 }
-            case CrossJaccard =>
+            case Cross =>
               while (p >= from) { hit(docs(p)); p -= 1 }
           }
         }
@@ -419,16 +456,16 @@ object Dedup {
    * on the driver from its collected sets ([[collectedSets]]), is
    * broadcast; each task streams `xSets` `(id, sz, hs)` and, per document,
    * counts every `y` posting of its shingles in one dense array, resetting
-   * only the touched entries. It returns `(a, szA, b, szB, inter)`, one row
-   * per pair of `kind` that shares a posting and passes [[sizeFilter]]:
-   * the rows the join + aggregate would give, so the caller's score and
-   * threshold stay in Catalyst.
+   * only the touched entries. It returns `(id_a, sz_a, id_b, sz_b, inter)`,
+   * one row per pair of `kind` that shares a posting and passes
+   * [[sizeFilter]]: the rows the join + aggregate would give, so the
+   * caller's score and threshold stay in Catalyst.
    *
    * Exact: the table is an inverted index whose run length is a key's
    * document frequency, so the cap is applied on the driver to the same
    * counts the df-cap aggregate reads: df is counted over every posting,
    * null ids included (and across corpora over both sides), before the
-   * runs over `maxDocFreq` are dropped and, unless [[CrossJaccard]], the
+   * runs over `maxDocFreq` are dropped and, unless [[Cross]], the
    * null-id sets. Only shingles under the cap have postings, so `inter` is
    * the capped count the join counts; `sz` is the full set size; the
    * flattened sets are the same `(h, id, sz)` multiset the index explode
@@ -445,8 +482,7 @@ object Dedup {
    * the plan.
    */
   private def scanCount(xSets: DataFrame, table: Postings, yIdType: DataType,
-      kind: PairKind, threshold: Double, a: String, szA: String, b: String,
-      szB: String): DataFrame = {
+      kind: PairKind, threshold: Double): DataFrame = {
     val xIdType = xSets.schema("id").dataType
     val spark = xSets.sparkSession
     val bc = spark.sparkContext.broadcast(table)
@@ -458,21 +494,81 @@ object Dedup {
         val counts = new Array[Int](p.docCount)
         val touched = new Array[Int](p.docCount)
         docs.flatMap { x =>
-          if (x.id == null && kind != CrossJaccard) Iterator.empty
+          if (x.id == null && kind != Cross) Iterator.empty
           else p.pairs(x, kind, threshold, counts, touched)
         }
       }
-      .select(col("a").cast(xIdType).as(a), col("sz_a").as(szA),
-        col("b").cast(yIdType).as(b), col("sz_b").as(szB), col("inter"))
+      .select(col("a").cast(xIdType).as("id_a"), col("sz_a"),
+        col("b").cast(yIdType).as("id_b"), col("sz_b"), col("inter"))
   }
 
-  /** [[scanCount]] of one corpus against itself: `ys` are its collected
-    * `sets` and `df` their document frequencies. */
-  private def selfScanCount(sets: DataFrame, ys: Array[ShingleSet], df: DocFreq,
-      kind: PairKind, threshold: Double, maxDocFreq: Int, a: String, szA: String,
-      b: String, szB: String): DataFrame =
-    scanCount(sets, Postings(ys, df, maxDocFreq, keepNullIds = false),
-      sets.schema("id").dataType, kind, threshold, a, szA, b, szB)
+  /**
+   * The candidate counter of the exact shingle family: the pairs of the
+   * shingle sets `xs` against `ys` (the same frame for one corpus) that
+   * share a shingle under the df cap, counted once by [[scanCount]] or by
+   * the capped index join, whichever applies. The choice is made here
+   * only, when the counter is built: [[collectedSets]] collects every
+   * side's sets (EAGER) or declines.
+   *
+   * The df cap is read over every side, from the collected sets or by
+   * [[invertedIndex]]; [[concentration]] reads the same df.
+   */
+  private final class ShinglePairs(xs: DataFrame, ys: DataFrame, maxDocFreq: Int) {
+    private val sides = if (xs eq ys) Seq(xs) else Seq(xs, ys)
+    /** `ys`' collected sets and the df of every side's, while they fit. */
+    private val collected = collectedSets(sides: _*)
+      .map(sets => (sets.last, DocFreq(sets.reduce(_ ++ _))))
+
+    /** The capped index of each side. For one corpus it is cached: the
+      * candidate self-join consumes it TWICE, and when the build side is
+      * small enough to broadcast there is no shared Exchange for
+      * ReusedExchange to dedup — without the cache the explode + df-cap
+      * join runs once per side (r16 opt: measured 2× the index-build work
+      * in the q14/jacc06 plans). In shuffle-join mode the cache costs one
+      * materialization and the sides scan it, the same I/O the reused
+      * Exchange would have paid. Built only when read. */
+    lazy val index: Seq[DataFrame] = {
+      val inv = invertedIndex(maxDocFreq, sides: _*)
+      if (sides.size == 1) inv.map(graft.SparkUtil.trackCache) else inv
+    }
+
+    /** [[dfConcentration]] of the capped index, read off the collected
+      * df when there is one ([[DocFreq.concentration]], bit-identical). */
+    def concentration: Double =
+      collected.fold(dfConcentration(index.head))(_._2.concentration(maxDocFreq))
+
+    /** `(id_a, sz_a, id_b, sz_b, inter)` for every pair of `kind` that
+      * shares a capped shingle and passes [[sizeFilter]] at `threshold`.
+      * The join path leaves `sz_b` out for [[Containment]], which is scored
+      * by the inner size alone: one group key less in the pair aggregate. */
+    def counted(kind: PairKind, threshold: Double): DataFrame = collected match {
+      case Some((ySets, df)) =>
+        scanCount(xs, Postings(ySets, df, maxDocFreq, keepNullIds = kind == Cross),
+          ys.schema("id").dataType, kind, threshold)
+      case None =>
+        // MEASURED REJECTIONS (r17, VERDICT item 3 — do not re-churn):
+        // one-pass grouped-explode candidate generation (groupBy(h) →
+        // collect_list(struct(id, sz)) → two pipelined explodes with the
+        // id < id cut — same pairs, index consumed once) measured q14
+        // matched A/B: sf0.1 wash, 10× replica −15%, but 100× replica
+        // 18.8 → 22.8 s (+21%): collect_list is ObjectHashAggregate, which
+        // falls back to SORT-based aggregation past
+        // spark.sql.objectHashAggregate.sortBased.fallbackThreshold (128)
+        // in-memory keys — at scale the "sort-free" path degenerates into
+        // the very sort it removes, plus per-bucket array building. A
+        // shuffle_hash hint on the probe side (kill the SMJ sorts, keep the
+        // join) also measured worse at 100× (20.2 vs 18.8 s): the sort of
+        // narrow (h, id, sz) rows is not the bottleneck, the candidate
+        // enumeration is, and SHJ adds per-partition hash-table builds over
+        // the same volume. The two-sided equi-join with the shared Exchange
+        // is the right shape at every measured scale.
+        keyedPairs(index.head, index.last, Seq("h"), Seq("sz"), kind,
+            sizeRatio = Some(threshold))
+          .groupBy((Seq("id_a", "sz_a", "id_b") ++
+            (if (kind.containment) Nil else Seq("sz_b"))).map(col): _*)
+          .agg(count(lit(1)).as("inter"))
+    }
+  }
 
   /**
    * Exact n-gram Jaccard near-dup pairs: all (a, b), a < b, with
@@ -499,56 +595,18 @@ object Dedup {
       textCol: String = "text", n: Int = 3, threshold: Double = 0.6,
       maxDocFreq: Int = 10000): DataFrame = {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    // Above the bound the inverted index is cached: the candidate
-    // self-join consumes it TWICE, and when the build side is small
-    // enough to broadcast there is no shared Exchange for ReusedExchange
-    // to dedup — without the cache the explode + df-cap join runs once per
-    // side (r16 opt: measured 2× the index-build work in the q14/jacc06
-    // plans). In shuffle-join mode the cache costs one materialization and
-    // the sides scan it, the same I/O the reused Exchange would have paid.
-    jaccardScored(collectedSets(sets).map { case Seq(ys) =>
-        selfScanCount(sets, ys, DocFreq(ys), SelfJaccard, threshold, maxDocFreq,
-          "id_a", "sz_a", "id_b", "sz_b")
-      }.getOrElse(plainPairsFromIndex(
-        graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq)), threshold)),
-      "id_a", "id_b", threshold)
+    jaccardScored(new ShinglePairs(sets, sets, maxDocFreq).counted(Self, threshold),
+      threshold)
   }
 
-  /** Count-based Jaccard over counted pairs `(a, sz_a, b, sz_b, inter)`,
-    * kept at `>= threshold`. */
-  private def jaccardScored(counted: DataFrame, a: String, b: String,
-      threshold: Double): DataFrame =
-    counted.select(col(a), col(b),
+  /** Count-based Jaccard over counted pairs `(id_a, sz_a, id_b, sz_b,
+    * inter)`, kept at `>= threshold`, the ids named `a` and `b`. */
+  private def jaccardScored(counted: DataFrame, threshold: Double,
+      a: String = "id_a", b: String = "id_b"): DataFrame =
+    counted.select(col("id_a").as(a), col("id_b").as(b),
         (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-
-  /** The plain inverted-index self-join + pair count aggregate, the
-    * candidate count of [[ngramJaccardPairs]] and the adaptive dispatcher
-    * above the [[scanCount]] bound.
-    *
-    * MEASURED REJECTIONS (r17, VERDICT item 3 — do not re-churn):
-    * one-pass grouped-explode candidate generation (groupBy(h) →
-    * collect_list(struct(id, sz)) → two pipelined explodes with the
-    * id < id cut — same pairs, index consumed once) measured q14
-    * matched A/B: sf0.1 wash, 10× replica −15%, but 100× replica
-    * 18.8 → 22.8 s (+21%): collect_list is ObjectHashAggregate, which
-    * falls back to SORT-based aggregation past
-    * spark.sql.objectHashAggregate.sortBased.fallbackThreshold (128)
-    * in-memory keys — at scale the "sort-free" path degenerates into
-    * the very sort it removes, plus per-bucket array building. A
-    * shuffle_hash hint on the probe side (kill the SMJ sorts, keep the
-    * join) also measured worse at 100× (20.2 vs 18.8 s): the sort of
-    * narrow (h, id, sz) rows is not the bottleneck, the candidate
-    * enumeration is, and SHJ adds per-partition hash-table builds over
-    * the same volume. The two-sided equi-join with the shared Exchange
-    * is the right shape at every measured scale. */
-  private def plainPairsFromIndex(inv: DataFrame, threshold: Double): DataFrame =
-    inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
-        col("x.id") < col("y.id") && sizeFilter(threshold))
-      .groupBy(col("x.id").as("id_a"), col("x.sz").as("sz_a"),
-        col("y.id").as("id_b"), col("y.sz").as("sz_b"))
-      .agg(count(lit(1)).as("inter"))
 
   /**
    * Document-frequency concentration of an inverted index:
@@ -575,9 +633,9 @@ object Dedup {
    * Exact n-gram Jaccard pairs with an ADAPTIVE candidate strategy:
    * measure the shingle-df concentration (one bounded pre-agg over the
    * shared inverted index) and pick plain inverted-index
-   * ([[ngramJaccardPairs]]'s join) on near-uniform corpora vs PPJoin
-   * prefix filtering ([[ngramJaccardPairsPrefix]]'s) on heavy-tailed
-   * ones. The fixture corpus's tiny near-uniform shingle vocabulary is
+   * ([[ngramJaccardPairs]]'s count) on near-uniform corpora vs PPJoin
+   * prefix filtering ([[prefixPairsFromIndex]]) on heavy-tailed ones.
+   * The fixture corpus's tiny near-uniform shingle vocabulary is
    * exactly the pathology where the prefix machinery (df-rank window +
    * array-intersect verify) costs more than the candidates it saves;
    * web-scale shingle tables are Zipfian and flip the decision. Both
@@ -602,14 +660,10 @@ object Dedup {
       textCol: String = "text", n: Int = 3, threshold: Double = 0.6,
       maxDocFreq: Int = 10000, minPrefixConcentration: Double = 4.0): DataFrame = {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    val onDriver = collectedSets(sets).map { case Seq(ys) => (ys, DocFreq(ys)) }
-    lazy val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
-    val concentration = onDriver.fold(dfConcentration(inv))(_._2.concentration(maxDocFreq))
-    if (concentration >= minPrefixConcentration) prefixPairsFromIndex(inv, threshold)
-    else jaccardScored(onDriver.fold(plainPairsFromIndex(inv, threshold)) { case (ys, df) =>
-        selfScanCount(sets, ys, df, SelfJaccard, threshold, maxDocFreq,
-          "id_a", "sz_a", "id_b", "sz_b")
-      }, "id_a", "id_b", threshold)
+    val pairs = new ShinglePairs(sets, sets, maxDocFreq)
+    if (pairs.concentration >= minPrefixConcentration)
+      prefixPairsFromIndex(pairs.index.head, threshold)
+    else jaccardScored(pairs.counted(Self, threshold), threshold)
   }
 
   /** Spec probe: the concentration the adaptive dispatcher would
@@ -618,8 +672,8 @@ object Dedup {
   private[graft] def dfConcentrationOf(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
       maxDocFreq: Int = 10000): Double =
-    dfConcentration(invertedIndex(withShingleSets(docs, idCol, textCol, n),
-      maxDocFreq))
+    dfConcentration(invertedIndex(maxDocFreq,
+      withShingleSets(docs, idCol, textCol, n)).head)
 
   /** Spec probe: the concentration the adaptive dispatcher reads on the
     * driver below the [[scanCount]] bound, `None` above it. */
@@ -688,21 +742,14 @@ object Dedup {
    * one tiny hash agg over the |sources|² key space. Source order is
    * normalized (least/greatest) so each unordered source pair is one
    * cell.
+   *
+   * Takes a PRE-BUILT pair table with `id_a, id_b` (r16 opt, guide §5
+   * store-once/consume-many): callers that already materialized the
+   * canonical pair artifact pass it here instead of re-deriving the whole
+   * inverted-index pipeline per query. Identical output when the pair
+   * table equals the inline derivation (the Artifacts contract — both are
+   * deterministic).
    */
-  def crossSourceMatrix(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", groupCol: String = "source", n: Int = 3,
-      threshold: Double = 0.6, maxDocFreq: Int = 10000): DataFrame =
-    crossSourceMatrixFromPairs(
-      ngramJaccardPairs(docs, idCol, textCol, n, threshold, maxDocFreq),
-      docs, idCol, groupCol)
-
-  /** [[crossSourceMatrix]] over a PRE-BUILT near-dup pair table (r16
-    * opt, guide §5 store-once/consume-many): the rollup itself is two
-    * id-key joins + one tiny agg; callers that already materialized the
-    * canonical pair artifact pass it here instead of re-deriving the
-    * whole inverted-index pipeline per query. Identical output when the
-    * pair table equals the inline derivation (the Artifacts contract —
-    * both are deterministic). */
   def crossSourceMatrixFromPairs(pairTable: DataFrame, docs: DataFrame,
       idCol: String = "doc_id", groupCol: String = "source"): DataFrame = {
     val pairs = pairTable.select(col("id_a"), col("id_b"))
@@ -801,16 +848,14 @@ object Dedup {
     // unchanged.
     val pairSide = idx.filter(col("df") >= 2L)
       .select(col("id"), col("h"), col("v"), col("n2"))
-    pairSide.as("x").join(pairSide.as("y"),
-        col("x.h") === col("y.h") && col("x.id") < col("y.id"))
+    keyedPairs(pairSide, pairSide, Seq("h"), Seq("v", "n2"), Self)
       // n2 is functionally dependent on id, so the extra group keys
       // change no groups — they just ride the one pair shuffle
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        col("x.n2").as("__n2a"), col("y.n2").as("__n2b"))
-      .agg(sum(col("x.v") * col("y.v")).as("dot"))
+      .groupBy(col("id_a"), col("id_b"), col("n2_a"), col("n2_b"))
+      .agg(sum(col("v_a") * col("v_b")).as("dot"))
       .select(col("id_a"), col("id_b"),
         (col("dot").cast("double") /
-          (sqrt(col("__n2a").cast("double")) * sqrt(col("__n2b").cast("double"))))
+          (sqrt(col("n2_a").cast("double")) * sqrt(col("n2_b").cast("double"))))
           .as("cosine"))
       .filter(col("cosine") >= threshold)
   }
@@ -832,38 +877,25 @@ object Dedup {
   def crossCorpusPairs(newDocs: DataFrame, oldDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
       threshold: Double = 0.6, maxDocFreq: Int = 10000): DataFrame = {
-    // NOT cached (r16 opt, measured): each side feeds the df-cap union and
-    // that side's index probe, but caching both sides cost more in
-    // materialization barriers than the saved re-shingle (q50 1.46→2.21 s
-    // in matched focused runs) — unlike [[ngramJaccardPairs]], the two
-    // consumers here want different projections of the sets.
-    val newSets = withShingleSets(newDocs, idCol, textCol, n)
-    val oldSets = withShingleSets(oldDocs, idCol, textCol, n)
-    val counted = collectedSets(newSets, oldSets).map { case Seq(news, olds) =>
-      scanCount(newSets, Postings(olds, DocFreq(olds ++ news), maxDocFreq, keepNullIds = true),
-        oldSets.schema("id").dataType, CrossJaccard, threshold,
-        "new_id", "sz_a", "old_id", "sz_b")
-    }.getOrElse {
-      val df = newSets.select(explode(col("hs")).as("h"))
-        .union(oldSets.select(explode(col("hs")).as("h")))
-        .groupBy("h").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxDocFreq).select("h")
-      def index(sets: DataFrame) =
-        sets.select(col("id"), col("sz"), explode(col("hs")).as("h")).join(df, "h")
-      index(newSets).as("x").join(index(oldSets).as("y"),
-          col("x.h") === col("y.h") && sizeFilter(threshold))
-        .groupBy(col("x.id").as("new_id"), col("x.sz").as("sz_a"),
-          col("y.id").as("old_id"), col("y.sz").as("sz_b"))
-        .agg(count(lit(1)).as("inter"))
-    }
-    jaccardScored(counted, "new_id", "old_id", threshold)
+    // Cached: below the ScanCount bound each side's sets are read by the
+    // Σsz job and by their collect, and the new side's once more by the
+    // kernel, so without the cache every side is shingled two or three
+    // times. Five alternating sf0.1 pairs: q50 median 1.10 → 0.95 s at the
+    // default threshold, 1.50 → 1.50 s at -1 (the index join, where r16
+    // had measured the cache 1.46 → 2.21 s when that join was the only
+    // path: each side feeds the df-cap union and its index probe).
+    val newSets = graft.SparkUtil.trackCache(withShingleSets(newDocs, idCol, textCol, n))
+    val oldSets = graft.SparkUtil.trackCache(withShingleSets(oldDocs, idCol, textCol, n))
+    jaccardScored(new ShinglePairs(newSets, oldSets, maxDocFreq).counted(Cross, threshold),
+      threshold, "new_id", "old_id")
   }
 
   /**
-   * Exact n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin):
-   * same output as [[ngramJaccardPairs]] — the spec and the shared oracle
-   * pin that — but the inverted index holds only each document's
-   * `|set| - ceil(t*|set|) + 1` rarest shingles (global
+   * Exact n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin), the
+   * heavy-tailed branch of [[ngramJaccardPairsAdaptive]] over its capped
+   * index `inv`: same output as [[ngramJaccardPairs]] — the spec and the
+   * shared oracle pin that — but the candidate index holds only each
+   * document's `|set| - ceil(t*|set|) + 1` rarest shingles (global
    * document-frequency order, hash tiebreak). Exactness: if
    * `J(A,B) >= t`, the globally-smallest shared shingle must sit inside
    * BOTH prefixes (otherwise the intersection fits in a suffix of size
@@ -877,19 +909,10 @@ object Dedup {
    * and candidate pairs shrink roughly quadratically. The right variant
    * when shingle frequencies are heavy-tailed and the exact answer (not
    * LSH's almost-exact one) is contractually required.
+   *
+   * `inv` must be cached — it is traversed three times (df ranks, prefix
+   * join, capped verify sets).
    */
-  def ngramJaccardPairsPrefix(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3, threshold: Double = 0.6,
-      maxDocFreq: Int = 10000): DataFrame = {
-    val sets = withShingleSets(docs, idCol, textCol, n)
-    val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
-    prefixPairsFromIndex(inv, threshold)
-  }
-
-  /** The PPJoin prefix candidate join + capped-set verify, shared by
-    * [[ngramJaccardPairsPrefix]] and the adaptive dispatcher. `inv`
-    * must be cached — it is traversed three times (df ranks, prefix
-    * join, capped verify sets). */
   private def prefixPairsFromIndex(inv: DataFrame,
       threshold: Double): DataFrame = {
     val dfreq = inv.groupBy("h").agg(count(lit(1)).as("__df"))
@@ -898,10 +921,8 @@ object Dedup {
       .withColumn("__rank", row_number().over(w))
       .filter(col("__rank") <= col("sz") - ceil(lit(threshold) * col("sz")).cast("int") + 1)
       .select("id", "h", "sz")
-    val candidates = prefix.as("x").join(prefix.as("y"), col("x.h") === col("y.h") &&
-        col("x.id") < col("y.id") && sizeFilter(threshold))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
+    val candidates = keyedPairs(prefix, prefix, Seq("h"), Nil, Self,
+      sizeRatio = Some(threshold)).distinct()
     // Verify against the CAPPED per-doc sets, not the full shingle sets:
     // [[ngramJaccardPairs]] (and the shared oracle) count intersections
     // only over shingles under the doc-frequency cap, so when the cap
@@ -911,13 +932,8 @@ object Dedup {
     // the index), matching q14's denominator exactly.
     val capped = graft.SparkUtil.trackCache(
       inv.groupBy(col("id"), col("sz")).agg(collect_list(col("h")).as("hs")))
-    jaccardScored(candidates
-      .join(capped.select(col("id"), col("hs").as("hs_a"), col("sz").as("sz_a")),
-        col("id_a") === col("id")).drop("id")
-      .join(capped.select(col("id"), col("hs").as("hs_b"), col("sz").as("sz_b")),
-        col("id_b") === col("id")).drop("id")
-      .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b")))),
-      "id_a", "id_b", threshold)
+    jaccardScored(withSides(candidates, capped, capped, "hs", "sz")
+      .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b")))), threshold)
   }
 
   /**
@@ -941,26 +957,8 @@ object Dedup {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
 
     val sigs = sets.select(col("id"), minhashSignature(col("hs"), k).as("sig"))
-    val banded = bandKeys(sigs, r, bands)
-
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-
-    val verified = candidates
-      .join(sets.select(col("id"), col("hs").as("hs_a"), col("sz").as("sz_a")),
-        col("id_a") === col("id"))
-      .drop("id")
-      .join(sets.select(col("id"), col("hs").as("hs_b"), col("sz").as("sz_b")),
-        col("id_b") === col("id"))
-      .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .as("jaccard"))
-    verified.filter(col("jaccard") >= threshold)
+    jaccardScored(withSides(bandPairs(sigs, sigs, r, bands, Self), sets, sets, "hs", "sz")
+      .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b")))), threshold)
   }
 
   /**
@@ -991,13 +989,7 @@ object Dedup {
     val sigs = graft.SparkUtil.trackCache(
       withShingleSets(docs, idCol, textCol, n)
         .select(col("id"), minhashSignature(col("hs"), k).as("sig")))
-    val banded = bandKeys(sigs, r, bands)
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
+    val candidates = bandPairs(sigs, sigs, r, bands, Self)
     def matches(f: (Column, Column) => Column) =
       size(filter(zip_with(col("sig_a"), col("sig_b"), f), x => x))
     candidates
@@ -1032,6 +1024,24 @@ object Dedup {
     sigs.select(col("id"),
       posexplode(bandKeyBytes(col("sig"), r, bands)))
       .select(col("id"), col("pos").as("band_id"), col("col").as("band_key"))
+
+  /** The distinct `(id_a, id_b)` pairs of `kind` whose (id, sig)
+    * signatures in `xSigs` and `ySigs` share an LSH band bucket: the
+    * candidate join of the MinHash family. */
+  private def bandPairs(xSigs: DataFrame, ySigs: DataFrame, r: Int, bands: Int,
+      kind: PairKind): DataFrame =
+    keyedPairs(bandKeys(xSigs, r, bands), bandKeys(ySigs, r, bands),
+      Seq("band_id", "band_key"), Nil, kind).distinct()
+
+  /** Candidate `pairs` (id_a, id_b, ...) with the `cols` of each side
+    * attached by an id-key join: `c_a` from the `xs` row of `id_a`, `c_b`
+    * from the `ys` row of `id_b`. */
+  private def withSides(pairs: DataFrame, xs: DataFrame, ys: DataFrame,
+      cols: String*): DataFrame =
+    Seq("a" -> xs, "b" -> ys).foldLeft(pairs) { case (p, (side, t)) =>
+      p.join(t.select(col("id") +: cols.map(c => col(c).as(s"${c}_$side")): _*),
+        col(s"id_$side") === col("id")).drop("id")
+    }
 
   /**
    * The persisted MinHash SIGNATURE STORE of a corpus: one (id, sig)
@@ -1069,20 +1079,11 @@ object Dedup {
       minhashSignatures(newDocs, idCol, textCol, n, k)
         .select(col(idCol).as("id"), col("sig")))
     val store = sigStore.select(col(idCol).as("id"), col("sig"))
-    val candidates = bandKeys(newSigs, r, bands).as("x")
-      .join(bandKeys(store, r, bands).as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key"))
-      .select(col("x.id").as("new_id"), col("y.id").as("old_id"))
-      .distinct()
+    val candidates = bandPairs(newSigs, store, r, bands, Cross)
     val matches = size(filter(sequence(lit(1), lit(k)),
       i => element_at(col("sig_a"), i) === element_at(col("sig_b"), i)))
-    candidates
-      .join(newSigs.select(col("id"), col("sig").as("sig_a")),
-        col("new_id") === col("id")).drop("id")
-      .join(store.select(col("id"), col("sig").as("sig_b")),
-        col("old_id") === col("id")).drop("id")
-      .select(col("new_id"), col("old_id"),
+    withSides(candidates, newSigs, store, "sig")
+      .select(col("id_a").as("new_id"), col("id_b").as("old_id"),
         (matches.cast("double") / lit(k.toDouble)).as("sig_jaccard"))
       .filter(col("sig_jaccard") >= threshold)
   }
@@ -1106,20 +1107,9 @@ object Dedup {
       textCol: String = "text", n: Int = 3, threshold: Double = 0.8,
       maxDocFreq: Int = 10000): DataFrame = {
     val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    collectedSets(sets).map { case Seq(ys) =>
-        selfScanCount(sets, ys, DocFreq(ys), Containment, threshold, maxDocFreq,
-          "inner_id", "sz_in", "outer_id", "sz_out")
-      }.getOrElse {
-        // cached above the bound for the same reasons as [[ngramJaccardPairs]]
-        val inv = graft.SparkUtil.trackCache(invertedIndex(sets, maxDocFreq))
-        inv.as("x").join(inv.as("y"), col("x.h") === col("y.h") &&
-            col("x.id") =!= col("y.id") && sizeFilter(threshold, containment = true))
-          .groupBy(col("x.id").as("inner_id"), col("x.sz").as("sz_in"),
-            col("y.id").as("outer_id"))
-          .agg(count(lit(1)).as("inter"))
-      }
-      .select(col("inner_id"), col("outer_id"),
-        (col("inter").cast("double") / col("sz_in").cast("double"))
+    new ShinglePairs(sets, sets, maxDocFreq).counted(Containment, threshold)
+      .select(col("id_a").as("inner_id"), col("id_b").as("outer_id"),
+        (col("inter").cast("double") / col("sz_a").cast("double"))
           .as("containment"))
       .filter(col("containment") >= threshold)
   }
@@ -1325,12 +1315,9 @@ object Dedup {
       val blocked = hashed.select(col(idCol).as("id"), col(hashCol).as("sh"),
           explode(blocksAt(col(hashCol), depth, width)).as("b"))
         .select(col("id"), col("sh"), col("b.block_id"), col("b.block_val"))
-      blocked.as("x").join(blocked.as("y"),
-          col("x.block_id") === col("y.block_id") &&
-            col("x.block_val") === col("y.block_val") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-          bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
+      keyedPairs(blocked, blocked, BlockKey, Seq("sh"), Self)
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
         .filter(col("hamming") <= maxHamming)
         .distinct()
     } else {
@@ -1338,20 +1325,14 @@ object Dedup {
       val blocked = dict.select(col("sh"),
           explode(blocksAt(col("sh"), depth, width)).as("b"))
         .select(col("sh"), col("b.block_id"), col("b.block_val"))
-      val valuePairs = blocked.as("x").join(blocked.as("y"),
-          col("x.block_id") === col("y.block_id") &&
-            col("x.block_val") === col("y.block_val") &&
-            col("x.sh") < col("y.sh"))
-        .select(col("x.sh").as("sh_a"), col("y.sh").as("sh_b"),
-          bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
+      val valuePairs = keyedPairs(blocked, blocked, BlockKey, Nil, Self, id = "sh")
+        .select(col("id_a").as("sh_a"), col("id_b").as("sh_b"),
+          bit_count(col("id_a").bitwiseXOR(col("id_b"))).as("hamming"))
         .filter(col("hamming") <= maxHamming)
         .distinct()
-      val same = hashed.as("p").join(hashed.as("q"),
-          col(s"p.$hashCol") === col(s"q.$hashCol") &&
-            col(s"p.$idCol") < col(s"q.$idCol"))
-        .select(col(s"p.$idCol").as("id_a"), col(s"q.$idCol").as("id_b"),
-          bit_count(col(s"p.$hashCol").bitwiseXOR(col(s"q.$hashCol")))
-            .as("hamming"))
+      val same = keyedPairs(hashed, hashed, Seq(hashCol), Seq(hashCol), Self, id = idCol)
+        .select(col("id_a"), col("id_b"),
+          bit_count(col(s"${hashCol}_a").bitwiseXOR(col(s"${hashCol}_b"))).as("hamming"))
       val cross = valuePairs
         .join(hashed.as("p"), col("sh_a") === col(s"p.$hashCol"))
         .join(hashed.as("q"), col("sh_b") === col(s"q.$hashCol"))
@@ -1396,12 +1377,9 @@ object Dedup {
     val blocked = reps.select(col("__rsh").as("sh"),
         explode(blocksAt(col("__rsh"), depth, width)).as("b"))
       .select(col("sh"), col("b.block_id"), col("b.block_val"))
-    val inter = blocked.as("x").join(blocked.as("y"),
-        col("x.block_id") === col("y.block_id") &&
-          col("x.block_val") === col("y.block_val") &&
-          col("x.sh") < col("y.sh"))
-      .filter(bit_count(col("x.sh").bitwiseXOR(col("y.sh"))) <= maxHamming)
-      .select(col("x.sh").as("sh_a"), col("y.sh").as("sh_b"))
+    val inter = keyedPairs(blocked, blocked, BlockKey, Nil, Self, id = "sh")
+      .filter(bit_count(col("id_a").bitwiseXOR(col("id_b"))) <= maxHamming)
+      .select(col("id_a").as("sh_a"), col("id_b").as("sh_b"))
       .distinct()
       .join(reps.select(col("__rsh").as("sh_a"), col("rep").as("id_a")), "sh_a")
       .join(reps.select(col("__rsh").as("sh_b"), col("rep").as("id_b")), "sh_b")
@@ -1589,35 +1567,29 @@ object Dedup {
   def minhashEstimatorReport(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3, k: Int = 128,
       bands: Int = 32): DataFrame = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
-    val r = k / bands
-    val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    val sigs = graft.SparkUtil.trackCache(
-      sets.select(col("id"), minhashSignature(col("hs"), k).as("sig")))
-    val banded = bandKeys(sigs, r, bands)
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
     val agree = expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), b -> b))")
-    candidates
-      .join(sets.select(col("id"), col("hs").as("hs_a"), col("sz").as("sz_a")),
-        col("id_a") === col("id")).drop("id")
-      .join(sets.select(col("id"), col("hs").as("hs_b"), col("sz").as("sz_b")),
-        col("id_b") === col("id")).drop("id")
-      .join(sigs.select(col("id"), col("sig").as("sig_a")),
-        col("id_a") === col("id")).drop("id")
-      .join(sigs.select(col("id"), col("sig").as("sig_b")),
-        col("id_b") === col("id")).drop("id")
-      .withColumn("__inter", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard_exact", col("__inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("__inter")).cast("double"))
+    signaturePairs(docs, idCol, textCol, n, k, bands)
       .withColumn("jaccard_est", agree.cast("double") / lit(k.toDouble))
       .select(col("id_a"), col("id_b"), col("jaccard_exact"),
         col("jaccard_est"),
         abs(col("jaccard_est") - col("jaccard_exact")).as("abs_err"))
+  }
+
+  /** The band-collision candidates of `docs` with each side's shingle set
+    * and signature attached and the exact shingle Jaccard as
+    * `jaccard_exact`: the shared base of [[minhashEstimatorReport]] and
+    * [[signatureSizeSensitivity]]. */
+  private def signaturePairs(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, k: Int, bands: Int): DataFrame = {
+    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
+    val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
+    val sigs = graft.SparkUtil.trackCache(
+      sets.select(col("id"), minhashSignature(col("hs"), k).as("sig")))
+    val candidates = bandPairs(sigs, sigs, k / bands, bands, Self)
+    withSides(withSides(candidates, sets, sets, "hs", "sz"), sigs, sigs, "sig")
+      .withColumn("__inter", size(array_intersect(col("hs_a"), col("hs_b"))))
+      .withColumn("jaccard_exact", col("__inter").cast("double") /
+        (col("sz_a") + col("sz_b") - col("__inter")).cast("double"))
   }
 
   /**
@@ -1777,12 +1749,7 @@ object Dedup {
     val sigs = graft.SparkUtil.trackCache(
       sets.select(col("id"), minhashSignature(col("hs"), k).as("sig")))
     configs.map { case (bands, r) =>
-      val banded = bandKeys(sigs, r, bands)
-      banded.as("x").join(banded.as("y"),
-          col("x.band_id") === col("y.band_id") &&
-            col("x.band_key") === col("y.band_key") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id"), col("y.id")).distinct()
+      bandPairs(sigs, sigs, r, bands, Self)
         .agg(count(lit(1)).as("n_candidates"))
         .select(lit(bands).as("n_bands"), lit(r).as("rows_per_band"),
           col("n_candidates"))
@@ -1813,37 +1780,14 @@ object Dedup {
       ks: Seq[Int] = Seq(32, 64, 128), idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3, k: Int = 128,
       bands: Int = 32): DataFrame = {
-    require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
     require(ks.nonEmpty && ks.forall(kp => kp >= 1 && kp <= k),
       s"ks=$ks must be in [1, $k]")
-    val r = k / bands
-    val sets = graft.SparkUtil.trackCache(withShingleSets(docs, idCol, textCol, n))
-    val sigs = graft.SparkUtil.trackCache(
-      sets.select(col("id"), minhashSignature(col("hs"), k).as("sig")))
-    val banded = bandKeys(sigs, r, bands)
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    val base = candidates
-      .join(sets.select(col("id"), col("hs").as("hs_a"), col("sz").as("sz_a")),
-        col("id_a") === col("id")).drop("id")
-      .join(sets.select(col("id"), col("hs").as("hs_b"), col("sz").as("sz_b")),
-        col("id_b") === col("id")).drop("id")
-      .join(sigs.select(col("id"), col("sig").as("sig_a")),
-        col("id_a") === col("id")).drop("id")
-      .join(sigs.select(col("id"), col("sig").as("sig_b")),
-        col("id_b") === col("id")).drop("id")
-      .withColumn("__inter", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("__jx", col("__inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("__inter")).cast("double"))
+    val base = signaturePairs(docs, idCol, textCol, n, k, bands)
     val errCols = ks.map { kp =>
       (expr(s"size(filter(zip_with(slice(sig_a, 1, $kp)," +
         s" slice(sig_b, 1, $kp), (x, y) -> x = y), b -> b))")
         .cast("double") / lit(kp.toDouble))
-    }.zip(ks).map { case (e, kp) => abs(e - col("__jx")).as(s"__e$kp") }
+    }.zip(ks).map { case (e, kp) => abs(e - col("jaccard_exact")).as(s"__e$kp") }
     base.select(errCols: _*)
       .select(expr(s"stack(${ks.size}, " +
         ks.map(kp => s"$kp, __e$kp").mkString(", ") + ") AS (sig_k, abs_err)"))
@@ -1915,10 +1859,9 @@ object Dedup {
         greatest(col(pa), col(pb)).as("b")).distinct())
     val sym = canon.select(col("a").as("ctr"), col("b").as("sp"))
       .union(canon.select(col("b").as("ctr"), col("a").as("sp")))
-    val wedges = sym.as("x").join(sym.as("y"),
-        col("x.ctr") === col("y.ctr") && col("x.sp") < col("y.sp"))
-      .select(col("x.ctr").as("center"), col("x.sp").as("spoke_a"),
-        col("y.sp").as("spoke_c"))
+    val wedges = keyedPairs(sym, sym, Seq("ctr"), Seq("ctr"), Self, id = "sp")
+      .select(col("ctr_a").as("center"), col("id_a").as("spoke_a"),
+        col("id_b").as("spoke_c"))
     wedges.join(canon,
         wedges("spoke_a") === canon("a") && wedges("spoke_c") === canon("b"),
         "left_anti")
@@ -2021,10 +1964,9 @@ object Dedup {
     // shuffle via ReusedExchange and a cache only adds a barrier. Caching
     // a self-join input pays only where no exchange can be reused
     // (broadcast/cartesian joins — the q252 case).
-    sigs.as("a").join(sigs.as("b"),
-        col("a.pos") === col("b.pos") && col("a.g") < col("b.g"))
-      .groupBy(col("a.g").as("source_a"), col("b.g").as("source_b"))
-      .agg(sum(when(col("a.v") === col("b.v"), 1L).otherwise(0L)).as("n_equal"))
+    keyedPairs(sigs, sigs, Seq("pos"), Seq("v"), Self, id = "g")
+      .groupBy(col("id_a").as("source_a"), col("id_b").as("source_b"))
+      .agg(sum(when(col("v_a") === col("v_b"), 1L).otherwise(0L)).as("n_equal"))
       .select(col("source_a"), col("source_b"), col("n_equal"),
         (col("n_equal").cast("double") / lit(k.toDouble)).as("est_jaccard"))
   }

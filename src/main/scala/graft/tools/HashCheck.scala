@@ -2,7 +2,7 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /**
  * Dev/driver diagnostic for the correctness gate's hash compare: given
@@ -20,13 +20,7 @@ object HashCheck {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: HashCheck <dirA> [<dirB>] [queryName...]")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session("4", logLevel = "ERROR")
 
     def queryDirs(root: String): Seq[String] =
       Option(new File(root).listFiles()).getOrElse(Array.empty)

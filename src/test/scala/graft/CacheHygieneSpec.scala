@@ -23,7 +23,7 @@ class CacheHygieneSpec extends SparkSpec {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
     // run the full caching-operator family and materialize each result
     Dedup.ngramJaccardPairs(docs).count()
-    Dedup.ngramJaccardPairsPrefix(docs).count()
+    Dedup.ngramJaccardPairsAdaptive(docs, minPrefixConcentration = 0.0).count()
     Dedup.minhashLshPairs(docs).count()
     Dedup.simhashPairs(docs).count()
     SimilaritySearch.cosineNearDupPairsLsh(emb, threshold = 0.3).count()

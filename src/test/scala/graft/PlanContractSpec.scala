@@ -642,6 +642,36 @@ class PlanContractSpec extends SparkSpec {
     SparkUtil.unpersistTrackedCaches()
   }
 
+  test("LSH band and SimHash pigeonhole candidates: one equi-join on the whole " +
+      "bucket key per candidate set, at the pinned Exchange count") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val band = Seq("band_id", "band_key")
+    val block = Seq("block_id", "block_val")
+    // (query, bucket key, candidate joins on it, shuffle Exchanges at
+    // sf0.001: the band/block explode's round-robin and the pair dedup)
+    for ((q, key, nJoins, nExchanges) <- Seq(
+        ("q15_dedup_minhash_lsh", band, 1, 2),
+        ("q119_bbit_minhash", band, 1, 2),
+        ("q253_band_tuning", band, 3, 7),
+        ("q16_dedup_simhash", block, 1, 2),
+        ("q269_dedup_simhash64", block, 1, 2))) {
+      val df = SparkEntry.queries(q)(spark, sf())
+      def names(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.flatMap(_.references.map(_.name))
+      // a key column dropped from the join leaves a join on the rest of it
+      val joins = df.queryExecution.sparkPlan.collect { case j: BaseJoinExec => j }
+        .filter(j => names(j.leftKeys).exists(key.contains))
+      val p = plan(df)
+      assert(joins.size == nJoins &&
+        joins.forall(j => names(j.leftKeys) == key && names(j.rightKeys) == key), s"$q:\n$p")
+      // each shuffle Exchange once: a cached input prints under every scan of it
+      val shuffles = """(?<!Broadcast)Exchange .*\[plan_id=(\d+)\]""".r
+        .findAllMatchIn(p).map(_.group(1)).toSet
+      assert(shuffles.size == nExchanges, s"$q: ${shuffles.size} Exchanges\n$p")
+      SparkUtil.unpersistTrackedCaches()
+    }
+  }
+
   test("BM25 top-k: TakeOrderedAndProject cut, corpus filtered before any agg") {
     val p = plan(SparkEntry.queries("q258_bm25_topk")(spark, sf()))
     assert(p.contains("TakeOrderedAndProject"), p)

@@ -40,20 +40,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fresh managed-table location per JVM: the in-memory catalog dies
-      // with the session, so a persistent warehouse dir would collide on
-      // the next run's saveAsTable
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = Session("4", logLevel = "ERROR", settings = Seq(
+    "spark.app.name" -> "graft-test",
+    // fresh managed-table location per JVM: the in-memory catalog dies
+    // with the session, so a persistent warehouse dir would collide on
+    // the next run's saveAsTable
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
 }

@@ -78,6 +78,22 @@ class TablesSpec extends SparkSpec {
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
   }
 
+  test("in a graft.Session session a table loaded before and after loadEvents is resolved once") {
+    // A new session over the shared context starts from the settings
+    // graft.Session gave the context, not from the ones earlier specs
+    // flipped on the shared session.
+    val s = spark.newSession()
+    val dir = writeDir()
+    writeTable(s"$dir/t.parquet", Seq(Row(1L), Row(2L)), idSchema)
+    writeTable(s"$dir/events.parquet", Seq(Row(1L, t0)),
+      StructType(Seq(StructField("event_id", LongType), StructField("ts", TimestampType))))
+    assert(countJobs(Tables.load(s, dir, "t")) > 0)
+    assert(Tables.loadEvents(s, dir).count() == 1)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(countJobs { df = Tables.load(s, dir, "t") } == 0)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+  }
+
   test("two loads of one table self-join on fresh attribute IDs") {
     val a = Tables.load(spark, sf(), "nation")
     val b = Tables.load(spark, sf(), "nation")

@@ -81,7 +81,8 @@ class DedupSpec extends SparkSpec {
       (3L, "p q r s", "s1"), (4L, "p q r s", "s1"),   // within s1
       (5L, "x y z w", "s3")                            // no pair
     ).toDF("doc_id", "text", "source")
-    val out = Dedup.crossSourceMatrix(df, threshold = 0.9)
+    val out = Dedup.crossSourceMatrixFromPairs(
+        Dedup.ngramJaccardPairs(df, threshold = 0.9), df)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(out == Map(("s1", "s2") -> 1L, ("s1", "s1") -> 1L))
   }
@@ -216,11 +217,12 @@ class DedupSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val plain = canon(Dedup.ngramJaccardPairs(d))
-    val prefix = canon(Dedup.ngramJaccardPairsPrefix(d))
+    val prefix = canon(Dedup.ngramJaccardPairsAdaptive(d, minPrefixConcentration = 0.0))
     assert(prefix == plain)
     assert(plain.nonEmpty)
     // also at a lower threshold, where prefixes are longer
-    assert(canon(Dedup.ngramJaccardPairsPrefix(d, threshold = 0.3)) ==
+    assert(canon(Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.3,
+        minPrefixConcentration = 0.0)) ==
       canon(Dedup.ngramJaccardPairs(d, threshold = 0.3)))
   }
 
@@ -830,7 +832,8 @@ class DedupSpec extends SparkSpec {
         math.round(r.getDouble(2) * 1e9))).toSet
     for (corpus <- Seq(uniform, zipf)) {
       val plain = pairs(corpus, d => Dedup.ngramJaccardPairs(d, threshold = 0.4))
-      val prefix = pairs(corpus, d => Dedup.ngramJaccardPairsPrefix(d, threshold = 0.4))
+      val prefix = pairs(corpus, d => Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.4,
+        minPrefixConcentration = 0.0))
       val adaptive = pairs(corpus, d => Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.4))
       assert(plain == prefix && plain == adaptive)
     }
@@ -922,7 +925,8 @@ class DedupSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val want = Seq(Row(1L, 2L, 0.6))
     assert(onBothPaths(Dedup.ngramJaccardPairs(d, threshold = 0.6)) == Seq(want, want))
-    assert(scores(Dedup.ngramJaccardPairsPrefix(d, threshold = 0.6)) == Set((1L, 2L, 0.6)))
+    assert(scores(Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.6,
+      minPrefixConcentration = 0.0)) == Set((1L, 2L, 0.6)))
     assert(onBothPaths(Dedup.ngramJaccardPairsAdaptive(d, threshold = 0.6)) == Seq(want, want))
     assert(onBothPaths(Dedup.crossCorpusPairs(docs(short), docs(long), threshold = 0.6)) ==
       Seq(want, want))
@@ -1010,7 +1014,8 @@ class DedupSpec extends SparkSpec {
       val d = docs(corpus: _*)
       val ctx = s"seed $seed, t $t, cap $maxDocFreq"
       assert(rows(Dedup.ngramJaccardPairs(d, threshold = t, maxDocFreq = maxDocFreq)) == jaccard, ctx)
-      assert(rows(Dedup.ngramJaccardPairsPrefix(d, threshold = t, maxDocFreq = maxDocFreq)) == jaccard, ctx)
+      assert(rows(Dedup.ngramJaccardPairsAdaptive(d, threshold = t, maxDocFreq = maxDocFreq,
+        minPrefixConcentration = 0.0)) == jaccard, ctx)
       assert(rows(Dedup.containmentPairs(d, threshold = t, maxDocFreq = maxDocFreq)) == containment, ctx)
       assert(rows(Dedup.crossCorpusPairs(docs(newSide: _*), docs(oldSide: _*),
         threshold = t, maxDocFreq = maxDocFreq)) == cross, ctx)
