@@ -73,6 +73,13 @@ object TextFunctions {
   def shingleHashes(text: Column, n: Int): Column =
     native(catalyst.ShingleHashes(expr(text), n))
 
+  /** Whether [[shingleHashes]] of `text` is non-empty (null for a null
+    * text), by a space-byte scan that stops after `n` tokens: the
+    * emptiness filter to put on the text, below the projection of its
+    * shingles, so the shingling runs once. */
+  def hasShingles(text: Column, n: Int): Column =
+    native(catalyst.HasShingles(expr(text), n))
+
   /** ALL shingle hashes (duplicates kept, position order) — the multiset
     * twin of [[shingleHashes]] for term-frequency-weighted operators.
     * Native one-pass expression; its HOF twin is test-scope `HofTwins`. */

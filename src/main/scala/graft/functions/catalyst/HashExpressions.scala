@@ -1,7 +1,7 @@
 package graft.functions.catalyst
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -201,12 +201,68 @@ case class SimHash64(child: Expression)
     copy(child = newChild)
 }
 
-/** Distinct word-n-gram shingle hashes of a text column in one pass.
-  *
-  * Observation exploited: with single-space separators a shingle's joined
-  * string (`tok_i ⌴ … ⌴ tok_{i+n-1}`) is exactly a contiguous byte range of
-  * the original text, so each shingle hash is a rolling hash over a byte
-  * slice — no per-shingle string materialization. Matches
+/** The word-shingle scans of [[ShingleHashes]], [[ShingleHashesAll]] and
+  * [[HasShingles]]. Tokens are the byte ranges between single spaces
+  * (0x20), empty ones included, so a text with `s` space bytes holds
+  * `s + 1` tokens and, when `s + 1 >= n`, `s + 2 - n` shingles of `n`
+  * tokens; with fewer tokens it has none. */
+private[catalyst] object Shingles {
+  private val Space = ' '.toByte
+
+  /** The rolling hash of every `n`-token shingle of `b`, in position order.
+    * With single-space separators a shingle's joined string
+    * (`tok_i ⌴ … ⌴ tok_{i+n-1}`) is exactly a contiguous byte range of the
+    * text, so each hash folds over a byte slice, with no per-shingle
+    * string. */
+  def hashes(b: Array[Byte], n: Int): Array[Long] = {
+    var m = 1
+    var i = 0
+    while (i < b.length) { if (b(i) == Space) m += 1; i += 1 }
+    if (m < n) return Array.emptyLongArray
+    // token start offsets: position 0 and one past each space
+    val starts = new Array[Int](m)
+    var t = 1
+    i = 0
+    while (i < b.length) { if (b(i) == Space) { starts(t) = i + 1; t += 1 }; i += 1 }
+    val out = new Array[Long](m - n + 1)
+    var w = 0
+    while (w < out.length) {
+      val until = if (w + n < m) starts(w + n) - 1 else b.length // exclusive; -1 drops the separator
+      var h = 0L
+      var j = starts(w)
+      while (j < until) { h = (h * HashBase + (b(j) & 0xff)) % HashPrime; j += 1 }
+      out(w) = h
+      w += 1
+    }
+    out
+  }
+
+  /** The distinct values of `hs` in first-occurrence order, through an
+    * open-addressing set of primitive longs (linear probing, load at most
+    * 1/2). Rolling hashes lie in `[0, HashPrime)`, so -1 marks a free
+    * slot. */
+  def distinct(hs: Array[Long]): Array[Long] = {
+    var cap = 2
+    while (cap < 2 * hs.length) cap <<= 1
+    val mask = cap - 1
+    val slots = new Array[Long](cap)
+    java.util.Arrays.fill(slots, -1L)
+    val out = new Array[Long](hs.length)
+    var k = 0
+    var i = 0
+    while (i < hs.length) {
+      val h = hs(i)
+      var s = ((h * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+      while (slots(s) != -1L && slots(s) != h) s = (s + 1) & mask
+      if (slots(s) == -1L) { slots(s) = h; out(k) = h; k += 1 }
+      i += 1
+    }
+    if (k == out.length) out else java.util.Arrays.copyOf(out, k)
+  }
+}
+
+/** Distinct word-n-gram shingle hashes of a text column in one pass
+  * ([[Shingles.hashes]], deduplicated by [[Shingles.distinct]]). Matches
   * `array_distinct(transform(shingles(tokens(text), n), rollingHash))`
   * (first-occurrence order) byte for byte.
   *
@@ -219,33 +275,47 @@ case class ShingleHashes(child: Expression, n: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_shingle_hashes"
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
-    // token start offsets (position 0 and after each space)
-    val starts = scala.collection.mutable.ArrayBuffer(0)
-    var i = 0
-    while (i < b.length) { if (b(i) == ' '.toByte) starts += i + 1; i += 1 }
-    val m = starts.length
-    if (m < n) return new GenericArrayData(Array.emptyLongArray)
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var w = 0
-    while (w + n <= m) {
-      val from = starts(w)
-      val until = if (w + n < m) starts(w + n) - 1 else b.length // exclusive; -1 drops the separator
-      var h = 0L
-      var j = from
-      while (j < until) { h = (h * HashBase + (b(j) & 0xff)) % HashPrime; j += 1 }
-      seen.add(h)
-      w += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = it.next(); k += 1 }
-    new GenericArrayData(out)
-  }
+  protected override def nullSafeEval(input: Any): Any = UnsafeArrayData.fromPrimitiveArray(
+    Shingles.distinct(Shingles.hashes(input.asInstanceOf[UTF8String].getBytes, n)))
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
+    copy(child = newChild)
+}
+
+/** Whether a text has at least one word-n-gram shingle, that is at least
+  * `n` tokens: exactly `size(graft_shingle_hashes(text, n)) > 0`, and null
+  * for a null text. It scans for the space byte and stops at the
+  * `n - 1`-th. The emptiness filter of the shingle-set operators: a filter
+  * on `size(hs)` over a projected `hs = graft_shingle_hashes(text, n)` is
+  * pushed below the projection with the alias substituted, so the plan
+  * would shingle every document twice. */
+case class HasShingles(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1)
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "graft_has_shingles"
+
+  protected override def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    var need = n - 1
+    var i = 0
+    while (need > 0 && i < s.numBytes) { if (s.getByte(i) == ' '.toByte) need -= 1; i += 1 }
+    need == 0
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val need = ctx.freshName("need")
+      val i = ctx.freshName("i")
+      s"""
+         |int $need = ${n - 1};
+         |for (int $i = 0; $need > 0 && $i < $c.numBytes(); $i++) {
+         |  if ($c.getByte($i) == 32) $need--;
+         |}
+         |${ev.value} = $need == 0;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): HasShingles =
     copy(child = newChild)
 }
 
@@ -264,26 +334,8 @@ case class ShingleHashesAll(child: Expression, n: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_shingle_hashes_all"
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
-    val starts = scala.collection.mutable.ArrayBuffer(0)
-    var i = 0
-    while (i < b.length) { if (b(i) == ' '.toByte) starts += i + 1; i += 1 }
-    val m = starts.length
-    if (m < n) return new GenericArrayData(Array.emptyLongArray)
-    val out = new Array[Long](m - n + 1)
-    var w = 0
-    while (w + n <= m) {
-      val from = starts(w)
-      val until = if (w + n < m) starts(w + n) - 1 else b.length
-      var h = 0L
-      var j = from
-      while (j < until) { h = (h * HashBase + (b(j) & 0xff)) % HashPrime; j += 1 }
-      out(w) = h
-      w += 1
-    }
-    new GenericArrayData(out)
-  }
+  protected override def nullSafeEval(input: Any): Any = UnsafeArrayData.fromPrimitiveArray(
+    Shingles.hashes(input.asInstanceOf[UTF8String].getBytes, n))
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashesAll =
     copy(child = newChild)

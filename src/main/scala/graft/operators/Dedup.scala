@@ -100,9 +100,8 @@ object Dedup {
   def decontaminateFuzzy(docs: DataFrame, evalSet: DataFrame,
       containPct: Int = 80, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3): DataFrame = {
-    val evalIdx = evalSet
+    val evalIdx = evalSet.filter(hasShingles(col(textCol), n))
       .select(col(idCol).as("__eid"), shingleHashes(col(textCol), n).as("__ehs"))
-      .filter(size(col("__ehs")) > 0)
       .select(col("__eid"), size(col("__ehs")).as("__esz"), explode(col("__ehs")).as("__h"))
     val corpusShingles = docs
       .select(col(idCol).as("__cid"), explode(shingleHashes(col(textCol), n)).as("__h"))
@@ -132,9 +131,8 @@ object Dedup {
   def contaminationReport(train: DataFrame, evalSet: DataFrame,
       containPct: Int = 80, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3): DataFrame = {
-    val evalIdx = evalSet
+    val evalIdx = evalSet.filter(hasShingles(col(textCol), n))
       .select(col(idCol).as("eval_id"), shingleHashes(col(textCol), n).as("__ehs"))
-      .filter(size(col("__ehs")) > 0)
       .select(col("eval_id"), size(col("__ehs")).cast("long").as("n_shingles"),
         explode(col("__ehs")).as("__h"))
     val corpusShingles = train
@@ -151,12 +149,13 @@ object Dedup {
 
   /** Per-doc distinct shingle-hash sets with set size; docs with fewer
     * than `n` tokens (empty shingle set) are dropped — they cannot reach
-    * any positive Jaccard threshold. */
+    * any positive Jaccard threshold. The drop filters on the text
+    * ([[hasShingles]]), so each document is shingled once. */
   private def withShingleSets(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
     graft.SparkUtil.ensureParallelism(docs)
+      .filter(hasShingles(col(textCol), n))
       .select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("hs"))
-      .filter(size(col("hs")) > 0)
       .withColumn("sz", size(col("hs")))
 
   /** Inverted index (id, sz, shingle-hash) of each of `sides`, with
@@ -201,6 +200,19 @@ object Dedup {
       containment: Boolean): Boolean =
     if (containment) szY.toDouble / szX.toDouble >= threshold
     else math.min(szX, szY).toDouble / math.max(szX, szY).toDouble >= threshold
+
+  /** The score filter that follows the counter ([[jaccardScored]],
+    * [[containmentPairs]]) over one counted pair, `x` first, for the
+    * [[scanCount]] kernel: `inter / (sz_x + sz_y - inter)`, or
+    * `inter / sz_x` for containment, in Catalyst's arithmetic (an int sum,
+    * a long difference, one double division) and `>= threshold`. A zero
+    * denominator, which only duplicated ids give, passes, so Catalyst's
+    * division still sees it (under ANSI it raises DIVIDE_BY_ZERO). */
+  private def scoreOk(szX: Int, szY: Int, inter: Int, threshold: Double,
+      containment: Boolean): Boolean = {
+    val den = if (containment) szX.toLong else (szX + szY).toLong - inter
+    den == 0 || inter.toDouble / den.toDouble >= threshold
+  }
 
   /** The pair predicate of a keyed pair join, `x` the streamed side: which
     * id pairs it keeps, as [[ids]] for [[keyedPairs]] and as the matching
@@ -278,13 +290,18 @@ object Dedup {
 
   private object DocFreq {
     def apply(sets: Array[ShingleSet]): DocFreq = {
-      val all = sets.flatMap(_.hs)
+      val all = new Array[Long](sets.map(_.hs.length).sum)
+      var at = 0
+      for (x <- sets) { System.arraycopy(x.hs, 0, all, at, x.hs.length); at += x.hs.length }
       java.util.Arrays.sort(all)
       def runStart(i: Int) = i == 0 || all(i) != all(i - 1)
-      val keys = new Array[Long](all.indices.count(runStart))
-      val df = new Array[Int](keys.length)
-      var k = -1
+      var nKeys = 0
       var i = 0
+      while (i < all.length) { if (runStart(i)) nKeys += 1; i += 1 }
+      val keys = new Array[Long](nKeys)
+      val df = new Array[Int](nKeys)
+      var k = -1
+      i = 0
       while (i < all.length) {
         if (runStart(i)) { k += 1; keys(k) = all(i) }
         df(k) += 1
@@ -310,8 +327,9 @@ object Dedup {
 
     /** ScanCount for one streamed document: count, per `y` ordinal that
       * `kind` pairs with `x`, the postings of `x`'s shingles, then emit
-      * the counted pairs that pass the size filter. `counts` is all zero
-      * on entry and on return; `touched` is scratch of [[docCount]]. */
+      * the counted pairs that pass the size filter and the score filter
+      * at `threshold`. `counts` is all zero on entry and on return;
+      * `touched` is scratch of [[docCount]]. */
     def pairs(x: ShingleSet, kind: PairKind, threshold: Double,
         counts: Array[Int], touched: Array[Int]): Iterator[PairCount] = {
       val xId = if (x.id == null) 0L else x.id.longValue
@@ -342,7 +360,8 @@ object Dedup {
       i = 0
       while (i < n) {
         val o = touched(i)
-        if (sizeRatioOk(x.sz, szs(o), threshold, kind.containment)) {
+        if (sizeRatioOk(x.sz, szs(o), threshold, kind.containment) &&
+            scoreOk(x.sz, szs(o), counts(o), threshold, kind.containment)) {
           out(m) = PairCount(x.id, x.sz,
             if (nullIds(o)) null else java.lang.Long.valueOf(ids(o)), szs(o), counts(o))
           m += 1
@@ -367,9 +386,10 @@ object Dedup {
       java.util.Arrays.copyOf(s, k)
     }
 
-    /** Builds the table from the collected sets `ys`, with primitive sorts
-      * only. `df` counts every posting that the cap is read over (`ys`'s
-      * and, across corpora, the other side's); a hash with df over
+    /** Builds the table from the collected sets `ys` with primitive sorts
+      * and flat loops over the postings, one df lookup each. `df` counts
+      * every posting that the cap is read over (`ys`'s and, across
+      * corpora, the other side's); a hash with df over
       * `maxDocFreq` gets no run. Sets with a null id are indexed only if
       * `keepNullIds`, after df was counted. */
     def apply(ys: Array[ShingleSet], df: DocFreq, maxDocFreq: Int,
@@ -394,20 +414,40 @@ object Dedup {
         run(k) = if (df.df(k) <= maxDocFreq) { nKeys += 1; nKeys - 1 } else -1
       val keys = new Array[Long](nKeys)
       for (k <- df.keys.indices if run(k) >= 0) keys(run(k)) = df.keys(k)
-      def runOf(h: Long) = run(java.util.Arrays.binarySearch(df.keys, h))
+      // each posting's run, looked up once and counted per run; set i's
+      // postings are postRun(first(i) until first(i + 1))
+      val first = new Array[Int](sets.length + 1)
+      for (i <- sets.indices) first(i + 1) = first(i) + sets(i).hs.length
+      val postRun = new Array[Int](first(sets.length))
+      val offsets = new Array[Int](nKeys + 1)
+      var p = 0
+      for (x <- sets) {
+        val hs = x.hs
+        var j = 0
+        while (j < hs.length) {
+          val r = run(java.util.Arrays.binarySearch(df.keys, hs(j)))
+          postRun(p) = r
+          if (r >= 0) offsets(r + 1) += 1
+          p += 1
+          j += 1
+        }
+      }
+      for (k <- 0 until nKeys) offsets(k + 1) += offsets(k)
       // CSR by a counting sort on the run, the sets visited in ordinal
       // order (ordinal << 32 | set index) so that every run's ordinals ascend
-      val offsets = new Array[Int](nKeys + 1)
-      for (x <- sets; h <- x.hs) { val r = runOf(h); if (r >= 0) offsets(r + 1) += 1 }
-      for (k <- 0 until nKeys) offsets(k + 1) += offsets(k)
       val cursor = java.util.Arrays.copyOf(offsets, nKeys)
       val docs = new Array[Int](offsets(nKeys))
       val order = Array.tabulate(sets.length)(i =>
         (java.util.Arrays.binarySearch(ordKeys, docKey(i)).toLong << 32) | i)
       java.util.Arrays.sort(order)
-      for (o <- order; h <- sets(o.toInt).hs) {
-        val r = runOf(h)
-        if (r >= 0) { docs(cursor(r)) = (o >>> 32).toInt; cursor(r) += 1 }
+      for (o <- order) {
+        val ord = (o >>> 32).toInt
+        p = first(o.toInt)
+        while (p < first(o.toInt + 1)) {
+          val r = postRun(p)
+          if (r >= 0) { docs(cursor(r)) = ord; cursor(r) += 1 }
+          p += 1
+        }
       }
       new Postings(keys, offsets, docs, ids, nullIds, szs)
     }
@@ -458,8 +498,11 @@ object Dedup {
    * counts every `y` posting of its shingles in one dense array, resetting
    * only the touched entries. It returns `(id_a, sz_a, id_b, sz_b, inter)`,
    * one row per pair of `kind` that shares a posting and passes
-   * [[sizeFilter]]: the rows the join + aggregate would give, so the
-   * caller's score and threshold stay in Catalyst.
+   * [[sizeFilter]] and the caller's score filter at `threshold`
+   * ([[scoreOk]], the same integers in the same double arithmetic). The
+   * caller's score and `>= threshold` filter stay in Catalyst as the
+   * output contract; the kernel only leaves out the rows that filter
+   * would drop, nearly all of the counted pairs, before they are encoded.
    *
    * Exact: the table is an inverted index whose run length is a key's
    * document frequency, so the cap is applied on the driver to the same
@@ -473,9 +516,10 @@ object Dedup {
    *
    * Memory bound: the driver holds at most the Σ`sz` postings that
    * [[collectedSets]] admitted, at 8 bytes each in the sets and in the
-   * sorted df copy and 4 in the table, plus at most 32 bytes a distinct
-   * hash and about 100 a document; each task adds two int arrays of one
-   * entry per indexed document.
+   * sorted df copy and 4 each in the table and in the build's run of each
+   * posting, plus at most 32 bytes a distinct hash and about 100 a
+   * document; each task adds two int arrays of one entry per indexed
+   * document.
    *
    * EAGER at construction, like [[dfConcentration]]: the collect and the
    * build run when the operator is CALLED, because the collect chooses
@@ -538,9 +582,11 @@ object Dedup {
       collected.fold(dfConcentration(index.head))(_._2.concentration(maxDocFreq))
 
     /** `(id_a, sz_a, id_b, sz_b, inter)` for every pair of `kind` that
-      * shares a capped shingle and passes [[sizeFilter]] at `threshold`.
-      * The join path leaves `sz_b` out for [[Containment]], which is scored
-      * by the inner size alone: one group key less in the pair aggregate. */
+      * shares a capped shingle and passes [[sizeFilter]] at `threshold`;
+      * [[scanCount]] also drops the pairs under the caller's score filter
+      * at `threshold`, which the caller applies in any case. The join path
+      * leaves `sz_b` out for [[Containment]], which is scored by the inner
+      * size alone: one group key less in the pair aggregate. */
     def counted(kind: PairKind, threshold: Double): DataFrame = collected match {
       case Some((ySets, df)) =>
         scanCount(xs, Postings(ySets, df, maxDocFreq, keepNullIds = kind == Cross),
@@ -1955,8 +2001,8 @@ object Dedup {
   def sourceMinhashOverlap(docs: DataFrame, groupCol: String = "source",
       k: Int = 128, n: Int = 3, textCol: String = "text"): DataFrame = {
     val sigs = graft.SparkUtil.ensureParallelism(docs)
+      .filter(hasShingles(col(textCol), n))
       .select(col(groupCol).as("g"), shingleHashes(col(textCol), n).as("hs"))
-      .filter(size(col("hs")) > 0)
       .select(col("g"), posexplode(minhashSignature(col("hs"), k)))
       .groupBy(col("g"), col("pos")).agg(min(col("col")).as("v"))
     // NOT cached (r16 opt, measured and rejected — q170 1.13 -> 1.32 s):

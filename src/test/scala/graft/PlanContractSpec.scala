@@ -642,6 +642,36 @@ class PlanContractSpec extends SparkSpec {
     SparkUtil.unpersistTrackedCaches()
   }
 
+  test("the exact shingle family and q170 shingle each document once: one " +
+      "graft_shingle_hashes operator in the executed plan") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import graft.functions.catalyst.ShingleHashes
+    // the operators that run: through adaptive query stages and into the
+    // plans of cached relations, but not under a reused exchange, whose
+    // subtree runs once at its first use. An emptiness filter on
+    // size(hs) over the projected hs is pushed below the projection with
+    // the shingling substituted, and shows as a second operator.
+    def ran(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => ran(a.executedPlan)
+      case s: QueryStageExec => ran(s.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case m: InMemoryTableScanExec => m +: ran(m.relation.cachedPlan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(ran)
+    }
+    for (q <- Seq("q14_dedup_ngram_jaccard", "q49_jaccard_prefix_filter",
+        "q86_containment_pairs", "q50_cross_corpus_dedup", "q170_source_overlap")) {
+      val df = SparkEntry.queries(q)(spark, sf())
+      df.collect() // executes df's own plan, so its adaptive plan is final
+      val shingling = ran(df.queryExecution.executedPlan)
+        .filter(_.expressions.exists(_.exists(_.isInstanceOf[ShingleHashes])))
+      assert(shingling.size == 1, s"$q:\n${shingling.mkString("\n")}")
+      SparkUtil.unpersistTrackedCaches()
+    }
+  }
+
   test("LSH band and SimHash pigeonhole candidates: one equi-join on the whole " +
       "bucket key per candidate set, at the pinned Exchange count") {
     import org.apache.spark.sql.execution.joins.BaseJoinExec

@@ -92,6 +92,43 @@ class HashExpressionsSpec extends SparkSpec {
     }
   }
 
+  test("native shingle hashes == HOF twin and hasShingles == non-empty shingle " +
+      "set on edge texts") {
+    val spark0 = spark
+    import spark0.implicits._
+    // 10k tokens over 3 words: at most 27 distinct trigrams among ~10k
+    // shingles, so nearly every insert into the first-occurrence set
+    // probes an occupied slot, in a table sized for all 10k
+    val rnd = new scala.util.Random(5)
+    val long = Seq.fill(10000)(Seq("ka", "lo", "mu")(rnd.nextInt(3))).mkString(" ")
+    val edge = Seq("", "one", "one two", "  a b c", "a b c  ", "a  b c", "a b  c d  e",
+      "\ud83d\ude00 \ud835\udd18 \ud840\udc0b \ud83c\udf89", " ", "  ", long)
+    val d = (edge.map(Option(_)) :+ None).toDF("text")
+    for (n <- Seq(1, 2, 3)) {
+      val sh = TextFunctions.shingleHashes(col("text"), n)
+      val r = d.select(col("text"), sh.as("a"), HofTwins.shingleHashesHof(col("text"), n).as("b"),
+          TextFunctions.hasShingles(col("text"), n).as("has"), (size(sh) > 0).as("nonEmpty"))
+        .collect()
+      r.foreach { row =>
+        val ctx = s"n $n, text ${Option(row.getString(0)).map(_.take(20))}"
+        if (row.isNullAt(0)) {
+          // a null text has no shingle set; both drop the row in a filter
+          assert(row.isNullAt(1) && row.isNullAt(3), ctx)
+        } else {
+          assert(row.getSeq[Long](1) == row.getSeq[Long](2), ctx)
+          assert(row.getBoolean(3) == row.getBoolean(4), ctx)
+        }
+      }
+      // both answers occur, except at n = 1, where every text has a shingle
+      assert(r.exists(x => !x.isNullAt(3) && x.getBoolean(3)) &&
+        r.exists(x => !x.isNullAt(3) && !x.getBoolean(3)) || n == 1, s"n $n")
+    }
+    // the long document: all 27 distinct trigrams, each once
+    val hs = d.filter(col("text") === long)
+      .select(TextFunctions.shingleHashes(col("text"), 3)).head().getSeq[Long](0)
+    assert(hs.size == 27 && hs.distinct == hs)
+  }
+
   test("native multiset shingle hashes == HOF transform (duplicates, order)") {
     val d = docs.select(
       TextFunctions.shingleHashesAll(col("text"), 3).as("a"),
