@@ -5,8 +5,9 @@ Each dump is split at its `===== <query> =====` headers and every query's
 formatted physical plan is reduced to its operator tree plus each
 operator's detail lines, with what differs between two runs of one plan
 dropped: expression ids (`#123L`), `plan_id`s, operator numbers, runtime
-`Statistics(...)`, RDD ids, lambda class names, source line numbers and
-the checkout directory in the paths of artifacts under `target/`.
+`Statistics(...)`, RDD ids, lambda class names, lambda variable numbers
+(`lambda x_22`, from a JVM-wide counter), source line numbers and the
+checkout directory in the paths of artifacts under `target/`.
 The two reductions are diffed query by query; any difference (including a
 query present in one dump only) prints a unified diff and exits 1.
 
@@ -16,7 +17,9 @@ Usage: plan_shape.py [--tree] [--only PREFIX,...] DUMP_A DUMP_B
   --tree        compare the operator trees only, not the detail lines
   --only        compare only the queries whose names start with a prefix
   --self-check  check the script on DUMP: DUMP against itself must give no
-                difference, and DUMP with one Exchange removed must differ
+                difference, DUMP with one lambda variable renumbered must
+                give none either, and DUMP with one Exchange removed must
+                differ
 
 Make a dump with `runMain graft.tools.Explain` (one sf dir, one setting).
 """
@@ -27,6 +30,7 @@ import sys
 HEADER = re.compile(r"^===== (\S+) =====$")
 NORMALIZE = [
     (re.compile(r"#\d+L?"), ""),                      # expression ids
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),  # lambda variable numbers
     (re.compile(r"\s*\[plan_id=\d+\]"), ""),
     (re.compile(r",? ?Statistics\([^)]*\)"), ""),     # runtime sizes
     (re.compile(r"\$\$Lambda\$?[^@\s,]*@[0-9a-f]+"), "$$Lambda"),
@@ -100,8 +104,18 @@ def self_check(text):
         return 1
     cut = "\n".join(lines[:hit] + lines[hit + 1:])
     cut_differ, _ = compare(text, cut, out=Sink())
-    ok = not same and len(cut_differ) == 1
+    lam = re.search(r"\blambda \w+?_(\d+)\b", text)
+    if lam is None:
+        print("self-check: the dump holds no lambda variable to renumber")
+        return 1
+    # every use of the variable gets the new number, as in a later run
+    old = lam.group(0)
+    new = old[:-len(lam.group(1))] + str(int(lam.group(1)) + 1000)
+    renumbered = re.sub(re.escape(old) + r"\b", new, text)
+    lam_differ, _ = compare(text, renumbered, out=Sink())
+    ok = not same and not lam_differ and len(cut_differ) == 1
     print(f"self-check: {n} queries; against itself {len(same)} differ; "
+          f"with {old} renumbered {len(lam_differ)} differ; "
           f"with one Exchange removed {len(cut_differ)} differ ({', '.join(cut_differ)})"
           f" -> {'ok' if ok else 'FAILED'}")
     return 0 if ok else 1

@@ -160,6 +160,12 @@ object Bench {
     // failure instead of stalling the whole sweep.
     val warmup = envKnob("SPARK_GRAFT_BENCH_WARMUP", _.toIntOption, 0).getOrElse(1) > 0
     val timeoutSec = envKnob("SPARK_GRAFT_BENCH_TIMEOUT_SEC", _.toLongOption, 1L)
+    // Optional comma-separated query-name filter (substring match) for
+    // focused re-measures: SPARK_GRAFT_BENCH_ONLY=q124,q132
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val selected = only.fold(SparkEntry.queries)(pats =>
+      SparkEntry.select("SPARK_GRAFT_BENCH_ONLY", pats, _.contains(_)))
     // Optional scan-split knobs for layout probes (BASELINE.md round-10
     // coda): the scale-probe replicas are tiny files, so demonstrating
     // "a 10×-bigger warehouse ships more splits and absorbs scan growth
@@ -235,14 +241,6 @@ object Bench {
         java.nio.file.Paths.get("/proc/loadavg")).get(0)
         .split(" ")(0).toDouble
       catch { case NonFatal(_) => -1.0 }
-    // Optional comma-separated query-name filter (substring match) for
-    // focused re-measures: SPARK_GRAFT_BENCH_ONLY=q124,q132
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(pats) => SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-      case None       => SparkEntry.queries
-    }
     def sample(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         nRuns: Int = runs, doWarmup: Boolean = warmup): Seq[Double] = {

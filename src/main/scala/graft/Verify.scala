@@ -9,20 +9,21 @@ object Verify {
     // Optional 3rd arg: comma-separated query-name prefixes — dev-loop
     // filter so one new query can be re-verified without re-dumping all
     // 75+. The driver always calls with two args (full dump).
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, Seq.empty[String])
-      case Array(s, o, f) => (s, o, f.split(',').toSeq)
-      case _ =>
-        System.err.println("usage: graft.Verify <sfDir> <outDir> [queryPrefix,...]")
-        sys.exit(2)
+    // A prefix that matches no query is refused like a bad arity.
+    val (sfDir, outDir, selected) = try args match {
+      case Array(s, o)    => (s, o, SparkEntry.queries)
+      case Array(s, o, f) =>
+        (s, o, SparkEntry.select("queryPrefix", f.split(',').toSeq, _.startsWith(_)))
+      case _ => throw new IllegalArgumentException(s"expected 2 or 3 arguments, got ${args.length}")
+    } catch { case e: IllegalArgumentException =>
+      System.err.println(s"${e.getMessage}\nusage: graft.Verify <sfDir> <outDir> [queryPrefix,...]")
+      sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Session(cpus)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -48,10 +48,8 @@ object StageProfile {
       }
     }
 
-    val names =
-      if (args.nonEmpty) SparkEntry.queries.keys.toSeq.sorted
-        .filter(n => args.exists(n.contains))
-      else SparkEntry.queries.keys.toSeq.sorted
+    val names = (if (args.isEmpty) SparkEntry.queries
+      else SparkEntry.select("StageProfile", args.toSeq, _.contains(_))).keys.toSeq.sorted
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warmup (codegen + JIT + parquet footers), uninstrumented

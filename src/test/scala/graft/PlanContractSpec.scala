@@ -24,11 +24,20 @@ class PlanContractSpec extends SparkSpec {
   }
 
   test("registry parity: every query has an oracle and every oracle a query") {
-    val queries = SparkEntry.queries.keySet
-    val oracles = SparkEntry.oracleSql.keySet
-    assert(queries == oracles,
-      s"no oracle: ${(queries -- oracles).toSeq.sorted}; no query: ${(oracles -- queries).toSeq.sorted}")
-    assert(queries.size == 276)
+    // Both maps are views of one registry, so their key sets agree by
+    // construction; what can still go wrong is a name given twice.
+    val build: (org.apache.spark.sql.SparkSession, String) => DataFrame = (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException](SparkEntry.registry(
+      SparkEntry.Query("q1_a", build, "SELECT 1"), SparkEntry.Query("q2_b", build, "SELECT 2"),
+      SparkEntry.Query("q1_a", build, "SELECT 3")))
+    assert(e.getMessage.contains("q1_a") && !e.getMessage.contains("q2_b"), e.getMessage)
+    // an oracle is evaluated when asked for, not when the registry is built
+    var evaluated = 0
+    val lazyOracle = SparkEntry.registry(SparkEntry.Query("q3_c", build, { evaluated += 1; "SELECT 3" }))
+    assert(evaluated == 0 && lazyOracle.head.oracle == "SELECT 3" && evaluated == 1)
+    assert(SparkEntry.queries.size == 276)
+    val empty = SparkEntry.oracleSql.collect { case (n, sql) if sql.trim.isEmpty => n }
+    assert(SparkEntry.oracleSql.size == 276 && empty.isEmpty, empty)
   }
 
   test("lookup join plans as broadcast hash join, never sort-merge") {

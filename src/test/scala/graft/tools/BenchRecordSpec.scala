@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.Bench
+import graft.{Bench, SparkEntry}
 
 /** The bench's sustained-load self-correction (VERDICT r13 "what's
   * wrong" #1). The motivating fixture: r13's driver run sampled q49 at
@@ -174,5 +174,19 @@ class BenchRecordSpec extends AnyFunSuite {
         Bench.knob("SPARK_GRAFT_BENCH_WARM_RERUN_SEC", raw, _.toDoubleOption, 0.0))
       assert(e.getMessage.contains("SPARK_GRAFT_BENCH_WARM_RERUN_SEC") && e.getMessage.contains(raw))
     }
+  }
+
+  test("query-name filters throw, naming the source and every pattern that matches no query") {
+    assert(SparkEntry.select("SPARK_GRAFT_BENCH_ONLY", Seq("q14_", "q49_"), _.contains(_)).keySet ==
+      Set("q14_dedup_ngram_jaccard", "q49_jaccard_prefix_filter"))
+    assert(SparkEntry.select("queryPrefix", Seq("q1_"), _.startsWith(_)).keySet == Set("q1_lookup_basic"))
+    // "lookup_basic" is inside q1's name, not at its start
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select("queryPrefix", Seq("q1_", "lookup_basic", "q999"), _.startsWith(_)))
+    assert(e.getMessage.contains("queryPrefix") && e.getMessage.contains("lookup_basic") &&
+      e.getMessage.contains("q999") && !e.getMessage.contains("q1_"), e.getMessage)
+    val none = intercept[IllegalArgumentException](
+      SparkEntry.select("SPARK_GRAFT_BENCH_ONLY", Seq.empty, _.contains(_)))
+    assert(none.getMessage.contains("SPARK_GRAFT_BENCH_ONLY"), none.getMessage)
   }
 }
