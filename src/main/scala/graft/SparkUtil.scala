@@ -68,17 +68,13 @@ object SparkUtil {
    * callers own the same contract (otherwise caches accumulate until LRU
    * eviction).
    */
-  private val trackedCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  private[graft] val trackedCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   def trackCache(df: DataFrame): DataFrame = {
     df.cache()
     trackedCaches.add(df)
     df
   }
-
-  /** The caches registered by [[trackCache]] and not yet released. */
-  private[graft] def trackedCacheList: Seq[DataFrame] =
-    trackedCaches.toArray(Array.empty[DataFrame]).toSeq
 
   /** Unpersist every cache registered by [[trackCache]] since the last
     * call. Safe to call while other queries run — only graft-internal

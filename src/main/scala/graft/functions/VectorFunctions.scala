@@ -30,13 +30,7 @@ object VectorFunctions {
   def dot(a: Column, b: Column, dim: Int): Column =
     native(catalyst.DotProductF32(expr(a), expr(b)))
 
-  /** Unrolled-expression formulation of [[dot]] (kept for parity tests). */
-  def dotUnrolled(a: Column, b: Column, dim: Int): Column =
-    (1 to dim)
-      .map(i => element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
-
-  /** Squared L2 norm (same unrolled form). */
+  /** Squared L2 norm: [[dot]] of a vector with itself. */
   def norm2(a: Column, dim: Int): Column = dot(a, a, dim)
 
   /** Cosine similarity: dot(a,b) / (sqrt(|a|²) * sqrt(|b|²)). */
@@ -73,23 +67,8 @@ object VectorFunctions {
     native(catalyst.PqCodeF32(expr(v), codebook.flatten.toVector, base, dsub))
   }
 
-  /** Unrolled-expression formulation of [[pqCode]] (parity twin): min
-    * struct over per-code (left-assoc distance chain, code) pairs. */
-  def pqCodeUnrolled(v: Column, codebook: Seq[Seq[Double]], base: Int,
-      dsub: Int): Column =
-    least(codebook.zipWithIndex.map { case (cv, c) =>
-      struct(l2ToLitUnrolled(v, cv, base).as("d"), lit(c).as("code"))
-    }: _*).getField("code")
-
   /** Squared L2 distance between the slice of `v` starting at 0-based
     * `base` and a literal target vector. Native codegen'd expression. */
   def l2ToLit(v: Column, target: Seq[Double], base: Int): Column =
     native(catalyst.L2ToLitF32(expr(v), target.toVector, base))
-
-  /** Unrolled-expression formulation of [[l2ToLit]] (parity twin). */
-  def l2ToLitUnrolled(v: Column, target: Seq[Double], base: Int): Column =
-    target.zipWithIndex.map { case (t, i) =>
-      val d = element_at(v, base + i + 1).cast("double") - lit(t)
-      d * d
-    }.reduceLeft(_ + _)
 }

@@ -52,7 +52,7 @@ import graft.functions.TextFunctions
 object BpeTrain {
 
   /** Per-word symbol-pair rows of a wrapped-symbol vocab (cnt, s). */
-  private def pairCounts(vocab: DataFrame): DataFrame = {
+  private[graft] def pairCounts(vocab: DataFrame): DataFrame = {
     val arr = split(trim(col("s"), "|"), "\\|\\|")
     vocab.select(col("cnt"), arr.as("a"))
       .filter(size(col("a")) >= 2)
@@ -103,17 +103,6 @@ object BpeTrain {
     merges.toSeq.toDF("merge_round", "left_sym", "right_sym", "pair_count")
   }
 
-  /** Re-apply a trained merge table (rows of [[train]]'s shape, applied
-    * in merge_round order) to a corpus vocab — the "tokenize with the
-    * learned merges" side of the contract, used by the reproduction
-    * spec: after applying merges 1..i-1, pair (l_i, r_i) must be the
-    * most frequent pair and count exactly pair_count_i. */
-  def applyMerges(vocab: DataFrame, merges: Seq[(String, String)]): DataFrame =
-    merges.foldLeft(vocab) { case (v, (l, r)) =>
-      v.select(replace(col("s"), lit("|" + l + "||" + r + "|"),
-        lit("|" + l + r + "|")).as("s"), col("cnt"))
-    }
-
   /** Wrapped-symbol BPE length of one whitespace token after applying
     * `merges` in training order — a pure chain of literal replaces, so
     * the whole thing stays inside whole-stage codegen. */
@@ -135,11 +124,4 @@ object BpeTrain {
       merges: Seq[(String, String)]): org.apache.spark.sql.Column =
     aggregate(transform(TextFunctions.tokens(text), t => bpeSymbols(t, merges)),
       lit(0L), (acc, x) => acc + x)
-
-  /** Pair count of (l, r) in a wrapped-symbol vocab — spec helper. */
-  def countPair(vocab: DataFrame, l: String, r: String): Long =
-    pairCounts(vocab).filter(col("l") === l && col("r") === r)
-      .select(sum(col("c"))).collect().headOption
-      .flatMap(row => Option(row.get(0)).map(_.asInstanceOf[Long]))
-      .getOrElse(0L)
 }

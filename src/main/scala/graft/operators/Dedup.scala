@@ -151,7 +151,7 @@ object Dedup {
     * than `n` tokens (empty shingle set) are dropped — they cannot reach
     * any positive Jaccard threshold. The drop filters on the text
     * ([[hasShingles]]), so each document is shingled once. */
-  private def withShingleSets(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def withShingleSets(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
     graft.SparkUtil.ensureParallelism(docs)
       .filter(hasShingles(col(textCol), n))
@@ -163,7 +163,7 @@ object Dedup {
     * every side) removed — mirrors the SQL oracle's HAVING cap. The set
     * size rides along so downstream Jaccard math needs no join back to the
     * sets (sz is functionally dependent on id). */
-  private def invertedIndex(maxDocFreq: Int, sides: DataFrame*): Seq[DataFrame] = {
+  private[graft] def invertedIndex(maxDocFreq: Int, sides: DataFrame*): Seq[DataFrame] = {
     val invs = sides.map(_.select(col("id"), col("sz"), explode(col("hs")).as("h")))
     val rare = invs.map(_.select("h")).reduce(_ union _)
       .groupBy("h").agg(count(lit(1)).as("df"))
@@ -269,7 +269,7 @@ object Dedup {
    * postings of `keys(k)`, one per set that holds it (a set's hashes are
    * distinct). Every set counts, a null id's too, as in [[invertedIndex]].
    */
-  private final class DocFreq(val keys: Array[Long], val df: Array[Int]) {
+  private[graft] final class DocFreq(val keys: Array[Long], val df: Array[Int]) {
 
     /** [[dfConcentration]] over the keys under the cap, from the same
       * integers in the same double arithmetic: `N`, `Σdf` and `Σdf²` are
@@ -288,7 +288,7 @@ object Dedup {
     }
   }
 
-  private object DocFreq {
+  private[graft] object DocFreq {
     def apply(sets: Array[ShingleSet]): DocFreq = {
       val all = new Array[Long](sets.map(_.hs.length).sum)
       var at = 0
@@ -473,7 +473,7 @@ object Dedup {
    * The total is read in one job over the sets with no Exchange; cached
    * sets are filled first, and the collect reads the cache.
    */
-  private def collectedSets(sides: DataFrame*): Option[Seq[Array[ShingleSet]]] = {
+  private[graft] def collectedSets(sides: DataFrame*): Option[Seq[Array[ShingleSet]]] = {
     val spark = sides.head.sparkSession
     val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
     if (limit <= 0 || !sides.forall(s => integralIds(s.schema("id").dataType))) None
@@ -711,23 +711,6 @@ object Dedup {
       prefixPairsFromIndex(pairs.index.head, threshold)
     else jaccardScored(pairs.counted(Self, threshold), threshold)
   }
-
-  /** Spec probe: the concentration the adaptive dispatcher would
-    * measure for this corpus above the [[scanCount]] bound (same
-    * shingling + df cap, the Spark aggregate). */
-  private[graft] def dfConcentrationOf(docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-      maxDocFreq: Int = 10000): Double =
-    dfConcentration(invertedIndex(maxDocFreq,
-      withShingleSets(docs, idCol, textCol, n)).head)
-
-  /** Spec probe: the concentration the adaptive dispatcher reads on the
-    * driver below the [[scanCount]] bound, `None` above it. */
-  private[graft] def driverDfConcentrationOf(docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-      maxDocFreq: Int = 10000): Option[Double] =
-    collectedSets(withShingleSets(docs, idCol, textCol, n))
-      .map { case Seq(ys) => DocFreq(ys).concentration(maxDocFreq) }
 
   /**
    * Dedup provenance — the audit trail a governance review asks for:

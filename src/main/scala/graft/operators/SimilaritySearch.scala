@@ -757,9 +757,7 @@ object SimilaritySearch {
     // the retired uniform-expectation rule survives only as the
     // ladder's starting rung
     val p0 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(0L, want - 1))
-    val budget =
-      if (n > Long.MaxValue / maxCandidatesPerVec) Long.MaxValue
-      else n * maxCandidatesPerVec
+    val budget = candidateBudget(n, maxCandidatesPerVec)
     val hist = df.select(cellAssign(col(vecCol), cents, dim).as("cell"),
         lshBucket(col(vecCol), dim, SemanticDedupMaxSubPlanes).as("__b"))
       .groupBy(col("cell"), col("__b")).agg(count(lit(1)).as("m"))
@@ -941,22 +939,25 @@ object SimilaritySearch {
     }: _*)))
   }
 
-  /** Boolean-flag compatibility shape: the shipped faces probe at depth
-    * 1 (`multiprobe = true`) or 0. */
-  private def srpProbeKeys(bits: Column, nPlanes: Int, nTables: Int,
-      multiprobe: Boolean): Column =
-    srpProbeKeys(bits, nPlanes, nTables, if (multiprobe) 1 else 0)
-
   /** Approximate top-k: multi-table SRP-LSH candidates re-ranked by exact
     * cosine — the standard (Indyk-Motwani) table-union construction. Each
     * of `nTables` independent tables hashes with its own `nPlanes` sign
     * projections; a candidate is any vector sharing one of the query's
-    * probed buckets in AT LEAST ONE table. Without multiprobe, per-match
-    * recall is `1-(1-p^nPlanes)^nTables` (p = 1 - angle/pi) instead of
-    * the single-table `p^nPlanes`; with 1-bit multiprobe the per-table
-    * hit rate rises to `p^n + n·p^(n-1)(1-p)` (Hamming ≤ 1 on the
-    * sketch), which is what pushes recall@10 past 0.9 at practical
-    * table counts (spec-pinned floor).
+    * probed buckets in AT LEAST ONE table. Without multiprobe
+    * (`probeBits = 0`), per-match recall is `1-(1-p^nPlanes)^nTables`
+    * (p = 1 - angle/pi) instead of the single-table `p^nPlanes`; with the
+    * default 1-bit multiprobe the per-table hit rate rises to
+    * `p^n + n·p^(n-1)(1-p)` (Hamming ≤ 1 on the sketch), which is what
+    * pushes recall@10 past 0.9 at practical table counts (spec-pinned
+    * floor).
+    *
+    * `probeBits = 2` is the measured recall@10 frontier (r16 1000× probe:
+    * 0.375 -> 0.5375 at 1.6x per-query cost on a 2 M corpus): the
+    * (1 + p + C(p,2))x probe set is query-side only and the candidate
+    * bound stays ~targetBucket x probes per table, but the probe-key
+    * array falls out of whole-stage codegen past ~100 elements (janino
+    * method-size wall) — fine for the tiny broadcast query side, wrong
+    * as a default; opt in for recall-sensitive top-k retrieval.
     *
     * Spark shape: ONE native codegen'd projection computes all
     * `nTables*nPlanes` sign bits (a single 63-bit bucket), bit-sliced
@@ -975,19 +976,8 @@ object SimilaritySearch {
   def annTopKLsh(df: DataFrame, query: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, nPlanes: Int = 4, nTables: Int = 15,
-      multiprobe: Boolean = true, probeBits: Int = -1): DataFrame = {
+      probeBits: Int = 1): DataFrame = {
     require(nPlanes * nTables <= 63, "nPlanes * nTables must fit in 63 bits")
-    // probeBits -1 derives the depth from the legacy flag; 0/1/2
-    // override it. Depth 2 is the measured recall@10 frontier (r16
-    // 1000x probe: 0.375 -> 0.5375 at 1.6x per-query cost on a 2 M
-    // corpus): the (1 + p + C(p,2))x probe set is query-side only and
-    // the candidate bound stays ~targetBucket x probes per table, but
-    // the probe-key array falls out of whole-stage codegen past ~100
-    // elements (janino method-size wall) — fine for the tiny broadcast
-    // query side, wrong as a default; opt in for recall-sensitive
-    // top-k retrieval.
-    val depth =
-      if (probeBits >= 0) probeBits else if (multiprobe) 1 else 0
     val totalPlanes = nPlanes * nTables
     val bucketed = graft.SparkUtil.ensureParallelism(df)
       .select(col(idCol), col(vecCol),
@@ -998,7 +988,7 @@ object SimilaritySearch {
       .select(col(vecCol).as("__qvec"),
         lshBucket(col(vecCol), dim, totalPlanes).as("__qbits"))
       .select(col("__qvec"),
-        srpProbeKeys(col("__qbits"), nPlanes, nTables, depth).as("__qtb")))
+        srpProbeKeys(col("__qbits"), nPlanes, nTables, probeBits).as("__qtb")))
     bucketed.join(q, col("__tb") === col("__qtb"))
       .select(col(idCol), cosine(col(vecCol), col("__qvec"), dim).as("score"))
       .groupBy(col(idCol)).agg(max(col("score")).as("score"))
@@ -1021,40 +1011,18 @@ object SimilaritySearch {
   def annTopKLshAuto(df: DataFrame, query: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, targetBucket: Int = 64, maxTables: Int = 15,
-      multiprobe: Boolean = true, probeBits: Int = -1): DataFrame = {
+      probeBits: Int = 1): DataFrame = {
     val (nPlanes, nTables) = lshPlanesFor(graft.SparkUtil.sizingCount(df),
       targetBucket, maxTables = maxTables)
-    annTopKLsh(df, query, k, idCol, vecCol, dim, nPlanes, nTables,
-      multiprobe, probeBits)
+    annTopKLsh(df, query, k, idCol, vecCol, dim, nPlanes, nTables, probeBits)
   }
 
-  /**
-   * Approximate corpus-scale kNN join — [[knnJoin]]'s sibling for when
-   * the query side IS the corpus ("attach top-k neighbors to every
-   * document's embedding", the k-NN-graph step of semantic dedup and
-   * cluster-based curation): candidates are SRP-LSH bucket collisions
-   * (an equi-join on (table, bucket) keys, never a cross join), scored
-   * by exact cosine, cut to k per vector by a rank window
-   * (`WindowGroupLimit` — ≤ k rows per vector leave each map task).
-   *
-   * Like q30/q41, the approximation lives in the INDEX, not the
-   * execution: the candidate rule is public integer/float arithmetic
-   * the SQL oracle replays exactly, so the output is deterministic and
-   * exactly verifiable even though candidates (and hence each vector's
-   * top-k pool) are approximate. Vectors whose buckets collide with
-   * nothing yield no rows.
-   *
-   * Pair dedup happens AFTER scoring, by a hash aggregation over bare
-   * `(query_id, cand_id, score)` rows ([[annTopKLsh]]'s shape): the
-   * score is a pure function of the pair, so `max(score)` over its
-   * per-table occurrences is exact dedup, and the float vectors live
-   * only inside the bucket equi-join's codegen — they are never
-   * re-attached to the candidate set. The round-9 100× probe (2 M
-   * vectors) measured the alternative — `distinct()` on bare pairs
-   * followed by TWO vector join-backs — at ~500 M-row sort-merge
-   * joins spilling 40–90 GB; the agg shape shuffles only narrow pair
-   * rows and needs no broadcast size-guard at any scale.
-   */
+  /** Floor of the SRP index width — below it a corpus is at most
+    * `targetBucket · 2^LshMinPlanes` rows, too small for any width to be
+    * quadratic-dangerous, so the auto paths skip occupancy measurement
+    * there (and the sf0.01 oracle's fixed (4, 8) config binds). */
+  private[graft] val LshMinPlanes: Int = 4
+
   /**
    * Index-width sizing for the SRP-LSH family: the number of hash
    * planes must GROW with the corpus or bucket occupancy — and with it
@@ -1071,12 +1039,6 @@ object SimilaritySearch {
    * Pure function of the counts, so the sizing itself is unit-testable
    * without data.
    */
-  /** Floor of the SRP index width — below it a corpus is at most
-    * `targetBucket · 2^LshMinPlanes` rows, too small for any width to be
-    * quadratic-dangerous, so the auto paths skip occupancy measurement
-    * there (and the sf0.01 oracle's fixed (4, 8) config binds). */
-  private[graft] val LshMinPlanes: Int = 4
-
   private[graft] def lshPlanesFor(n: Long, targetBucket: Int = 64,
       minPlanes: Int = LshMinPlanes, maxTables: Int = 8): (Int, Int) = {
     require(targetBucket >= 1 && minPlanes >= 1 && maxTables >= 1)
@@ -1087,6 +1049,214 @@ object SimilaritySearch {
     val nTables = math.max(1, math.min(maxTables, 63 / nPlanes))
     (nPlanes, nTables)
   }
+
+  // ---- The SRP-LSH core. Every LSH join face (q41/q58/q103/q264-q266/
+  // q276 and the knn5lsh artifact) is an equi-join on (table, bucket)
+  // keys of the index below; the faces differ only in the id predicate,
+  // the tail after scoring, and how the width is chosen. ----
+
+  /** `n × perVec` candidates, saturated: the budget of every measured
+    * width decision. */
+  private def candidateBudget(n: Long, perVec: Int): Long =
+    if (n > Long.MaxValue / perVec) Long.MaxValue else n * perVec
+
+  /** The cached `(id, v, n2, __bits)` index of `df` — id, vector, squared
+    * norm and the `width`-plane SRP bit string — that every LSH join
+    * face keys. Norms ride along so each scored pair costs one dot
+    * product. SRP bits are prefix-stable (plane j's weights ignore the
+    * width — spec-pinned), so a base at width >= nPlanes·nTables slices
+    * into the same keys as one at exactly that width. */
+  private[graft] def srpBase(df: DataFrame, idCol: String, vecCol: String,
+      dim: Int, width: Int): DataFrame =
+    graft.SparkUtil.trackCache(graft.SparkUtil.ensureParallelism(df)
+      .select(col(idCol).as("id"), col(vecCol).as("v"),
+        norm2(col(vecCol), dim).as("n2"),
+        lshBucket(col(vecCol), dim, width).as("__bits")))
+
+  /** (id, v, n2, __tb) rows of an [[srpBase]]: its (table, bucket) keys,
+    * or at `probeBits` > 0 the query-side probe keys. */
+  private def srpKeyed(base: DataFrame, nPlanes: Int, nTables: Int,
+      probeBits: Int = 0): DataFrame =
+    base.select(col("id"), col("v"), col("n2"),
+      (if (probeBits > 0) srpProbeKeys(col("__bits"), nPlanes, nTables, probeBits)
+      else srpTableKeys(col("__bits"), nPlanes, nTables)).as("__tb"))
+
+  /** (tb, m) occupancy histogram of a `__bits` column at (nPlanes,
+    * nTables) — one narrow groupBy, no vectors shuffled. Every measured
+    * candidate volume is read off it: this is the OBSERVED occupancy,
+    * which on clustered real data can be orders of magnitude above
+    * [[lshPlanesFor]]'s isotropy expectation (the round-14 1000× probe
+    * measured 2.8×10¹⁰ candidate pairs at the (15, 4) width whose
+    * isotropic expectation was ~5×10⁸ — per-replica dominant directions
+    * make SRP bits correlate, so buckets concentrate). */
+  private[graft] def srpHist(bits: DataFrame, nPlanes: Int,
+      nTables: Int): DataFrame =
+    bits.select(srpTableKeys(col("__bits"), nPlanes, nTables).as("tb"))
+      .groupBy(col("tb")).agg(count(lit(1)).as("m"))
+
+  /** The scored bucket join: every (table, bucket) collision of keyed
+    * rows `x` and `y` that passes `idPred` (over x's and y's ids) as
+    * `(names._1, names._2, names._3)` = (x id, y id, exact cosine). Both
+    * vectors are join inputs, so the cosine is computed inside the
+    * equi-join's codegen and the vectors never travel with the pair. A
+    * pair appears once per table it collides in. */
+  private def scoredBucketJoin(x: DataFrame, y: DataFrame, dim: Int,
+      idPred: Option[(Column, Column) => Column],
+      names: (String, String, String)): DataFrame = {
+    val on = col("x.__tb") === col("y.__tb")
+    x.as("x").join(y.as("y"), idPred.fold(on)(p => on && p(col("x.id"), col("y.id"))))
+      .select(col("x.id").as(names._1), col("y.id").as(names._2),
+        cosineWithNorms(dot(col("x.v"), col("y.v"), dim),
+          col("x.n2"), col("y.n2")).as(names._3))
+  }
+
+  /** The near-dup pair faces: the scored collisions of keyed rows `x`
+    * and `y` at cosine >= `threshold` as (a, b, cosine), filtered BEFORE
+    * the multi-table dedup so the hash agg sees only survivors, then
+    * deduped on bare (id, id, cosine) rows. The score is a pure pair
+    * function, so `max` is exact dedup. */
+  private def nearDupPairs(x: DataFrame, y: DataFrame, dim: Int,
+      threshold: Double, idPred: Option[(Column, Column) => Column],
+      a: String, b: String): DataFrame =
+    scoredBucketJoin(x, y, dim, idPred, (a, b, "cosine"))
+      .filter(col("cosine") >= threshold)
+      .groupBy(col(a), col(b)).agg(max(col("cosine")).as("cosine"))
+
+  /** `keyed` with at most `c` members per (table, bucket), ranked by
+    * Knuth-mix32(id) — deterministic, oracle-replayable, no popularity
+    * bias; `Int.MaxValue` is no cap. The window sorts by the join key
+    * the sort-merge join sorts by anyway, so a cap adds no Exchange. */
+  private def capped(keyed: DataFrame, c: Int): DataFrame =
+    if (c == Int.MaxValue) keyed else {
+      val cw = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("__tb")).orderBy(
+          graft.functions.TextFunctions.mix32(
+            pmod(col("id"), lit(Sampling.IdFold))),
+          col("id"))
+      keyed.withColumn("__cr", row_number().over(cw))
+        .filter(col("__cr") <= c).drop("__cr")
+    }
+
+  /**
+   * The kNN faces' cut: scored collisions of query keys `q` against
+   * candidate keys `cands`, deduped per (query_id, cand_id) and ranked to
+   * the top k per query.
+   *
+   * PRE-CUT before the dedup agg (round-11, from the kNN probe's stage
+   * table at 200 K vectors): the agg's input is EVERY candidate row
+   * (~199 M) with nearly-unique (query_id, cand_id) keys, so map-side
+   * partials reduce nothing and the global hash agg dominated the
+   * operator at 71–96 s — candidate enumeration was 2.8 s and the
+   * cosine verify 6.8 s. A rank window cut at k·nTables FIRST is
+   * lossless for the final top-k: each distinct pair appears at most
+   * nTables times (a candidate occupies ONE bucket per table, so even a
+   * multiprobe query — whose per-table probe buckets are distinct —
+   * matches it at most once per table), so fewer than k·nTables
+   * candidate rows can precede the first copy of any true top-k pair.
+   * Spark plans the cut as WindowGroupLimit (each map task forwards ≤
+   * k·nTables rows per query) and both windows and the agg share the
+   * hash(query_id) Exchange, so the 199 M-row shuffle disappears.
+   */
+  private def scoreCut(q: DataFrame, cands: DataFrame, k: Int, dim: Int,
+      nTables: Int, excludeSelf: Boolean): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("cand_id").asc)
+    scoredBucketJoin(q, cands, dim,
+      if (excludeSelf) Some((a: Column, b: Column) => a =!= b) else None,
+      ("query_id", "cand_id", "score"))
+      .withColumn("__pr", row_number().over(w))
+      .filter(col("__pr") <= k * nTables).drop("__pr")
+      .groupBy(col("query_id"), col("cand_id"))
+      .agg(max(col("score")).as("score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
+
+  /** Both kNN faces: pass 1 cuts every query key of `qBase` against the
+    * `bucketCap`-capped candidate keys of `cBase` (the same frame for the
+    * self-join). `residual`, given, picks from (query keys, candidate
+    * keys) the `qBase` rows that pass 1 leaves empty; they are re-probed
+    * with 1-bit multiprobe against the tighter `residualBucketCap` and
+    * unioned in — (nPlanes+1)× on that slice only, the index untouched. */
+  private def knnPasses(qBase: DataFrame, cBase: DataFrame, k: Int,
+      dim: Int, nPlanes: Int, nTables: Int, bucketCap: Int,
+      residualBucketCap: Int, excludeSelf: Boolean,
+      residual: Option[(DataFrame, DataFrame) => DataFrame]): DataFrame = {
+    val qKeyed = srpKeyed(qBase, nPlanes, nTables)
+    val cKeyed = if (cBase eq qBase) qKeyed else srpKeyed(cBase, nPlanes, nTables)
+    def cut(q: DataFrame, cap: Int) =
+      scoreCut(q, capped(cKeyed, cap), k, dim, nTables, excludeSelf)
+    val first = cut(qKeyed, bucketCap)
+    residual.fold(first)(rows => first.union(cut(
+      srpKeyed(rows(qKeyed, cKeyed), nPlanes, nTables, probeBits = 1),
+      math.min(bucketCap, residualBucketCap))))
+  }
+
+  /** Width ladder for the occupancy-measured escalation: start at
+    * [[lshPlanesFor]]'s isotropy pick, widen 5 planes at a time up to
+    * the 30-plane clamp, re-fitting nTables into the 63-bit key budget
+    * at each step. Pure function of the starting width (unit-testable). */
+  private[graft] def lshWidthLadder(p0: Int, maxTables: Int): Seq[(Int, Int)] =
+    ((p0 to 30 by 5) :+ 30).distinct
+      .map(p => (p, math.max(1, math.min(maxTables, 63 / p))))
+
+  /** A measured ladder rung: its width, its candidate volume, and
+    * whether that volume fits the walk's budget. */
+  private final case class Rung(nPlanes: Int, nTables: Int, volume: Long,
+      fits: Boolean)
+
+  /** The one measured-width walk of the auto faces: the rungs of
+    * [[lshWidthLadder]] from `p0`, each measured by `volume` over one
+    * [[srpHist]] per side, until one fits `budget`; the 30-plane clamp
+    * rung when none does. With `cachedBits` (one `__bits` frame per side
+    * at >= 63 planes; the kNN graph's cached base) every rung reads it.
+    * Otherwise the first rung hashes `sides` narrowly at its own width,
+    * and escalation — the rare path — hashes each side ONCE at the 63-bit
+    * clamp, persisted for the walk, and replays every later rung against
+    * it: SRP bits are prefix-stable, so no rung re-scans a corpus. */
+  private def walkWidthLadder(p0: Int, maxTables: Int, budget: Long,
+      sides: Seq[DataFrame], vecCol: String, dim: Int,
+      cachedBits: Option[Seq[DataFrame]] = None)(
+      volume: Seq[DataFrame] => Long): Rung = {
+    def hashed(width: Int) =
+      sides.map(_.select(lshBucket(col(vecCol), dim, width).as("__bits")))
+    def measure(bits: Seq[DataFrame], p: Int, t: Int): Rung = {
+      val v = volume(bits.map(srpHist(_, p, t)))
+      Rung(p, t, v, v <= budget)
+    }
+    val ladder = lshWidthLadder(p0, maxTables)
+    val (p1, t1) = ladder.head
+    var last = measure(cachedBits.getOrElse(hashed(p1 * t1)), p1, t1)
+    if (last.fits) return last
+    val wide = cachedBits.getOrElse(hashed(63).map(
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    try {
+      ladder.tail.foreach { case (p, t) =>
+        last = measure(wide, p, t)
+        if (last.fits) return last
+      }
+    } finally if (cachedBits.isEmpty) wide.foreach(_.unpersist(false))
+    last
+  }
+
+  /** The refusal of the pair faces ([[cosineNearDupPairsLshAuto]],
+    * [[crossCorpusNearDupLshAuto]]) when even the clamp rung `r` is over
+    * budget: the collisions are genuinely dense there and a pair op's
+    * OUTPUT is ~the candidate count, so there is no sound fallback. `n`
+    * is the count the budget was sized by, `of` what it counts. */
+  private def widthRefusal(face: String, r: Rung, n: Long, of: String,
+      maxCandidatesPerVec: Int): graft.GuardRefusal =
+    new graft.GuardRefusal(
+      s"${face}Auto: measured candidate volume at the widest index " +
+      s"(nPlanes=${r.nPlanes}, nTables=${r.nTables}) is ${r.volume} pairs " +
+      s"(~${r.volume / math.max(1L, n)}/vector over $n $of) — above the " +
+      s"$maxCandidatesPerVec/vector budget even at the 30-plane clamp, so " +
+      s"the surviving buckets are genuinely dense and the pair OUTPUT " +
+      s"itself is ~this size. Either call $face(nPlanes=${r.nPlanes}, " +
+      s"nTables=${r.nTables}, allowFixedWidth=true) to knowingly produce " +
+      s"it, raise maxCandidatesPerVec, or switch to semanticDedupAuto " +
+      s"(cluster-representative dedup, linear output).")
 
   /** Width + cap decision behind the kNN-graph self-join face (q264),
     * separated so specs can assert the CHOSEN configuration — every
@@ -1117,25 +1287,23 @@ object SimilaritySearch {
     * pair face's 2048 is output-mass-driven, a different economy.
     *
     * Returns, besides the (nPlanes, nTables, cap) decision: the cached
-    * (id, v, n2, __bits) frame the measurement already built (None in
-    * the minPlanes regime — nothing was measured) for [[knnJoinLsh]] to
-    * reuse, and `residualPossible` — false when the accepted rung's
-    * histogram holds ZERO singleton (table, bucket) cells, which makes
-    * the empty-yield residual slice provably empty (a vector qualifies
-    * only if EVERY one of its cells is a singleton), so the auto face
-    * can skip building the multiprobe pass entirely (r17 opt: at bench
-    * scale the buckets are all multiply occupied and pass 2 was pure
-    * plan overhead; at the sparse-bucket scales the r15 recall fix
-    * targets, singletons exist and the pass still runs). */
+    * [[srpBase]] at the 63-bit clamp width that the measurement already
+    * built (None in the minPlanes regime — nothing was measured) for the
+    * index build to reuse, and `residualPossible` — false when the
+    * accepted rung's histogram holds ZERO singleton (table, bucket)
+    * cells, which makes the empty-yield residual slice provably empty (a
+    * vector qualifies only if EVERY one of its cells is a singleton), so
+    * the auto face can skip building the multiprobe pass entirely (r17
+    * opt: at bench scale the buckets are all multiply occupied and pass
+    * 2 was pure plan overhead; at the sparse-bucket scales the r15
+    * recall fix targets, singletons exist and the pass still runs). */
   private[graft] final case class KnnGraphPlan(nPlanes: Int, nTables: Int,
       cap: Int, base: Option[DataFrame], residualPossible: Boolean)
 
   private[graft] def knnGraphWidth(df: DataFrame, idCol: String,
       vecCol: String, dim: Int, targetBucket: Int, maxTables: Int,
       maxCandidatesPerVec: Int, n: Long): KnnGraphPlan = {
-    val budget =
-      if (n > Long.MaxValue / maxCandidatesPerVec) Long.MaxValue
-      else n * maxCandidatesPerVec
+    val budget = candidateBudget(n, maxCandidatesPerVec)
     // Stamp every decision on stderr (VERDICT r15 #3): the knn5lsh
     // artifact embeds this measured trade and its consumers
     // (q137/q221/q234) silently inherit it — the build log must say
@@ -1154,47 +1322,33 @@ object SimilaritySearch {
     val (p0, t0) = lshPlanesFor(n, targetBucket, maxTables = maxTables)
     if (p0 == LshMinPlanes)
       return decide(p0, t0, Int.MaxValue, -1L, None, residual = false)
-    def ordered(pairs: Long): Long =
-      if (pairs > Long.MaxValue / 2) Long.MaxValue else 2 * pairs
-    // ONE cached (id, v, n2, __bits) projection at the 63-bit clamp
-    // width serves every measurement rung, the cap histogram AND the
-    // index build itself (r17 opt, guide §1.2 #1): SRP bits are
-    // prefix-stable (plane j's weights ignore nPlanes — spec-pinned),
-    // so srpTableKeys over the 63-bit column slices identically to a
-    // narrower projection. Before this the head rung hashed the corpus
-    // once, [[knnJoinLsh]] hashed it AGAIN for its base cache, and the
-    // escalation path persisted a THIRD bits-only frame — at any scale
-    // where the measured regime fires that is two redundant corpus
-    // scans + projections.
-    val base = graft.SparkUtil.trackCache(
-      graft.SparkUtil.ensureParallelism(df)
-        .select(col(idCol).as("id"), col(vecCol).as("v"),
-          norm2(col(vecCol), dim).as("n2"),
-          lshBucket(col(vecCol), dim, 63).as("__bits")))
+    // ONE cached base at the 63-bit clamp width serves every rung, the
+    // cap histogram AND the index build itself (r17 opt, guide §1.2 #1).
+    val base = srpBase(df, idCol, vecCol, dim, 63)
     val bits = base.select(col("__bits"))
-    val ladder = lshWidthLadder(p0, maxTables)
-    var lastSingles = 0L
-    ladder.foreach { case (p, t) =>
-      val (pairs, singles) = measuredLshPairsAndSingletons(bits, p, t)
-      lastSingles = singles
-      val v = ordered(pairs)
-      if (v <= budget)
-        return decide(p, t, Int.MaxValue, v, Some(base), singles > 0L)
+    // the singleton count rides the volume's agg pass: it tells whether
+    // the empty-yield residual slice can exist at the decided rung
+    var singles = 0L
+    val r = walkWidthLadder(p0, maxTables, budget, Nil, vecCol, dim,
+        Some(Seq(bits))) { case Seq(h) =>
+      val row = h.agg(sum(col("m").cast(GuardDecimal) * (col("m") - lit(1L))),
+        sum(when(col("m") === 1L, 1L).otherwise(0L))).head()
+      singles = if (row.isNullAt(1)) 0L else row.getLong(1)
+      satLongOfDecimal(row.getDecimal(0))
     }
-    // capped fallback at the clamp rung = ladder.last, whose singleton
-    // count the walk just measured (lastSingles)
-    val (pw, tw) = ladder.last
+    if (r.fits)
+      return decide(r.nPlanes, r.nTables, Int.MaxValue, r.volume, Some(base),
+        singles > 0L)
+    // capped fallback at the clamp rung
     val caps = Seq(64, 16, 4, 1).map(_.toLong * targetBucket)
-    val sums = cappedVolumesFromHist(
-      bits.select(srpTableKeys(col("__bits"), pw, tw).as("tb"))
-        .groupBy(col("tb")).agg(count(lit(1)).as("m")), caps)
+    val sums = cappedVolumesFromHist(srpHist(bits, r.nPlanes, r.nTables), caps)
     val fit = caps.indices.find(i => sums(i) <= budget)
     // the targetBucket floor fits whenever tables×targetBucket <=
     // maxCandidatesPerVec (defaults: 2×64 << 1024); best-effort floor
     // otherwise — never refuse, the output is n×k-bounded
     val i = fit.getOrElse(caps.size - 1)
-    decide(pw, tw, math.min(caps(i), Int.MaxValue).toInt, sums(i),
-      Some(base), lastSingles > 0L)
+    decide(r.nPlanes, r.nTables, math.min(caps(i), Int.MaxValue).toInt,
+      sums(i), Some(base), singles > 0L)
   }
 
   /** Σ m·min(m, c) for each cap candidate `c` over an `m`-column
@@ -1246,13 +1400,13 @@ object SimilaritySearch {
     // oracle — is exact by construction. residualPossible (r17): when
     // the accepted rung's histogram holds no singleton cell, the
     // residual slice is provably empty and the pass-2 plan is skipped.
-    knnJoinLsh(df, k, idCol, vecCol, dim, plan.nPlanes, plan.nTables,
-      bucketCap = plan.cap, allowFixedWidth = true,
+    // The measured base is reused as the index (prefix-stable bits).
+    knnSelfJoin(df, plan.base, k, idCol, vecCol, dim, plan.nPlanes,
+      plan.nTables, plan.cap, allowFixedWidth = true,
       residualMultiprobe =
         plan.nPlanes > LshMinPlanes && plan.residualPossible,
       residualBucketCap = math.max(k,
-        maxCandidatesPerVec / (plan.nTables * (plan.nPlanes + 1))),
-      baseOverride = plan.base)
+        maxCandidatesPerVec / (plan.nTables * (plan.nPlanes + 1))))
   }
 
   /**
@@ -1275,8 +1429,7 @@ object SimilaritySearch {
    * members, the q264 rule).
    *
    * EAGER at call time unless `allowFixedWidth = true`: the corpus-side
-   * occupancy guard runs one count job when the plan is built
-   * (`nHint >= 0` supplies a caller-held corpus count).
+   * occupancy guard runs one count job when the plan is built.
    *
    * @param residualMultiprobe second pass for EMPTY-YIELD queries
    *   (VERDICT r15 #1): a query whose buckets collide with nothing in
@@ -1297,81 +1450,36 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       queryIdCol: String = "vec_id", dim: Int = 64, nPlanes: Int = 4,
       nTables: Int = 8, bucketCap: Int = Int.MaxValue,
-      allowFixedWidth: Boolean = false, nHint: Long = -1L,
+      allowFixedWidth: Boolean = false,
       residualMultiprobe: Boolean = false,
       residualBucketCap: Int = Int.MaxValue): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nPlanes * nTables <= 63, "nPlanes * nTables must fit in 63 bits")
     require(bucketCap >= 1, s"bucketCap=$bucketCap must be >= 1")
     require(residualBucketCap >= 1,
       s"residualBucketCap=$residualBucketCap must be >= 1")
     if (bucketCap == Int.MaxValue && !allowFixedWidth)
-      requireFixedWidthInBudgetDf(df, nHint,
-        nPlanes, "knnJoinLshBipartite", "knnJoinLshBipartiteAuto")
-    def bitsSide(d: DataFrame, id: String, idOut: String) =
-      graft.SparkUtil.trackCache(graft.SparkUtil.ensureParallelism(d)
-        .select(col(id).as(idOut), col(vecCol).as(s"__v_$idOut"),
-          norm2(col(vecCol), dim).as(s"__n2_$idOut"),
-          lshBucket(col(vecCol), dim, nPlanes * nTables).as("__bits")))
-    def keysOf(b: DataFrame, idOut: String, probe: Boolean) =
-      b.select(col(idOut), col(s"__v_$idOut"), col(s"__n2_$idOut"),
-        (if (probe)
-          srpProbeKeys(col("__bits"), nPlanes, nTables, multiprobe = true)
-        else srpTableKeys(col("__bits"), nPlanes, nTables)).as("__tb"))
-    val qBits = bitsSide(queries, queryIdCol, "query_id")
-    val corpus = keysOf(bitsSide(df, idCol, "cand_id"), "cand_id",
-      probe = false)
-    def capped(c: Int): DataFrame = if (c == Int.MaxValue) corpus else {
-      val cw = Window.partitionBy(col("__tb")).orderBy(
-        graft.functions.TextFunctions.mix32(
-          pmod(col("cand_id"), lit(Sampling.IdFold))),
-        col("cand_id"))
-      corpus.withColumn("__cr", row_number().over(cw))
-        .filter(col("__cr") <= c).drop("__cr")
-    }
-    val candSide = capped(bucketCap)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cand_id").asc)
-    // k·nTables pre-cut before the dedup agg — lossless for the final
-    // top-k (each distinct pair appears ≤ nTables times: a candidate
-    // occupies ONE bucket per table, so even a multiprobe query — whose
-    // per-table probe buckets are distinct — matches it at most once
-    // per table); see the [[knnJoinLsh]] round-11 probe note: the
-    // undeduped-candidate hash agg is otherwise the dominant stage at
-    // scale.
-    def scoreCut(q: DataFrame, cands: DataFrame) =
-      q.as("q").join(cands.as("c"), col("q.__tb") === col("c.__tb"))
-        .select(col("q.query_id"), col("c.cand_id"),
-          cosineWithNorms(dot(col("q.__v_query_id"), col("c.__v_cand_id"), dim),
-            col("q.__n2_query_id"), col("c.__n2_cand_id")).as("score"))
-        .withColumn("__pr", row_number().over(w))
-        .filter(col("__pr") <= k * nTables).drop("__pr")
-        .groupBy(col("query_id"), col("cand_id"))
-        .agg(max(col("score")).as("score"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-    val first = scoreCut(keysOf(qBits, "query_id", probe = false),
-      candSide)
-    if (!residualMultiprobe) first
-    else {
-      // The residual slice is ANALYTIC ([[knnJoinLsh]]'s occupancy
-      // rule, simpler here): with no self-exclusion, a query yields a
-      // pass-1 row iff ANY of its buckets holds a corpus member (the
-      // cap keeps >= 1 member of every non-empty bucket), so residual =
-      // queries whose every bucket misses the corpus bucket set — two
-      // narrow semi/anti joins, and the pass-1 graph is never cached
-      // or re-consumed. Pass 2 scores against the TIGHTER residual
-      // cap — the probe fan-out lands exactly on the dense buckets;
-      // see [[knnJoinLsh]]'s residualBucketCap note.
-      val collided = keysOf(qBits, "query_id", probe = false)
-        .select(col("query_id"), col("__tb"))
-        .join(corpus.select(col("__tb")).distinct(), Seq("__tb"),
-          "left_semi")
-        .select(col("query_id")).distinct()
-      val residual = qBits.join(collided, Seq("query_id"), "left_anti")
-      first.union(scoreCut(keysOf(residual, "query_id", probe = true),
-        capped(math.min(bucketCap, residualBucketCap))))
-    }
+      requireFixedWidthInBudget(df, nPlanes, "knnJoinLshBipartite",
+        "knnJoinLshBipartiteAuto")
+    val qBase = srpBase(queries, queryIdCol, vecCol, dim, nPlanes * nTables)
+    val cBase = srpBase(df, idCol, vecCol, dim, nPlanes * nTables)
+    // The residual slice is ANALYTIC ([[knnJoinLsh]]'s occupancy rule,
+    // simpler here): with no self-exclusion, a query yields a pass-1 row
+    // iff ANY of its buckets holds a corpus member (the cap keeps >= 1
+    // member of every non-empty bucket), so residual = queries whose
+    // every bucket misses the corpus bucket set — two narrow semi/anti
+    // joins, and the pass-1 graph is never cached or re-consumed. Pass 2
+    // scores against the TIGHTER residual cap — the probe fan-out lands
+    // exactly on the dense buckets; see [[knnJoinLsh]]'s
+    // residualBucketCap note.
+    knnPasses(qBase, cBase, k, dim, nPlanes, nTables, bucketCap,
+      residualBucketCap, excludeSelf = false,
+      residual = if (!residualMultiprobe) None else Some { (qKeyed, cKeyed) =>
+        val collided = qKeyed.select(col("id"), col("__tb"))
+          .join(cKeyed.select(col("__tb")).distinct(), Seq("__tb"),
+            "left_semi")
+          .select(col("id")).distinct()
+        qBase.join(collided, Seq("id"), "left_anti")
+      })
   }
 
   /** [[knnJoinLshBipartite]] with the index width sized from the
@@ -1390,22 +1498,21 @@ object SimilaritySearch {
       targetBucket: Int = 64, maxTables: Int = 8,
       maxCandidatesPerVec: Int = 2048): DataFrame = {
     val n = graft.SparkUtil.sizingCount(df)
-    // the q264 measured-width treatment applied to the two-sided shape:
     // width from the corpus count, budget from the QUERY side's measured
-    // collisions (|queries| × maxCandidatesPerVec); a corpus whose
-    // buckets stay dense at the clamp falls back to the capped trade —
-    // the bipartite output is bounded by |queries| × k at any width
-    val (nPlanes, nTables, cap) = lshCrossAutoWidthMeasured(queries, df,
-      vecCol, dim, targetBucket, maxTables, maxCandidatesPerVec, n,
-      graft.SparkUtil.sizingCount(queries)) match {
-      case Right((p, t))   => (p, t, Int.MaxValue)
-      // Left = MEASURED over budget even at the 30-plane clamp: the cap
-      // must bind UNCONDITIONALLY. lshBucketCapFor's 16×cap activation
-      // threshold is for count-only sizing and resolves to Int.MaxValue
-      // on a small-but-dense corpus — which would run the clamp width
-      // uncapped against a measured-over-budget verdict (ADVICE r15).
-      case Left((p, t, _)) => (p, t, 4 * targetBucket)
-    }
+    // collisions (|queries| × maxCandidatesPerVec); the query side is
+    // counted only past the minPlanes regime
+    val (p0, t0) = lshPlanesFor(n, targetBucket, maxTables = maxTables)
+    val (nPlanes, nTables, cap) = if (p0 == LshMinPlanes) (p0, t0, Int.MaxValue)
+      else {
+        val r = crossRung(queries, df, vecCol, dim, p0, maxTables,
+          candidateBudget(graft.SparkUtil.sizingCount(queries), maxCandidatesPerVec))
+        // over budget even at the 30-plane clamp: the cap must bind
+        // UNCONDITIONALLY. lshBucketCapFor's 16×cap activation threshold
+        // is for count-only sizing and resolves to Int.MaxValue on a
+        // small-but-dense corpus — which would run the clamp width
+        // uncapped against a measured-over-budget verdict (ADVICE r15).
+        (r.nPlanes, r.nTables, if (r.fits) Int.MaxValue else 4 * targetBucket)
+      }
     // Past the minPlanes regime the width is wide enough that some
     // queries' buckets can collide with nothing in every table — run
     // the 1-bit multiprobe second pass on exactly that residual slice
@@ -1462,21 +1569,15 @@ object SimilaritySearch {
     * silently get a quadratic outcome at scale. */
   val FixedWidthOccupancyGuardCutoff: Long = 4096L
 
-  /** Guard short-circuit wrapper: when the caller holds no count, a cheap
-    * parquet-footer upper bound within `cutoff << nPlanes` proves the
-    * occupancy budget cannot bind and skips the exact count job entirely
-    * (round-12; sound to PASS only — refusal always re-counts exactly). */
-  private def requireFixedWidthInBudgetDf(df: DataFrame, nHint: Long,
-      nPlanes: Int, op: String, autoOp: String): Unit = {
-    if (nHint < 0 && graft.SparkUtil.cheapCountAtMost(df,
-        FixedWidthOccupancyGuardCutoff << nPlanes)) return
-    requireFixedWidthInBudget(
-      if (nHint >= 0) nHint else graft.SparkUtil.sizingCount(df),
-      nPlanes, op, autoOp)
-  }
-
-  private def requireFixedWidthInBudget(n: Long, nPlanes: Int,
+  /** The fixed-width occupancy guard. A cheap parquet-footer upper bound
+    * within `cutoff << nPlanes` proves the occupancy budget cannot bind
+    * and skips the exact count job entirely (round-12; sound to PASS
+    * only — refusal always re-counts exactly). */
+  private def requireFixedWidthInBudget(df: DataFrame, nPlanes: Int,
       op: String, autoOp: String): Unit = {
+    if (graft.SparkUtil.cheapCountAtMost(df,
+        FixedWidthOccupancyGuardCutoff << nPlanes)) return
+    val n = graft.SparkUtil.sizingCount(df)
     val occ = n >> nPlanes
     graft.GuardRefusal.check(occ <= FixedWidthOccupancyGuardCutoff,
       s"$op with fixed nPlanes=$nPlanes puts ~$occ vectors in each LSH bucket at " +
@@ -1486,17 +1587,37 @@ object SimilaritySearch {
         "allowFixedWidth=true to knowingly keep the fixed-width reference semantics.")
   }
 
-  /** The exploded (id, table-key) rows of the q58/q264 index, for
-    * bucket-occupancy diagnostics (`SimilaritySearchSpec` reads them). */
-  private[graft] def lshKeyedForDebug(df: DataFrame, nPlanes: Int,
-      nTables: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding", dim: Int = 64): DataFrame =
-    graft.SparkUtil.ensureParallelism(df)
-      .select(col(idCol).as("id"),
-        lshBucket(col(vecCol), dim, nPlanes * nTables).as("__bits"))
-      .select(col("id"), srpTableKeys(col("__bits"), nPlanes, nTables).as("__tb"))
-
   /**
+   * Approximate corpus-scale kNN join — [[knnJoin]]'s sibling for when
+   * the query side IS the corpus ("attach top-k neighbors to every
+   * document's embedding", the k-NN-graph step of semantic dedup and
+   * cluster-based curation): candidates are SRP-LSH bucket collisions
+   * (an equi-join on (table, bucket) keys, never a cross join), scored
+   * by exact cosine, cut to k per vector by a rank window
+   * (`WindowGroupLimit` — ≤ k rows per vector leave each map task).
+   *
+   * Like q30/q41, the approximation lives in the INDEX, not the
+   * execution: the candidate rule is public integer/float arithmetic
+   * the SQL oracle replays exactly, so the output is deterministic and
+   * exactly verifiable even though candidates (and hence each vector's
+   * top-k pool) are approximate. Vectors whose buckets collide with
+   * nothing yield no rows.
+   *
+   * Pair dedup happens AFTER scoring, by a hash aggregation over bare
+   * `(query_id, cand_id, score)` rows ([[annTopKLsh]]'s shape): the
+   * score is a pure function of the pair, so `max(score)` over its
+   * per-table occurrences is exact dedup, and the float vectors live
+   * only inside the bucket equi-join's codegen — they are never
+   * re-attached to the candidate set. The round-9 100× probe (2 M
+   * vectors) measured the alternative — `distinct()` on bare pairs
+   * followed by TWO vector join-backs — at ~500 M-row sort-merge
+   * joins spilling 40–90 GB; the agg shape shuffles only narrow pair
+   * rows and needs no broadcast size-guard at any scale.
+   *
+   * EAGER at call time unless `allowFixedWidth = true` or a `bucketCap`
+   * is set: the occupancy guard then runs one parquet-metadata-cheap
+   * count job when the plan is BUILT.
+   *
    * @param bucketCap hard per-(table, bucket) cap on the CANDIDATE side
    *   of the self-join. SRP planes split uncorrelated mass, but a tight
    *   semantic cluster shares sign bits at ANY width, so its bucket
@@ -1506,18 +1627,9 @@ object SimilaritySearch {
    *   linear Σ size·min(size, cap) (199 M at the same point, cap 256)
    *   the same way the text index caps df. Asymmetric: every row still
    *   QUERIES; only its competitor pool in a degenerate bucket is
-   *   bounded, to `cap` pseudorandom members (rank by Knuth-mix32(id) —
-   *   deterministic, oracle-replayable, no popularity bias), which for
-   *   a top-k over a dense near-dup cluster is abundant. Default
-   *   `Int.MaxValue` = off (the q58 reference semantics); the capped
-   *   window rank sorts by the join key the sort-merge join sorts by
-   *   anyway, so enabling it adds no extra Exchange.
-   * @param nHint corpus row count, if the caller already holds one (the
-   *   Dedup convention): `nHint >= 0` feeds the occupancy guard without
-   *   the eager `df.count()`. NOTE the guard is otherwise EAGER — an
-   *   uncapped call without `allowFixedWidth` runs one
-   *   parquet-metadata-cheap count job when the plan is BUILT; pass
-   *   `allowFixedWidth = true` (or a `bucketCap`) to stay fully lazy.
+   *   bounded, to `cap` pseudorandom members, which for a top-k over a
+   *   dense near-dup cluster is abundant. Default `Int.MaxValue` = off
+   *   (the q58 reference semantics).
    * @param residualMultiprobe second pass for EMPTY-YIELD vectors
    *   (VERDICT r15 #1): at a measured (wide) index, a vector alone in
    *   its bucket in EVERY table gets no neighbors — a kNN-graph
@@ -1550,11 +1662,18 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, nPlanes: Int = 4, nTables: Int = 8,
       bucketCap: Int = Int.MaxValue,
-      allowFixedWidth: Boolean = false, nHint: Long = -1L,
+      allowFixedWidth: Boolean = false,
       residualMultiprobe: Boolean = false,
-      residualBucketCap: Int = Int.MaxValue,
-      baseOverride: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      residualBucketCap: Int = Int.MaxValue): DataFrame =
+    knnSelfJoin(df, None, k, idCol, vecCol, dim, nPlanes, nTables,
+      bucketCap, allowFixedWidth, residualMultiprobe, residualBucketCap)
+
+  /** [[knnJoinLsh]] over `base`, an [[srpBase]] of `df` at width >=
+    * nPlanes·nTables, when the caller already cached one. */
+  private def knnSelfJoin(df: DataFrame, base: Option[DataFrame], k: Int,
+      idCol: String, vecCol: String, dim: Int, nPlanes: Int, nTables: Int,
+      bucketCap: Int, allowFixedWidth: Boolean, residualMultiprobe: Boolean,
+      residualBucketCap: Int): DataFrame = {
     require(nPlanes * nTables <= 63, "nPlanes * nTables must fit in 63 bits")
     require(bucketCap >= 1, s"bucketCap=$bucketCap must be >= 1")
     require(residualBucketCap >= 1,
@@ -1568,98 +1687,31 @@ object SimilaritySearch {
     // UNCAPPED fixed-width call needs the occupancy guard (and its
     // parquet-metadata count).
     if (bucketCap == Int.MaxValue && !allowFixedWidth)
-      requireFixedWidthInBudgetDf(df, nHint,
-        nPlanes, "knnJoinLsh", "knnJoinLshAuto")
-    // baseOverride: a (id, v, n2, __bits) frame already cached by the
-    // auto face's width measurement, with __bits at width >=
-    // nPlanes*nTables — prefix-stable SRP bits make the derived keys
-    // identical, and reusing it saves a second corpus scan + projection
-    // (r17 opt; see [[knnGraphWidth]]).
-    val base = baseOverride.getOrElse(graft.SparkUtil.trackCache(
-      graft.SparkUtil.ensureParallelism(df)
-        .select(col(idCol).as("id"), col(vecCol).as("v"),
-          norm2(col(vecCol), dim).as("n2"),
-          lshBucket(col(vecCol), dim, nPlanes * nTables).as("__bits"))))
-    val keyed = base.select(col("id"), col("v"), col("n2"),
-      srpTableKeys(col("__bits"), nPlanes, nTables).as("__tb"))
-    def capped(c: Int): DataFrame = if (c == Int.MaxValue) keyed else {
-      val cw = Window.partitionBy(col("__tb")).orderBy(
-        graft.functions.TextFunctions.mix32(
-          pmod(col("id"), lit(Sampling.IdFold))),
-        col("id"))
-      keyed.withColumn("__cr", row_number().over(cw))
-        .filter(col("__cr") <= c).drop("__cr")
-    }
-    val candSide = capped(bucketCap)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cand_id").asc)
-    // Score inside the bucket equi-join (both vectors are join inputs —
-    // codegen'd, never shuffled with the pair), then dedup the
-    // per-table occurrences by hash agg on narrow rows.
-    //
-    // PRE-CUT before the dedup agg (round-11, from the kNN probe's stage
-    // table at 200 K vectors): the agg's input is EVERY candidate row
-    // (~199 M) with nearly-unique (query_id, cand_id) keys, so map-side
-    // partials reduce nothing and the global hash agg dominated the
-    // operator at 71–96 s — candidate enumeration was 2.8 s and the
-    // cosine verify 6.8 s. A rank window cut at k·nTables FIRST is
-    // lossless for the final top-k: each distinct pair appears at most
-    // nTables times, so fewer than k·nTables candidate rows can precede
-    // the first copy of any true top-k pair — at least one copy always
-    // survives the cut, and the agg then runs on ≤ k·nTables rows per
-    // query instead of every collision. Spark plans the cut as
-    // WindowGroupLimit (each map task forwards ≤ k·nTables rows per
-    // query) and both windows and the agg share the hash(query_id)
-    // Exchange (HashPartitioning on a subset of the agg keys satisfies
-    // its clustering), so the 199 M-row shuffle disappears outright.
-    def scoreCut(q: DataFrame, cands: DataFrame) =
-      q.as("x").join(cands.as("y"),
-          col("x.__tb") === col("y.__tb") && col("x.id") =!= col("y.id"))
-        .select(col("x.id").as("query_id"), col("y.id").as("cand_id"),
-          cosineWithNorms(dot(col("x.v"), col("y.v"), dim),
-            col("x.n2"), col("y.n2")).as("score"))
-        .withColumn("__pr", row_number().over(w))
-        .filter(col("__pr") <= k * nTables).drop("__pr")
-        .groupBy(col("query_id"), col("cand_id"))
-        .agg(max(col("score")).as("score"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-    val first = scoreCut(keyed, candSide)
-    if (!residualMultiprobe) first
-    else {
-      // The residual slice is ANALYTIC, not derived from the pass-1
-      // output: a vector yields no pass-1 rows iff every one of its
-      // (table, bucket) keys is a singleton (for bucketCap >= 2 —
-      // guarded above — a bucket of m >= 2 always keeps a non-self
-      // member through the cap window, and the self-excluding join then
-      // yields a row). Deriving it from the output instead (anti-join
-      // against the graph's query ids) forces the FULL n×k graph
-      // through a cache materialization barrier before the union can
-      // stream — measured at the r16 1000× corpus that alone took the
-      // build from 125 to 230 s; the occupancy rule costs two narrow
-      // shuffles of the (id, key) pairs and nothing is cached. The k·
-      // nTables pre-cut stays lossless under multiprobe (a candidate
-      // occupies one bucket per table; a query's per-table probe
-      // buckets are distinct, so each pair still appears ≤ nTables
-      // times). Pass 2 scores against the TIGHTER residual cap (see
-      // @param residualBucketCap) — probing fans each residual vector
-      // into (nPlanes+1) buckets per table, so the pass-1 cap would
-      // multiply out of the per-vector budget exactly where the probes
-      // hit dense clusters. Vectors whose probed buckets ALSO hold
-      // nothing remain isolated — honestly this time: Hamming ≤ 1 on
-      // every table's sketch found no non-self neighbor.
-      val bcount = keyed.groupBy(col("__tb")).agg(count(lit(1)).as("__m"))
-      val residualIds = keyed.select(col("id"), col("__tb"))
-        .join(bcount, "__tb")
-        .groupBy(col("id")).agg(max(col("__m")).as("__mx"))
-        .filter(col("__mx") === 1L).select(col("id"))
-      val resKeyed = base.join(residualIds, Seq("id"), "left_semi")
-        .select(col("id"), col("v"), col("n2"),
-          srpProbeKeys(col("__bits"), nPlanes, nTables,
-            multiprobe = true).as("__tb"))
-      first.union(scoreCut(resKeyed,
-        capped(math.min(bucketCap, residualBucketCap))))
-    }
+      requireFixedWidthInBudget(df, nPlanes, "knnJoinLsh", "knnJoinLshAuto")
+    val b = base.getOrElse(srpBase(df, idCol, vecCol, dim, nPlanes * nTables))
+    // The residual slice is ANALYTIC, not derived from the pass-1
+    // output: a vector yields no pass-1 rows iff every one of its
+    // (table, bucket) keys is a singleton (for bucketCap >= 2 — guarded
+    // above — a bucket of m >= 2 always keeps a non-self member through
+    // the cap window, and the self-excluding join then yields a row).
+    // Deriving it from the output instead (anti-join against the
+    // graph's query ids) forces the FULL n×k graph through a cache
+    // materialization barrier before the union can stream — measured at
+    // the r16 1000× corpus that alone took the build from 125 to 230 s;
+    // the occupancy rule costs two narrow shuffles of the (id, key)
+    // pairs and nothing is cached. Vectors whose probed buckets ALSO
+    // hold nothing remain isolated — honestly this time: Hamming ≤ 1 on
+    // every table's sketch found no non-self neighbor.
+    knnPasses(b, b, k, dim, nPlanes, nTables, bucketCap, residualBucketCap,
+      excludeSelf = true,
+      residual = if (!residualMultiprobe) None else Some { (keyed, _) =>
+        val bcount = keyed.groupBy(col("__tb")).agg(count(lit(1)).as("__m"))
+        val residualIds = keyed.select(col("id"), col("__tb"))
+          .join(bcount, "__tb")
+          .groupBy(col("id")).agg(max(col("__m")).as("__mx"))
+          .filter(col("__mx") === 1L).select(col("id"))
+        b.join(residualIds, Seq("id"), "left_semi")
+      })
   }
 
   /**
@@ -1678,157 +1730,40 @@ object SimilaritySearch {
    * angle θ is `1-(1-p^nPlanes)^nTables`, p = 1 - θ/π.
    *
    * EAGER at call time unless `allowFixedWidth = true`: the occupancy
-   * guard runs one count job when the plan is built; `nHint >= 0`
-   * supplies a caller-held count instead (the Dedup convention).
+   * guard runs one count job when the plan is built.
    */
   def cosineNearDupPairsLsh(df: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, nPlanes: Int = 4, nTables: Int = 8,
-      allowFixedWidth: Boolean = false, nHint: Long = -1L): DataFrame = {
+      allowFixedWidth: Boolean = false): DataFrame = {
     require(nPlanes * nTables <= 63, "nPlanes * nTables must fit in 63 bits")
     if (!allowFixedWidth)
-      requireFixedWidthInBudgetDf(df, nHint,
-        nPlanes, "cosineNearDupPairsLsh", "cosineNearDupPairsLshAuto")
-    val base = graft.SparkUtil.trackCache(
-      graft.SparkUtil.ensureParallelism(df)
-        .select(col(idCol).as("id"), col(vecCol).as("v"),
-          norm2(col(vecCol), dim).as("n2"),
-          lshBucket(col(vecCol), dim, nPlanes * nTables).as("__bits")))
-    // Score inside the bucket equi-join (both vectors are join inputs —
-    // codegen'd, never shuffled with the pair), filter the threshold
-    // BEFORE the multi-table dedup so the hash agg sees only survivors,
-    // then dedup per-table occurrences on bare (id, id, cosine) rows.
-    // The score is a pure pair function, so max() is exact dedup — the
-    // [[knnJoinLsh]] shape, minus the rank window.
-    val keyed = base.select(col("id"), col("v"), col("n2"),
-      srpTableKeys(col("__bits"), nPlanes, nTables).as("__tb"))
-    keyed.as("x").join(keyed.as("y"),
-        col("x.__tb") === col("y.__tb") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        cosineWithNorms(dot(col("x.v"), col("y.v"), dim),
-          col("x.n2"), col("y.n2")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("cosine")).as("cosine"))
-  }
-
-  /** Exact candidate-pair count of an SRP index at width (nPlanes,
-    * nTables) over `df`: Σ m·(m−1)/2 across (table, bucket) cells — one
-    * narrow groupBy/agg job, no vectors shuffled. This is the OBSERVED
-    * occupancy, which on clustered real data can be orders of magnitude
-    * above [[lshPlanesFor]]'s isotropy expectation (the round-14 1000×
-    * probe measured 2.8×10¹⁰ candidate pairs at the (15, 4) width whose
-    * isotropic expectation was ~5×10⁸ — per-replica dominant directions
-    * make SRP bits correlate, so buckets concentrate). */
-  private[graft] def measuredLshCandidatePairs(df: DataFrame,
-      vecCol: String, dim: Int, nPlanes: Int, nTables: Int): Long =
-    measuredLshCandidatePairsFromBits(
-      df.select(lshBucket(col(vecCol), dim, nPlanes * nTables).as("__bits")),
+      requireFixedWidthInBudget(df, nPlanes, "cosineNearDupPairsLsh",
+        "cosineNearDupPairsLshAuto")
+    val keyed = srpKeyed(srpBase(df, idCol, vecCol, dim, nPlanes * nTables),
       nPlanes, nTables)
-
-  /** [[measuredLshCandidatePairs]] over a precomputed `__bits` SRP
-    * column at width >= nPlanes*nTables: prefix-stable bits (plane j's
-    * weights ignore nPlanes — spec-pinned) make the slices identical,
-    * so the escalation ladder projects the corpus ONCE at the clamp
-    * width and replays every later rung against the cached
-    * single-column frame instead of re-scanning and re-hashing the
-    * vectors per rung (ADVICE r14). */
-  private def measuredLshCandidatePairsFromBits(bits: DataFrame,
-      nPlanes: Int, nTables: Int): Long =
-    pairVolumeFromHist(
-      bits.select(srpTableKeys(col("__bits"), nPlanes, nTables).as("tb"))
-        .groupBy(col("tb")).agg(count(lit(1)).as("m")))
-
-  /** (candidate pairs, singleton-cell count) of an SRP width over a
-    * `__bits` column, in the SAME single histogram agg pass as
-    * [[measuredLshCandidatePairsFromBits]] — the singleton count rides
-    * free and tells [[knnGraphWidth]] whether an empty-yield residual
-    * slice can exist at all (a vector qualifies only if every one of
-    * its (table, bucket) cells is a singleton). */
-  private def measuredLshPairsAndSingletons(bits: DataFrame,
-      nPlanes: Int, nTables: Int): (Long, Long) = {
-    val row = bits
-      .select(srpTableKeys(col("__bits"), nPlanes, nTables).as("tb"))
-      .groupBy(col("tb")).agg(count(lit(1)).as("m"))
-      .agg(sum(col("m").cast(GuardDecimal) * (col("m") - lit(1L))).as("p2"),
-        sum(when(col("m") === 1L, 1L).otherwise(0L)).as("s1"))
-      .head()
-    val pairs = row.getDecimal(0) match {
-      case null => 0L
-      case d    => satLongOfDecimal(
-        d.divideToIntegralValue(java.math.BigDecimal.valueOf(2L)))
-    }
-    (pairs, if (row.isNullAt(1)) 0L else row.getLong(1))
-  }
-
-  /** Width ladder for the occupancy-measured escalation: start at
-    * [[lshPlanesFor]]'s isotropy pick, widen 5 planes at a time up to
-    * the 30-plane clamp, re-fitting nTables into the 63-bit key budget
-    * at each step. Pure function of the starting width (unit-testable). */
-  private[graft] def lshWidthLadder(p0: Int, maxTables: Int): Seq[(Int, Int)] =
-    ((p0 to 30 by 5) :+ 30).distinct
-      .map(p => (p, math.max(1, math.min(maxTables, 63 / p))))
-
-  /** Measured-escalation core shared by the pair face and the kNN-graph
-    * faces: Right(width) when a ladder rung's measured candidate count
-    * fits `n × maxCandidatesPerVec`, Left((widestP, widestT, measured))
-    * when even the 30-plane clamp cannot. minPlanes regime returns
-    * Right immediately (measurement skipped — the corpus is too small
-    * for any width to be quadratic-dangerous). The first rung pays its
-    * own narrow hash pass; escalation — the rare path — projects the
-    * corpus ONCE at the 63-bit clamp width and replays later rungs
-    * against that cached single-column frame
-    * ([[measuredLshCandidatePairsFromBits]], ADVICE r14). */
-  private def lshAutoWidthMeasured(df: DataFrame, vecCol: String,
-      dim: Int, targetBucket: Int, maxTables: Int,
-      maxCandidatesPerVec: Int, n: Long)
-      : Either[(Int, Int, Long), (Int, Int)] = {
-    val (p0, t0) = lshPlanesFor(n, targetBucket, maxTables = maxTables)
-    if (p0 == LshMinPlanes) return Right((p0, t0))
-    val budget =
-      if (n > Long.MaxValue / maxCandidatesPerVec) Long.MaxValue
-      else n * maxCandidatesPerVec
-    val ladder = lshWidthLadder(p0, maxTables)
-    var last = measuredLshCandidatePairs(df, vecCol, dim,
-      ladder.head._1, ladder.head._2)
-    if (last <= budget) return Right(ladder.head)
-    val bits = df.select(lshBucket(col(vecCol), dim, 63).as("__bits"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      ladder.tail.foreach { case (p, t) =>
-        last = measuredLshCandidatePairsFromBits(bits, p, t)
-        if (last <= budget) return Right((p, t))
-      }
-    } finally bits.unpersist(false)
-    Left((ladder.last._1, ladder.last._2, last))
+    nearDupPairs(keyed, keyed, dim, threshold,
+      Some((a: Column, b: Column) => a < b), "id_a", "id_b")
   }
 
   /** The width decision behind [[cosineNearDupPairsLshAuto]], separated
     * so specs can assert the CHOSEN width (otherwise invisible inside
-    * the delegated plan). Runs the eager count + measurement jobs
-    * ([[lshAutoWidthMeasured]]) and REFUSES on a corpus whose measured
-    * volume exceeds the budget even at the clamp — a pair op's OUTPUT
-    * is ~the candidate count there, so there is no sound fallback. */
+    * the delegated plan): the ladder measures Σ m·(m−1)/2 per rung
+    * ([[pairVolumeFromHist]]) and REFUSES ([[widthRefusal]]) on a corpus
+    * whose measured volume exceeds the budget even at the clamp. */
   private[graft] def cosineNearDupPairsLshAutoWidth(df: DataFrame,
       vecCol: String, dim: Int, targetBucket: Int,
       maxTables: Int, maxCandidatesPerVec: Int): (Int, Int) = {
     val n = graft.SparkUtil.sizingCount(df)
-    val (pw, tw, last) = lshAutoWidthMeasured(df, vecCol, dim,
-      targetBucket, maxTables, maxCandidatesPerVec, n) match {
-      case Right(width) => return width
-      case Left(wall)   => wall
+    val (p0, t0) = lshPlanesFor(n, targetBucket, maxTables = maxTables)
+    if (p0 == LshMinPlanes) return (p0, t0)
+    val r = walkWidthLadder(p0, maxTables,
+        candidateBudget(n, maxCandidatesPerVec), Seq(df), vecCol, dim) {
+      case Seq(h) => pairVolumeFromHist(h)
     }
-    throw new graft.GuardRefusal(
-      s"cosineNearDupPairsLshAuto: measured candidate volume at the " +
-      s"widest index (nPlanes=$pw, nTables=$tw) is $last pairs " +
-      s"(~${last / math.max(1L, n)}/vector) over n=$n vectors — " +
-      s"above the $maxCandidatesPerVec/vector budget even at the " +
-      s"30-plane clamp, so the surviving buckets are genuinely dense " +
-      s"and the pair OUTPUT itself is ~this size. Either call " +
-      s"cosineNearDupPairsLsh(nPlanes=$pw, nTables=$tw, " +
-      s"allowFixedWidth=true) to knowingly produce it, raise " +
-      s"maxCandidatesPerVec, or switch to semanticDedupAuto " +
-      s"(cluster-representative dedup, linear output).")
+    if (!r.fits) throw widthRefusal("cosineNearDupPairsLsh", r, n,
+      "vectors", maxCandidatesPerVec)
+    (r.nPlanes, r.nTables)
   }
 
   /**
@@ -1841,8 +1776,8 @@ object SimilaritySearch {
    * (15, 4) width, 2.8×10¹⁰ candidate pairs in total, and the fixed
    * 900 s sweep watchdog killed the query. So past the minPlanes
    * regime the auto path (a) measures the exact candidate count at
-   * the count-sized width (one narrow agg job per probe —
-   * [[measuredLshCandidatePairs]]), (b) escalates through
+   * the count-sized width (one narrow agg job per probe over an
+   * [[srpHist]]), (b) escalates through
    * [[lshWidthLadder]] until the measured count fits
    * `n × maxCandidatesPerVec` (the same 1000× corpus lands at (30, 2):
    * 2.1×10⁹ candidates, ~1 000/vector), and (c) REFUSES with the
@@ -1889,64 +1824,22 @@ object SimilaritySearch {
    * collisions, not |corpus|².
    *
    * EAGER at call time unless `allowFixedWidth = true`: the store-side
-   * occupancy guard runs one count job when the plan is built;
-   * `nHint >= 0` supplies a caller-held STORE count instead (the Dedup
-   * convention).
+   * occupancy guard runs one count job when the plan is built.
    */
   def crossCorpusNearDupLsh(newEmb: DataFrame, oldEmb: DataFrame,
       threshold: Double, idCol: String = "vec_id",
       vecCol: String = "embedding", dim: Int = 64, nPlanes: Int = 4,
-      nTables: Int = 8, allowFixedWidth: Boolean = false,
-      nHint: Long = -1L): DataFrame = {
+      nTables: Int = 8, allowFixedWidth: Boolean = false): DataFrame = {
     require(nPlanes * nTables <= 63, "nPlanes * nTables must fit in 63 bits")
     // Occupancy of the STORE side decides per-ingest-row candidate
     // volume — the side that grows with every ingest.
     if (!allowFixedWidth)
-      requireFixedWidthInBudgetDf(oldEmb, nHint,
-        nPlanes, "crossCorpusNearDupLsh", "crossCorpusNearDupLshAuto")
-    def side(df: DataFrame) = graft.SparkUtil.trackCache(
-      graft.SparkUtil.ensureParallelism(df)
-        .select(col(idCol).as("id"), col(vecCol).as("v"),
-          norm2(col(vecCol), dim).as("n2"),
-          lshBucket(col(vecCol), dim, nPlanes * nTables).as("__bits")))
-    val nb = side(newEmb)
-    val ob = side(oldEmb)
-    def keys(b: DataFrame) = b.select(col("id"), col("v"), col("n2"),
-      srpTableKeys(col("__bits"), nPlanes, nTables).as("__tb"))
-    // Score in the store equi-join, filter before the multi-table dedup
-    // — the [[cosineNearDupPairsLsh]] shape across two corpora.
-    keys(nb).as("x").join(keys(ob).as("y"),
-        col("x.__tb") === col("y.__tb"))
-      .select(col("x.id").as("id_new"), col("y.id").as("id_old"),
-        cosineWithNorms(dot(col("x.v"), col("y.v"), dim),
-          col("x.n2"), col("y.n2")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .groupBy(col("id_new"), col("id_old"))
-      .agg(max(col("cosine")).as("cosine"))
-  }
-
-  /** Exact cross-corpus candidate count at width (nPlanes, nTables):
-    * Σ m_new·m_old across shared (table, bucket) cells — a join of two
-    * narrow per-side histograms, no vectors shuffled. The cross-corpus
-    * analog of [[measuredLshCandidatePairs]]. */
-  private[graft] def measuredLshCrossCandidates(newEmb: DataFrame,
-      oldEmb: DataFrame, vecCol: String, dim: Int,
-      nPlanes: Int, nTables: Int): Long = {
-    def bits(df: DataFrame) =
-      df.select(lshBucket(col(vecCol), dim, nPlanes * nTables).as("__bits"))
-    measuredLshCrossCandidatesFromBits(bits(newEmb), bits(oldEmb),
-      nPlanes, nTables)
-  }
-
-  /** [[measuredLshCrossCandidates]] over precomputed `__bits` columns —
-    * the prefix-stability replay of [[measuredLshCandidatePairsFromBits]]
-    * for the two-sided histogram join. */
-  private def measuredLshCrossCandidatesFromBits(newBits: DataFrame,
-      oldBits: DataFrame, nPlanes: Int, nTables: Int): Long = {
-    def hist(b: DataFrame) =
-      b.select(srpTableKeys(col("__bits"), nPlanes, nTables).as("tb"))
-        .groupBy(col("tb")).agg(count(lit(1)).as("m"))
-    crossVolumeFromHists(hist(newBits), hist(oldBits))
+      requireFixedWidthInBudget(oldEmb, nPlanes, "crossCorpusNearDupLsh",
+        "crossCorpusNearDupLshAuto")
+    val nb = srpBase(newEmb, idCol, vecCol, dim, nPlanes * nTables)
+    val ob = srpBase(oldEmb, idCol, vecCol, dim, nPlanes * nTables)
+    nearDupPairs(srpKeyed(nb, nPlanes, nTables), srpKeyed(ob, nPlanes, nTables),
+      dim, threshold, None, "id_new", "id_old")
   }
 
   /** Σ m_new·m_old over two joined (tb, m) histograms, summed in
@@ -1960,6 +1853,33 @@ object SimilaritySearch {
         case null => 0L
         case d    => satLongOfDecimal(d)
       }
+
+  /** The measured ladder of the two-corpus shape (q266's ingest face and
+    * the bipartite kNN face): Σ m_new·m_old across shared (table,
+    * bucket) cells, a join of two narrow per-side histograms. */
+  private def crossRung(newEmb: DataFrame, oldEmb: DataFrame,
+      vecCol: String, dim: Int, p0: Int, maxTables: Int, budget: Long): Rung =
+    walkWidthLadder(p0, maxTables, budget, Seq(newEmb, oldEmb), vecCol, dim) {
+      case Seq(nh, oh) => crossVolumeFromHists(nh, oh)
+    }
+
+  /** The width decision behind [[crossCorpusNearDupLshAuto]] (see
+    * [[cosineNearDupPairsLshAutoWidth]]): width from the STORE count,
+    * budget from the new side's, which the minPlanes regime never
+    * counts. */
+  private[graft] def crossCorpusNearDupLshAutoWidth(newEmb: DataFrame,
+      oldEmb: DataFrame, vecCol: String, dim: Int, targetBucket: Int,
+      maxTables: Int, maxCandidatesPerVec: Int): (Int, Int) = {
+    val (p0, t0) = lshPlanesFor(graft.SparkUtil.sizingCount(oldEmb),
+      targetBucket, maxTables = maxTables)
+    if (p0 == LshMinPlanes) return (p0, t0)
+    val nNew = graft.SparkUtil.sizingCount(newEmb)
+    val r = crossRung(newEmb, oldEmb, vecCol, dim, p0, maxTables,
+      candidateBudget(nNew, maxCandidatesPerVec))
+    if (!r.fits) throw widthRefusal("crossCorpusNearDupLsh", r, nNew,
+      "new vectors", maxCandidatesPerVec)
+    (r.nPlanes, r.nTables)
+  }
 
   /**
    * [[crossCorpusNearDupLsh]] with the index width sized from MEASURED
@@ -1978,67 +1898,6 @@ object SimilaritySearch {
    * contract; same minPlanes delegation at correctness scale
    * (spec-pinned).
    */
-  /** Measured-escalation core for the two-corpus shape (q266's
-    * ingest face and the bipartite kNN face): width sized from the
-    * STORE/corpus count `nOld`, budget from the new/query side. Same
-    * Right/Left contract as [[lshAutoWidthMeasured]]. */
-  private def lshCrossAutoWidthMeasured(newEmb: DataFrame,
-      oldEmb: DataFrame, vecCol: String, dim: Int, targetBucket: Int,
-      maxTables: Int, maxCandidatesPerVec: Int, nOld: Long,
-      nNewLazy: => Long): Either[(Int, Int, Long), (Int, Int)] = {
-    val (p0, t0) = lshPlanesFor(nOld, targetBucket, maxTables = maxTables)
-    // minPlanes regime: small store — the new-side count (by-name) is
-    // never evaluated, so the delegation owes no extra job
-    if (p0 == LshMinPlanes) return Right((p0, t0))
-    val nNew = nNewLazy
-    val budget =
-      if (nNew > Long.MaxValue / maxCandidatesPerVec) Long.MaxValue
-      else nNew * maxCandidatesPerVec
-    val ladder = lshWidthLadder(p0, maxTables)
-    var last = measuredLshCrossCandidates(newEmb, oldEmb, vecCol, dim,
-      ladder.head._1, ladder.head._2)
-    if (last <= budget) return Right(ladder.head)
-    // escalation replays rungs against one cached 63-plane projection
-    // per side (prefix-stable bits), instead of re-hashing both corpora
-    def bits63(df: DataFrame) =
-      df.select(lshBucket(col(vecCol), dim, 63).as("__bits"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nb = bits63(newEmb)
-    val ob = bits63(oldEmb)
-    try {
-      ladder.tail.foreach { case (p, t) =>
-        last = measuredLshCrossCandidatesFromBits(nb, ob, p, t)
-        if (last <= budget) return Right((p, t))
-      }
-    } finally { nb.unpersist(false); ob.unpersist(false) }
-    Left((ladder.last._1, ladder.last._2, last))
-  }
-
-  /** The width decision behind [[crossCorpusNearDupLshAuto]] (see
-    * [[cosineNearDupPairsLshAutoWidth]]). */
-  private[graft] def crossCorpusNearDupLshAutoWidth(newEmb: DataFrame,
-      oldEmb: DataFrame, vecCol: String, dim: Int, targetBucket: Int,
-      maxTables: Int, maxCandidatesPerVec: Int): (Int, Int) = {
-    val (pw, tw, last) = lshCrossAutoWidthMeasured(newEmb, oldEmb,
-      vecCol, dim, targetBucket, maxTables, maxCandidatesPerVec,
-      graft.SparkUtil.sizingCount(oldEmb),
-      graft.SparkUtil.sizingCount(newEmb)) match {
-      case Right(width) => return width
-      case Left(wall)   => wall
-    }
-    val nNew = newEmb.count() // refusal path only: sizes the message
-    throw new graft.GuardRefusal(
-      s"crossCorpusNearDupLshAuto: measured candidate volume at the " +
-      s"widest index (nPlanes=$pw, nTables=$tw) is $last " +
-      s"(~${last / math.max(1L, nNew)}/new vector, |new|=$nNew) — " +
-      s"above the $maxCandidatesPerVec/vector budget even at the " +
-      s"30-plane clamp: the store's hot buckets are genuinely dense. " +
-      s"Either call crossCorpusNearDupLsh(nPlanes=$pw, nTables=$tw, " +
-      s"allowFixedWidth=true) to knowingly proceed, raise " +
-      s"maxCandidatesPerVec, or dedup the batch against cluster " +
-      s"representatives (semanticDedupAuto) instead.")
-  }
-
   def crossCorpusNearDupLshAuto(newEmb: DataFrame, oldEmb: DataFrame,
       threshold: Double, idCol: String = "vec_id",
       vecCol: String = "embedding", dim: Int = 64,

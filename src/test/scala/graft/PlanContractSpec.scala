@@ -636,7 +636,8 @@ class PlanContractSpec extends SparkSpec {
       // of the sets; the postings table is built on the driver
       assert(countJobs { df = SparkEntry.queries(q)(spark, dir) } == 4, q)
       // the only tracked cache is the shingle sets: no inverted index
-      assert(SparkUtil.trackedCacheList.map(_.columns.toSeq) == Seq(Seq("id", "hs", "sz")), q)
+      assert(SparkUtil.trackedCaches.toArray(Array.empty[DataFrame]).toSeq
+        .map(_.columns.toSeq) == Seq(Seq("id", "hs", "sz")), q)
       // the pair rows come from the kernel over the cached shingle sets;
       // no shingle self-join, pair aggregate or explode in any part of it
       val sp = df.queryExecution.sparkPlan

@@ -149,7 +149,7 @@ class HashExpressionsSpec extends SparkSpec {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet").limit(100).cache()
     val pairs = emb.as("x").crossJoin(emb.as("y")).select(
       VectorFunctions.dot(col("x.embedding"), col("y.embedding"), 64).as("a"),
-      VectorFunctions.dotUnrolled(col("x.embedding"), col("y.embedding"), 64).as("b"))
+      HofTwins.dotUnrolled(col("x.embedding"), col("y.embedding"), 64).as("b"))
     assert(pairs.filter(col("a") =!= col("b")).count() == 0)
   }
 
@@ -200,11 +200,11 @@ class HashExpressionsSpec extends SparkSpec {
     val target = cents(3).map(_.toDouble).toSeq
     val d = emb.select(
       VectorFunctions.pqCode(col("embedding"), sub, 16, 8).as("a"),
-      VectorFunctions.pqCodeUnrolled(col("embedding"), sub, 16, 8).as("b"),
+      HofTwins.pqCodeUnrolled(col("embedding"), sub, 16, 8).as("b"),
       VectorFunctions.pqCode(col("embedding"), full, 0, 64).as("c"),
-      VectorFunctions.pqCodeUnrolled(col("embedding"), full, 0, 64).as("d"),
+      HofTwins.pqCodeUnrolled(col("embedding"), full, 0, 64).as("d"),
       VectorFunctions.l2ToLit(col("embedding"), target, 0).as("e"),
-      VectorFunctions.l2ToLitUnrolled(col("embedding"), target, 0).as("f"))
+      HofTwins.l2ToLitUnrolled(col("embedding"), target, 0).as("f"))
     assert(d.filter(col("a") =!= col("b") || col("c") =!= col("d") ||
       col("e") =!= col("f")).count() == 0)
   }

@@ -91,4 +91,26 @@ object HofTwins {
         .reduce(_ + _)
       when(proj > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
+
+  /** [[VectorFunctions.dot]]: the left-associated product chain. */
+  def dotUnrolled(a: Column, b: Column, dim: Int): Column =
+    (1 to dim)
+      .map(i => element_at(a, i).cast("double") * element_at(b, i).cast("double"))
+      .reduce(_ + _)
+
+  /** [[VectorFunctions.pqCode]]: min struct over per-code (left-assoc
+    * distance chain, code) pairs. */
+  def pqCodeUnrolled(v: Column, codebook: Seq[Seq[Double]], base: Int,
+      dsub: Int): Column =
+    least(codebook.zipWithIndex.map { case (cv, c) =>
+      struct(l2ToLitUnrolled(v, cv, base).as("d"), lit(c).as("code"))
+    }: _*).getField("code")
+
+  /** [[VectorFunctions.l2ToLit]]: the left-associated squared-difference
+    * chain. */
+  def l2ToLitUnrolled(v: Column, target: Seq[Double], base: Int): Column =
+    target.zipWithIndex.map { case (t, i) =>
+      val d = element_at(v, base + i + 1).cast("double") - lit(t)
+      d * d
+    }.reduceLeft(_ + _)
 }

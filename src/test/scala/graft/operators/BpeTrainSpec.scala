@@ -18,6 +18,25 @@ class BpeTrainSpec extends SparkSpec {
     df.collect().map(r =>
       (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
 
+  /** Re-apply a trained merge table (in merge_round order) to a corpus
+    * vocab — the "tokenize with the learned merges" side of the
+    * contract: after applying merges 1..i-1, pair (l_i, r_i) must be the
+    * most frequent pair and count exactly pair_count_i. */
+  private def applyMerges(vocab: org.apache.spark.sql.DataFrame,
+      merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame =
+    merges.foldLeft(vocab) { case (v, (l, r)) =>
+      v.select(replace(col("s"), lit("|" + l + "||" + r + "|"),
+        lit("|" + l + r + "|")).as("s"), col("cnt"))
+    }
+
+  /** Pair count of (l, r) in a wrapped-symbol vocab. */
+  private def countPair(vocab: org.apache.spark.sql.DataFrame, l: String,
+      r: String): Long =
+    BpeTrain.pairCounts(vocab).filter(col("l") === l && col("r") === r)
+      .select(sum(col("c"))).collect().headOption
+      .flatMap(row => Option(row.get(0)).map(_.asInstanceOf[Long]))
+      .getOrElse(0L)
+
   test("train learns the hand-computed merge table and stops when dry") {
     // vocab: aa×2, ab×1 → round 1 merges (a,a) count 2, round 2 (a,b)
     // count 1, round 3 has no pairs left → early stop at 2 rows
@@ -45,9 +64,9 @@ class BpeTrainSpec extends SparkSpec {
     assert(merges.size == 5)
     val vocab0 = BpeTrain.initialVocab(d).cache()
     merges.zipWithIndex.foreach { case ((round, l, r, c), i) =>
-      val replayed = BpeTrain.applyMerges(vocab0,
+      val replayed = applyMerges(vocab0,
         merges.take(i).map(m => (m._2, m._3)))
-      assert(BpeTrain.countPair(replayed, l, r) == c,
+      assert(countPair(replayed, l, r) == c,
         s"round $round pair ($l,$r) must replay to count $c")
     }
     vocab0.unpersist()

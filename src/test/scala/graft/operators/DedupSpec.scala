@@ -15,6 +15,21 @@ import graft.SparkSpec
 class DedupSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
+  /** The concentration the adaptive dispatcher would measure for this
+    * corpus above the ScanCount bound (same shingling + df cap, the
+    * Spark aggregate). */
+  private def dfConcentrationOf(docs: org.apache.spark.sql.DataFrame,
+      maxDocFreq: Int = 10000): Double =
+    Dedup.dfConcentration(Dedup.invertedIndex(maxDocFreq,
+      Dedup.withShingleSets(docs, "doc_id", "text", 3)).head)
+
+  /** The concentration the adaptive dispatcher reads on the driver below
+    * the ScanCount bound, `None` above it. */
+  private def driverDfConcentrationOf(docs: org.apache.spark.sql.DataFrame,
+      maxDocFreq: Int): Option[Double] =
+    Dedup.collectedSets(Dedup.withShingleSets(docs, "doc_id", "text", 3))
+      .map { case Seq(ys) => Dedup.DocFreq(ys).concentration(maxDocFreq) }
+
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("text", StringType, nullable = false)))
@@ -821,8 +836,8 @@ class DedupSpec extends SparkSpec {
     // candidate generation and the prefix path pays.
     val zipf = docs((0 until 40).map(i => (i.toLong,
       s"common shared header words here t${i}a t${i}b t${i}c t${i}d t${i}e")): _*)
-    val cUniform = Dedup.dfConcentrationOf(uniform)
-    val cZipf = Dedup.dfConcentrationOf(zipf)
+    val cUniform = dfConcentrationOf(uniform)
+    val cZipf = dfConcentrationOf(zipf)
     assert(cUniform < 4.0, s"uniform corpus concentration $cUniform should pick plain")
     assert(cZipf >= 4.0, s"zipfian corpus concentration $cZipf should pick prefix")
     // Path equality on BOTH corpora: the switch is a pure plan choice.
@@ -858,17 +873,17 @@ class DedupSpec extends SparkSpec {
       // the zipfian header shingles (df 40) stay at a cap of 40, go at 10
       for ((corpus, name) <- Seq(uniform -> "uniform", zipf -> "zipf"); cap <- Seq(10000, 40, 10)) {
         conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        val onDriver = Dedup.driverDfConcentrationOf(corpus, maxDocFreq = cap)
-        val aggregate = Dedup.dfConcentrationOf(corpus, maxDocFreq = cap)
+        val onDriver = driverDfConcentrationOf(corpus, maxDocFreq = cap)
+        val aggregate = dfConcentrationOf(corpus, maxDocFreq = cap)
         assert(onDriver.contains(aggregate), s"$name, cap $cap: $onDriver vs $aggregate")
         val want = if (aggregate >= 4.0) "prefix" else "plain"
         val driverBranch = branch(corpus, cap)
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert(Dedup.driverDfConcentrationOf(corpus, maxDocFreq = cap).isEmpty)
+        assert(driverDfConcentrationOf(corpus, maxDocFreq = cap).isEmpty)
         assert(Seq(driverBranch, branch(corpus, cap)) == Seq(want, want), s"$name, cap $cap")
       }
       // both branches are taken
-      assert(Dedup.dfConcentrationOf(uniform) < 4.0 && Dedup.dfConcentrationOf(zipf) >= 4.0)
+      assert(dfConcentrationOf(uniform) < 4.0 && dfConcentrationOf(zipf) >= 4.0)
     } finally saved match {
       case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
       case None => conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -877,7 +892,7 @@ class DedupSpec extends SparkSpec {
 
   test("adaptive Jaccard: the real documents fixture measures near-uniform (plain path)") {
     val real = spark.read.parquet(s"${sf()}/documents.parquet")
-    val c = Dedup.dfConcentrationOf(real)
+    val c = dfConcentrationOf(real)
     assert(c < 4.0, s"fixture corpus concentration $c — q49 should run the plain join")
     graft.SparkUtil.unpersistTrackedCaches()
   }

@@ -129,7 +129,7 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(recall >= 0.9, f"recall@10 dropped to $recall%.2f")
     // multiprobe only ADDS probed buckets: its candidate set must contain
     // every exact-bucket candidate (recall is monotone in the probe set)
-    val annNoProbe = ids(SimilaritySearch.annTopKLsh(e, q, k = 10, multiprobe = false))
+    val annNoProbe = ids(SimilaritySearch.annTopKLsh(e, q, k = 10, probeBits = 0))
     val recallNoProbe = exact.intersect(annNoProbe).size.toDouble / exact.size
     info(f"recall@10 without multiprobe = $recallNoProbe%.2f")
     assert(recall >= recallNoProbe)
@@ -139,22 +139,27 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(annAll == exact)
   }
 
-  test("annTopKLsh probeBits: depth -1 replays the multiprobe flag " +
-      "exactly; recall and the k-th score are monotone in probe depth " +
-      "(the r16 recall@10 frontier knob)") {
+  test("annTopKLsh probeBits: the default depth is 1 and depths outside " +
+      "0..2 are refused; recall and the k-th score are monotone in probe " +
+      "depth (the r16 recall@10 frontier knob)") {
     val e = emb.cache()
     val q = e.filter(col("vec_id") === 0)
     def top(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val d0 = top(SimilaritySearch.annTopKLsh(e, q, k = 10,
-      multiprobe = false))
+    val d0 = top(SimilaritySearch.annTopKLsh(e, q, k = 10, probeBits = 0))
     val d1 = top(SimilaritySearch.annTopKLsh(e, q, k = 10))
     val d2 = top(SimilaritySearch.annTopKLsh(e, q, k = 10, probeBits = 2))
-    // -1 (the default) derives the depth from the legacy flag
-    assert(top(SimilaritySearch.annTopKLsh(e, q, k = 10,
-      multiprobe = false, probeBits = 0)) == d0)
+    // the default is the shipped 1-bit multiprobe, on both faces (at
+    // this corpus size the auto face IS the explicit (4, 15) call)
     assert(top(SimilaritySearch.annTopKLsh(e, q, k = 10,
       probeBits = 1)) == d1)
+    assert(top(SimilaritySearch.annTopKLshAuto(e, q, k = 10,
+      probeBits = 0)) == d0)
+    Seq(-1, 3).foreach { bad =>
+      intercept[IllegalArgumentException] {
+        SimilaritySearch.annTopKLsh(e, q, k = 10, probeBits = bad)
+      }
+    }
     // a deeper probe only ADDS candidate buckets: the k-th (minimum)
     // surviving score can never drop, and recall vs exact top-10 can
     // never drop (an exact-top-10 member in the pool outranks every
@@ -1036,9 +1041,12 @@ class SimilaritySearchSpec extends SparkSpec {
         allowFixedWidth = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSeq
-    // reconstruct expected from the exploded (id, table-key) debug view
-    // __tb is the exploded (table, bucket) struct — compare by value string
-    val keys = SimilaritySearch.lshKeyedForDebug(e, nPlanes, nTables)
+    // reconstruct expected from the exploded (id, table-key) rows of the
+    // index; __tb is the (table, bucket) struct — compare by value string
+    val keys = SimilaritySearch.srpBase(e, "vec_id", "embedding", 64,
+        nPlanes * nTables)
+      .select(col("id"),
+        SimilaritySearch.srpTableKeys(col("__bits"), nPlanes, nTables).as("__tb"))
       .collect().groupBy(_.getLong(0))
       .map { case (id, rows) => id -> rows.map(_.get(1).toString).toSet }
     val vecs = e.collect().map(r => r.getLong(0) ->
@@ -1088,7 +1096,7 @@ class SimilaritySearchSpec extends SparkSpec {
       .foreach { case (p, t) => assert(p * t <= 63 && t >= 1) }
   }
 
-  test("measuredLshCandidatePairs: exact sum of C(m,2) over (table, " +
+  test("srpHist pair volume: exact sum of C(m,2) over (table, " +
       "bucket) cells — identical vectors always share a bucket") {
     val spark0 = spark
     import spark0.implicits._
@@ -1096,12 +1104,13 @@ class SimilaritySearchSpec extends SparkSpec {
     // so the measured count is exactly nTables * C(15,2)
     val dup = (1L to 15L).map(i => (i, Array(1.0f, 0.5f, -0.25f, 2.0f)))
       .toDF("vec_id", "embedding")
-    assert(SimilaritySearch.measuredLshCandidatePairs(
-      dup, "embedding", dim = 4, nPlanes = 4, nTables = 2) == 2L * 105)
+    def measured(df: org.apache.spark.sql.DataFrame) =
+      SimilaritySearch.pairVolumeFromHist(SimilaritySearch.srpHist(
+        df.select(graft.functions.VectorFunctions.lshBucket(
+          col("embedding"), 4, 8).as("__bits")), nPlanes = 4, nTables = 2))
+    assert(measured(dup) == 2L * 105)
     // empty corpus measures zero (null-sum path)
-    val none = dup.filter(col("vec_id") < 0)
-    assert(SimilaritySearch.measuredLshCandidatePairs(
-      none, "embedding", dim = 4, nPlanes = 4, nTables = 2) == 0L)
+    assert(measured(dup.filter(col("vec_id") < 0)) == 0L)
   }
 
   test("cosineNearDupPairsLshAuto escalates the width until MEASURED " +
@@ -1606,5 +1615,40 @@ class SimilaritySearchSpec extends SparkSpec {
       .select(col("k.t"), col("k.b")).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     assert(keysAt(0).sorted == plain.sorted)
+  }
+
+  test("measured width ladders keep their jobs on an escalating corpus: " +
+      "a narrow first rung, one persisted 63-bit frame per side only on " +
+      "escalation, every kNN-graph rung on its cached base") {
+    val spark0 = spark
+    import spark0.implicits._
+    // the escalation fixtures of the three ladder specs above: n = 2048
+    // starts every walk at (5, 8) and accepts (25, 2) on the fifth rung
+    val clustered = (1L to 2048L).map { i =>
+      val s = if (i <= 1024) 1.0f else -1.0f
+      (i, Array(s, s * 0.5f, s * -0.25f, s * 2.0f))
+    }.toDF("vec_id", "embedding")
+    val v = Array(1.0f, 0.5f, -0.25f, 2.0f)
+    val store = (1L to 2048L).map(i => (i, v)).toDF("vec_id", "embedding")
+    val batch = (10001L to 10004L).map(i => (i, v)).toDF("vec_id", "embedding")
+    val pairJobs = countJobs {
+      assert(SimilaritySearch.cosineNearDupPairsLshAutoWidth(clustered,
+        "embedding", dim = 4, targetBucket = 64, maxTables = 8,
+        maxCandidatesPerVec = 1024) == ((25, 2)))
+    }
+    val crossJobs = countJobs {
+      assert(SimilaritySearch.crossCorpusNearDupLshAutoWidth(batch, store,
+        "embedding", dim = 4, targetBucket = 64, maxTables = 8,
+        maxCandidatesPerVec = 4096) == ((25, 2)))
+    }
+    val graphJobs = countJobs {
+      val plan = SimilaritySearch.knnGraphWidth(clustered, "vec_id",
+        "embedding", dim = 4, targetBucket = 64, maxTables = 8,
+        maxCandidatesPerVec = 2048, n = 2048L)
+      assert((plan.nPlanes, plan.nTables, plan.cap) == ((25, 2, Int.MaxValue)))
+    }
+    info(s"jobs: pair $pairJobs, cross $crossJobs, graph $graphJobs")
+    assert((pairJobs, crossJobs, graphJobs) == ((16, 27, 17)))
+    graft.SparkUtil.unpersistTrackedCaches()
   }
 }
